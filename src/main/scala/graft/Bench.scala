@@ -24,12 +24,20 @@ object Bench {
     */
   private val MaxPerJvm = 50
 
+  /** Per-query min-of-passes seconds of the queries that never threw,
+    * and the exception class of every query that threw in any pass.
+    */
+  final case class Timed(times: Map[String, Double], failed: Map[String, String]) {
+    def ++(o: Timed): Timed = Timed(times ++ o.times, failed ++ o.failed)
+  }
+
   def main(args: Array[String]): Unit = sys.env.get("SPARK_GRAFT_SHARD") match {
     case Some(spec) => // child: "i/n" — time my slice, print marked JSON
       val Array(i, n) = spec.split("/").map(_.toInt)
       val mine = shardNames(i, n)
       val r = timeQueries(mine)
-      println("SHARD_RESULT " + queriesJson(r))
+      println("SHARD_RESULT {" + jsonField("queries", r.times) + "," +
+        jsonField("failed", r.failed) + "}")
     case None =>
       val names = allNames
       if (names.size <= MaxPerJvm) emit(timeQueries(names))
@@ -37,7 +45,7 @@ object Bench {
         val n = math.ceil(names.size / MaxPerJvm.toDouble).toInt
         System.err.println(
           s"[bench] ${names.size} queries > $MaxPerJvm/JVM: $n sequential shards")
-        emit((0 until n).flatMap(i => spawnShard(i, n)).toMap)
+        emit((0 until n).map(i => spawnShard(i, n)).reduce(_ ++ _))
       }
   }
 
@@ -88,7 +96,7 @@ object Bench {
   private[graft] def shardNames(i: Int, n: Int): Seq[String] =
     allNames.zipWithIndex.collect { case (q, j) if j % n == i => q }
 
-  private def timeQueries(names: Seq[String]): Map[String, Double] = {
+  private def timeQueries(names: Seq[String]): Timed = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -103,34 +111,37 @@ object Bench {
     // Two passes; report per-query MIN. Pass 1 doubles as JIT warmup
     // (codegen/HOF paths JIT per query: 2-5x on first execution); the min
     // also shields a single run from sporadic environment pauses.
-    def pass(): Map[String, Double] =
-      names.map { name =>
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }.toMap
-    val p1 = pass()
-    val p2 = pass()
-    val results = p1.map { case (name, t1) =>
-      val t2 = p2.getOrElse(name, -1.0)
-      // -1 marks failure; only take min over successful runs
-      val best = Seq(t1, t2).filter(_ >= 0) match {
-        case Nil => -1.0
-        case ts  => ts.min
-      }
-      name -> best
-    }
+    val results = timePasses(names, passes = 2)(name =>
+      SparkEntry.queries(name)(spark, sfDir).count())
     spark.stop()
     results
+  }
+
+  /** Run every name once per pass, in order. A query that throws in ANY
+    * pass is failed — reported by exception class, never timed, so it
+    * can't lower the total (a throw used to count as -1 s) — and the
+    * others report their min over the passes.
+    */
+  private[graft] def timePasses(names: Seq[String], passes: Int)(
+      run: String => Unit): Timed = {
+    val times = scala.collection.mutable.Map.empty[String, Double]
+    val failed = scala.collection.mutable.Map.empty[String, String]
+    for (_ <- 1 to passes; name <- names) {
+      val t0 = System.nanoTime()
+      try {
+        run(name)
+        val t = (System.nanoTime() - t0) / 1e9
+        times(name) = times.get(name).fold(t)(math.min(_, t))
+      } catch { case e: Throwable => failed.getOrElseUpdate(name, e.getClass.getName) }
+    }
+    Timed(times.toMap -- failed.keys, failed.toMap)
   }
 
   /** Re-launch this JVM (same classpath + options) on shard i of n and
     * parse the child's SHARD_RESULT line. Children run sequentially —
     * each gets the whole machine, like the single-JVM bench.
     */
-  private def spawnShard(i: Int, n: Int): Map[String, Double] = {
+  private def spawnShard(i: Int, n: Int): Timed = {
     import scala.jdk.CollectionConverters._
     import scala.sys.process._
     val javaBin = new java.io.File(
@@ -146,33 +157,58 @@ object Bench {
       err => System.err.println(err))
     val code = Process(cmd, None, "SPARK_GRAFT_SHARD" -> s"$i/$n").!(logger)
     if (code != 0) System.err.println(s"[bench] shard $i/$n exit $code")
-    line.map(l => parseQueries(l.stripPrefix("SHARD_RESULT ")))
-      .getOrElse {
-        System.err.println(s"[bench] shard $i/$n produced no result; " +
-          "falling back to in-process timing for its slice")
-        timeQueries(shardNames(i, n))
-      }
+    line.map { l =>
+      val json = l.stripPrefix("SHARD_RESULT ")
+      Timed(parseQueries(json), parseFailed(json))
+    }.getOrElse {
+      System.err.println(s"[bench] shard $i/$n produced no result; " +
+        "falling back to in-process timing for its slice")
+      timeQueries(shardNames(i, n))
+    }
   }
 
-  private def queriesJson(results: Map[String, Double]): String =
-    results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{\"queries\":{", ",", "}}")
+  /** `"name":{"k":v,...}`, string values quoted, numbers bare. */
+  private def jsonField(name: String, m: Map[String, Any]): String =
+    m.toSeq.sortBy(_._1).map {
+      case (k, v: String) => s""""$k":"$v""""
+      case (k, v)         => s""""$k":$v"""
+    }.mkString(s""""$name":{""", ",", "}")
 
-  private def emit(results: Map[String, Double]): Unit = {
+  private def emit(results: Timed): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val (full, compact) = report(results, baseline(), sfDir)
+    println(full.replaceFirst("\"metric\":\"total\"", "\"metric\":\"total_detail\""))
+    try {
+      val out = java.nio.file.Paths.get("target", "bench_result.json")
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.write(out,
+        full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } catch { case e: Throwable => System.err.println(s"[bench] result file write failed: $e") }
+    println(compact)
+  }
+
+  /** The full (detail, on-disk) and compact JSON lines of a run. `total`
+    * sums the timed queries only; failed queries are listed by exception
+    * class under `failed` on both lines and flagged as regressions (value
+    * "failed"), so a throwing query is loud instead of a 1 s discount.
+    */
+  private[graft] def report(results: Timed, base: Map[String, Double],
+      sfDir: String): (String, String) = {
+    val total = results.times.values.sum
     // Regression guard: compare per-query vs the committed round baseline
     // (bench_baseline.json, refreshed each round). Queries above the 0.5 s
     // noise floor that run >2x slower are flagged — on stderr AND as an
     // extra JSON field — so a round never ships a silent perf regression.
-    val regressions = flagRegressions(results, baseline())
+    val regressions: Map[String, Any] =
+      flagRegressions(results.times, base) ++ results.failed.map(_._1 -> "failed")
     if (regressions.nonEmpty)
       System.err.println("BENCH REGRESSIONS >2x vs bench_baseline.json: " +
-        regressions.map { case (k, r) => s"$k (${r}x)" }.mkString(", "))
-    val regJson = regressions.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+        regressions.toSeq.sortBy(_._1).map {
+          case (k, "failed") => s"$k (failed: ${results.failed(k)})"
+          case (k, r)        => s"$k (${r}x)"
+        }.mkString(", "))
+    val regJson = jsonField("regressions", regressions)
+    val failJson = jsonField("failed", results.failed)
     // The driver captures only the last ~2000 chars of stdout; a 130+
     // query line overflows that and round 3's total was unrecoverable
     // ("parsed": null). So: full JSON first (whole-stdout parsers), the
@@ -183,15 +219,10 @@ object Bench {
     // never sees two conflicting records; the on-disk copy keeps the
     // canonical "total" tag plus the per-query map.
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"regressions":$regJson,"sf":"$sfDir"}"""
-    println(full.replaceFirst("\"metric\":\"total\"", "\"metric\":\"total_detail\""))
-    try {
-      val out = java.nio.file.Paths.get("target", "bench_result.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.write(out,
-        full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable => System.err.println(s"[bench] result file write failed: $e") }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},"regressions":$regJson,"sf":"$sfDir","full":"target/bench_result.json"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec",${jsonField("queries", results.times)},$regJson,$failJson,"sf":"$sfDir"}"""
+    val compact =
+      s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.times.size},$regJson,$failJson,"sf":"$sfDir","full":"target/bench_result.json"}"""
+    (full, compact)
   }
 
   /** Queries that run >2x their baseline entry when the pin is above the
@@ -233,6 +264,10 @@ object Bench {
     """(?s)"queries"\s*:\s*\{(.*?)\}""".r
   private val Entry =
     """"([^"]+)"\s*:\s*(-?[0-9][0-9.eE+\-]*)""".r
+  private val FailedObj =
+    """(?s)"failed"\s*:\s*\{(.*?)\}""".r
+  private val FailedEntry =
+    """"([^"]+)"\s*:\s*"([^"]*)"""".r
 
   /** Pull the flat "queries":{...} object out of a JSON blob of
     * name -> seconds (no nesting inside the object). MUST tolerate
@@ -249,4 +284,9 @@ object Bench {
           catch { case _: NumberFormatException => None }
         }.toMap
     }
+
+  /** The "failed":{name: exceptionClass} object of a bench JSON line. */
+  private[graft] def parseFailed(txt: String): Map[String, String] =
+    FailedObj.findFirstMatchIn(txt).fold(Map.empty[String, String])(m =>
+      FailedEntry.findAllMatchIn(m.group(1)).map(e => e.group(1) -> e.group(2)).toMap)
 }

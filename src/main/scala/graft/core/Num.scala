@@ -1,7 +1,11 @@
 package graft.core
 
+import graft.functions.Cents
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{EvalMode, MakeDecimal, NumericEvalContext}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Cross-engine numeric parity helpers (SURVEY.md §7 "hard parts").
@@ -14,12 +18,30 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * reference scripts/process_climate_amazon_monthly.py:452-455), so the fix
   * is exact decimal accumulation:
   *
-  *   sum:  sum(CAST(x AS DECIMAL(18,2)))  — exact, order-independent,
-  *         identical in Spark and DuckDB; cast to DOUBLE afterwards.
-  *   avg:  exact decimal sum cast to double, divided by count — one IEEE
+  *   sum:  the value of sum(CAST(x AS DECIMAL(18,2))) — exact,
+  *         order-independent, identical in Spark and DuckDB; as DOUBLE.
+  *   avg:  exact decimal sum as double, divided by count — one IEEE
   *         division of identical operands on both engines.
   *   std:  exact decimal sums of x and x*x, variance computed in double from
   *         identical operands.
+  *
+  * How the sum is computed (Spark side): not as a decimal. Spark types
+  * sum(DECIMAL(18,2)) as DECIMAL(28,2), a BigDecimal-backed buffer, and
+  * Catalyst's `DecimalAggregates` rewrite to a long sum only fires for
+  * inputs of 8 digits or fewer. So `dsum` sums [[graft.functions.Cents]]
+  * — the unscaled long of the same cast, with a codegen'd fast path for
+  * on-grid doubles — in a 64-bit `Sum` that raises on overflow in every
+  * session (ANSI add, whatever `spark.sql.ansi.enabled` says): a group
+  * whose cents total leaves the long range (|sum| above about 9.2e16)
+  * fails the query instead of wrapping. The decimal form's own bound was
+  * DECIMAL(28,2)'s 1e26; no input here comes near either.
+  *
+  * The long total S becomes a double as S / 100.0 while |S| < 2^52, a
+  * single correctly rounded IEEE division of two exact operands —
+  * bit-identical to JDK `BigDecimal.doubleValue`, which the decimal
+  * form's cast to double runs and which takes that very branch. Above
+  * the bound it goes through the exact decimal conversion. NumSpec pins
+  * the whole chain bit-identical to the decimal form.
   *
   * Rounding: SUMS and std use half-even (Spark `bround` == DuckDB
   * `round_even` == pandas/numpy `round(2)`, matching the reference's
@@ -30,14 +52,23 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * rendering) and round_even (rounds the binary value) disagree — see the
   * avg2 scaladoc. New operators: sums → sum2, means → avg2/Text.hround.
   *
-  * At 100 TB these stay single-pass partial+final hash aggregations — decimal
-  * sums are Tungsten-native and codegen'd; there is no extra shuffle.
+  * At 100 TB these stay single-pass partial+final hash aggregations over
+  * one long buffer per sum — codegen'd, no extra shuffle.
   */
 object Num {
   private val Dec = DecimalType(18, 2)
+  // |S| < 2^52: S / 100.0 is exact-operand IEEE division (see above)
+  private val DivBound = (1L << 52) - 1
 
-  /** Exact decimal sum of a 2-dp double column, as DOUBLE. */
-  def dsum(c: Column): Column = sum(c.cast(Dec)).cast(DoubleType)
+  /** Exact decimal sum of a 2-dp column, as DOUBLE: a long sum of cents. */
+  def dsum(c: Column): Column = {
+    val cents = Bridge.column(
+      Sum(Cents(Bridge.expression(c)), NumericEvalContext(EvalMode.ANSI))
+        .toAggregateExpression())
+    when(cents.between(-DivBound, DivBound), cents / lit(100.0))
+      .otherwise(Bridge.column(MakeDecimal(Bridge.expression(cents), 19, 2))
+        .cast(DoubleType))
+  }
 
   /** sum rounded half-even to 2 dp (reference output precision). */
   def sum2(c: Column): Column = bround(dsum(c), 2)

@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table readers over the harness fixtures (TESTDATA.md).
   *
@@ -10,8 +12,60 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference scripts/process_climate_amazon_monthly.py:189-241) and
   * shapefile load (:137). Laziness/pushdown/pruning come from Catalyst; no
   * custom scan machinery is needed or wanted.
+  *
+  * Schemas are cached. `spark.read.parquet` without a schema runs one
+  * footer-reading job per call, at DataFrame construction — per table,
+  * per query, per pass. `table` instead reads with an explicit schema,
+  * inferred once per key and kept in a JVM-wide map:
+  *
+  *   key = path + the recursive file listing (path, length, mtime of every
+  *         file) + the session's values of the confs that change the
+  *         inferred schema (`SchemaConfs`, incl. the nanosAsLong flag set
+  *         below).
+  *
+  * The first read of a path infers exactly as before; a rewritten table
+  * (new file set, length or mtime) or a changed conf misses and infers
+  * again. One entry per path, so the map stays as small as the fixture
+  * set. The listing is a driver-side metadata call — no job, and no
+  * subprocess (see `schemaOf`).
   */
 object Tables {
+  /** Session confs that change what parquet schema inference returns. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Any], StructType)]()
+
+  /** The parquet schema of `path`, inferred on the first read of each
+    * listing + conf key (see the object doc).
+    */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // getFileStatus/listStatus, not listFiles: listFiles builds a
+    // LocatedFileStatus, whose permission lookup on the local file system
+    // forks an `ls` process per file when native Hadoop is absent.
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves)
+      else Seq(st)
+    val listing = leaves(fs.getFileStatus(p))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .toVector.sortBy(_._1)
+    val key = SchemaConfs.map(spark.conf.getOption) ++ listing
+    val hit = schemas.get(path)
+    if (hit != null && hit._1 == key) hit._2
+    else {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(path, (key, inferred))
+      inferred
+    }
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.parquet is TIMESTAMP(NANOS); without this flag Spark 4 fails
     // the read at analysis time ([PARQUET_TYPE_ILLEGAL]). Harmless for the
@@ -43,7 +97,8 @@ object Tables {
     // arrays it needs guarding from (docWords filters size >= 3).
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
   }
 
   /** events.parquet has shipped in two encodings across harness rounds:

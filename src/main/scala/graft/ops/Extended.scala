@@ -2500,47 +2500,6 @@ object Extended {
     */
   val AnnProbeTables = 2
 
-  /** Store-backed ANN search (r16 verdict task 1 — the consumer the
-    * persisted index was missing): every other ANN query re-codes the
-    * corpus per query, which at 100 TB is a full re-index per search;
-    * this one searches the parquet store `ann_state_append` maintains.
-    * The corpus is coded ONCE at its pinned `_layout` version and
-    * written band-partitioned with files RANGE-LAID and sorted by code
-    * (tight parquet row-group min/max on `code`), then the fixed ANN
-    * query batch is answered from the store alone:
-    *
-    *  - the query batch is coded at the STORE's layout (never its own
-    *    count's rung — [[embBandCodesPinned]], the layout-pinning seam);
-    *  - only [[AnnProbeTables]] of the store's nbands tables are probed
-    *    (band < 2): a LITERAL predicate on the partition column, so the
-    *    scan reads ONLY the probed band directories (PartitionFilters —
-    *    asserted in ScaleSpec, the parquet_partitioned_roundtrip
-    *    discipline);
-    *  - the probed CODE list ships to the scan as literals
-    *    (`code IN (...)` → parquet row-group skipping over the
-    *    code-sorted files), via a driver round-trip that is BOUNDED BY
-    *    THE QUERY BATCH (≤ |queries|·AnnProbeTables values — the X1
-    *    bounds-round-trip class: a search client fundamentally ships its
-    *    probe list to the index; it is never corpus-sized). Construction
-    *    is therefore eager (ScaleSpec `eager`).
-    *
-    * Exactness rides the broadcast equi-join back onto the query codes
-    * (the scan filters are a superset prune); scoring BROADCASTS the
-    * candidate side (ids, then ids + query vectors — bounded by the
-    * fixed query batch × probed-bucket occupancy, which the adaptive
-    * bit/band ladders keep ~8 per bucket; a corpus-sized side is never
-    * broadcast, and if a future skew-hot bucket breaks the occupancy
-    * bound the honest fallback is the old shuffle_hash) and streams the
-    * corpus vectors without shuffling them; the top-5 rank is
-    * `embed_ann_lsh`'s window. Search cost thus tracks PROBE size
-    * (probed partitions + matched row groups + candidate buckets), not
-    * corpus size — AnnStateProbe's search rows measure it (SCALING.md
-    * round 17). The ORACLE recomputes the whole search from base tables
-    * in DuckDB (no store), so the hash match proves store-backed ≡
-    * fresh search. Fixture non-vacuity simulated in DuckDB before
-    * wiring (round-4 rule): candidates 15/24/300, top-5 rows 14/20/100
-    * at sf0.001/0.01/0.1, every query answered at every SF.
-    */
   /** Write the search-optimized index store for `all` at its pinned
     * layout: band-partitioned directories, files range-laid and sorted
     * by code so the probe list's `code IN (...)` skips row groups.
@@ -2649,6 +2608,47 @@ object Extended {
       .orderBy(col("q_id"), col("rn"))
   }
 
+  /** Store-backed ANN search (r16 verdict task 1 — the consumer the
+    * persisted index was missing): every other ANN query re-codes the
+    * corpus per query, which at 100 TB is a full re-index per search;
+    * this one searches the parquet store `ann_state_append` maintains.
+    * The corpus is coded ONCE at its pinned `_layout` version and
+    * written band-partitioned with files RANGE-LAID and sorted by code
+    * (tight parquet row-group min/max on `code`), then the fixed ANN
+    * query batch is answered from the store alone:
+    *
+    *  - the query batch is coded at the STORE's layout (never its own
+    *    count's rung — [[embBandCodesPinned]], the layout-pinning seam);
+    *  - only [[AnnProbeTables]] of the store's nbands tables are probed
+    *    (band < 2): a LITERAL predicate on the partition column, so the
+    *    scan reads ONLY the probed band directories (PartitionFilters —
+    *    asserted in ScaleSpec, the parquet_partitioned_roundtrip
+    *    discipline);
+    *  - the probed CODE list ships to the scan as literals
+    *    (`code IN (...)` → parquet row-group skipping over the
+    *    code-sorted files), via a driver round-trip that is BOUNDED BY
+    *    THE QUERY BATCH (≤ |queries|·AnnProbeTables values — the X1
+    *    bounds-round-trip class: a search client fundamentally ships its
+    *    probe list to the index; it is never corpus-sized). Construction
+    *    is therefore eager (ScaleSpec `eager`).
+    *
+    * Exactness rides the broadcast equi-join back onto the query codes
+    * (the scan filters are a superset prune); scoring BROADCASTS the
+    * candidate side (ids, then ids + query vectors — bounded by the
+    * fixed query batch × probed-bucket occupancy, which the adaptive
+    * bit/band ladders keep ~8 per bucket; a corpus-sized side is never
+    * broadcast, and if a future skew-hot bucket breaks the occupancy
+    * bound the honest fallback is the old shuffle_hash) and streams the
+    * corpus vectors without shuffling them; the top-5 rank is
+    * `embed_ann_lsh`'s window. Search cost thus tracks PROBE size
+    * (probed partitions + matched row groups + candidate buckets), not
+    * corpus size — AnnStateProbe's search rows measure it (SCALING.md
+    * round 17). The ORACLE recomputes the whole search from base tables
+    * in DuckDB (no store), so the hash match proves store-backed ≡
+    * fresh search. Fixture non-vacuity simulated in DuckDB before
+    * wiring (round-4 rule): candidates 15/24/300, top-5 rows 14/20/100
+    * at sf0.001/0.01/0.1, every query answered at every SF.
+    */
   val annStoreSearch: QueryDef = QueryDef(
     "ann_store_search",
     (s, d) => {

@@ -732,42 +732,6 @@ object Learn {
     """),
     doc = "DPO-style (chosen, rejected) pairs from near-dup clusters by quality margin")
 
-  /** Bradley-Terry strength estimation by the MM fixed point (Hunter
-    * 2004, the algorithm behind chatbot-arena-style leaderboards and
-    * reward-model preference aggregation): wᵢ ← Wᵢ / Σⱼ nᵢⱼ/(wᵢ+wⱼ),
-    * sum-normalized each round. Matchups are derived deterministically
-    * from the trade fixtures — two suppliers sharing an order compete,
-    * the higher per-order revenue wins (exact integer-cents comparison
-    * — per-line floor(x·100+0.5) summed as BIGINT, matching the
-    * streaming twin's LineEv.cents; ties →
-    * lower suppkey) — so both engines replay an identical tournament.
-    *
-    * Numeric discipline (the pagerank/quality_logit rules): strengths
-    * are 1e-6-unit BIGINTs, every per-opponent term is one integer
-    * division (nᵢⱼ·10¹² DIV (wuᵢ+wuⱼ) — Spark DIV and DuckDB // both
-    * floor on non-negative operands), per-player sums are exact integer
-    * additions in any order, and the normalization is integer
-    * multiply-then-DIV against the exact Σraw. Zero floats anywhere, so
-    * the emitted strength6 is bit-identical by construction. Headroom:
-    * Wᵢ·10¹² needs Wᵢ ≤ 9·10⁶ wins/player; past that drop the term scale
-    * a decade (the Spearman-denominator honesty note).
-    *
-    * Regularization: one virtual win AND one virtual loss per player
-    * against a ghost of fixed strength 1.0 (the +1 smoothing that makes
-    * the MLE exist for perfect winners/losers; MAP with a weak uniform
-    * prior). 12 rounds: the offline fixed-point simulation (round-8
-    * numpy-first rule) measured max |Δwu| ≤ 1.5e-4 by round 12 at all
-    * three SFs with strengths spread 0.81-1.23 — converged and
-    * non-degenerate. Scale shape: matchup aggregation is ONE bounded
-    * pair-expand per order (≤ C(7,2) pairs — groupBy+expand, the round-2
-    * no-self-join rule), the per-round message passing is
-    * matchup-list-sized equi-joins against the |players| strength frame
-    * (the pagerank shape), and each round is localCheckpoint'd lazily
-    * (the bpe/ccOverEdges lineage discipline — without it round k
-    * re-analyzes rounds 1..k−1, and the strength frame is referenced
-    * twice per round, which would compound 2^K). Construction therefore
-    * runs checkpoint jobs (ScaleSpec `eager`, the bpe class).
-    */
   /** (ok, sk, rev) → aggregated canonical matchups (i < j, games n, i's
     * wins wi): per-order pair expand via array_sort(collect_list) —
     * bounded by the per-order supplier count, never a self-join (the
@@ -826,6 +790,42 @@ object Learn {
         col("n"), (col("n") - col("wi")).as("w")))
   }
 
+  /** Bradley-Terry strength estimation by the MM fixed point (Hunter
+    * 2004, the algorithm behind chatbot-arena-style leaderboards and
+    * reward-model preference aggregation): wᵢ ← Wᵢ / Σⱼ nᵢⱼ/(wᵢ+wⱼ),
+    * sum-normalized each round. Matchups are derived deterministically
+    * from the trade fixtures — two suppliers sharing an order compete,
+    * the higher per-order revenue wins (exact integer-cents comparison
+    * — per-line floor(x·100+0.5) summed as BIGINT, matching the
+    * streaming twin's LineEv.cents; ties →
+    * lower suppkey) — so both engines replay an identical tournament.
+    *
+    * Numeric discipline (the pagerank/quality_logit rules): strengths
+    * are 1e-6-unit BIGINTs, every per-opponent term is one integer
+    * division (nᵢⱼ·10¹² DIV (wuᵢ+wuⱼ) — Spark DIV and DuckDB // both
+    * floor on non-negative operands), per-player sums are exact integer
+    * additions in any order, and the normalization is integer
+    * multiply-then-DIV against the exact Σraw. Zero floats anywhere, so
+    * the emitted strength6 is bit-identical by construction. Headroom:
+    * Wᵢ·10¹² needs Wᵢ ≤ 9·10⁶ wins/player; past that drop the term scale
+    * a decade (the Spearman-denominator honesty note).
+    *
+    * Regularization: one virtual win AND one virtual loss per player
+    * against a ghost of fixed strength 1.0 (the +1 smoothing that makes
+    * the MLE exist for perfect winners/losers; MAP with a weak uniform
+    * prior). 12 rounds: the offline fixed-point simulation (round-8
+    * numpy-first rule) measured max |Δwu| ≤ 1.5e-4 by round 12 at all
+    * three SFs with strengths spread 0.81-1.23 — converged and
+    * non-degenerate. Scale shape: matchup aggregation is ONE bounded
+    * pair-expand per order (≤ C(7,2) pairs — groupBy+expand, the round-2
+    * no-self-join rule), the per-round message passing is
+    * matchup-list-sized equi-joins against the |players| strength frame
+    * (the pagerank shape), and each round is localCheckpoint'd lazily
+    * (the bpe/ccOverEdges lineage discipline — without it round k
+    * re-analyzes rounds 1..k−1, and the strength frame is referenced
+    * twice per round, which would compound 2^K). Construction therefore
+    * runs checkpoint jobs (ScaleSpec `eager`, the bpe class).
+    */
   lazy val bradleyTerry: QueryDef = {
     val Iters = 12
     val Term = "1000000000000" // 1e12 integer-division scale

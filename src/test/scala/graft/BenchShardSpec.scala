@@ -72,4 +72,30 @@ class BenchShardSpec extends AnyFunSuite {
     assert(Bench.flagRegressions(Map("big" -> 4.2), b).contains("big"))
     assert(Bench.flagRegressions(Map("big" -> 3.9), b).isEmpty)
   }
+
+  test("a planted throwing query is failed by class, flagged, and kept out of the total") {
+    val timed = Bench.timePasses(Seq("ok", "boom", "flaky"), passes = 2) {
+      var flakyRuns = 0
+      name => name match {
+        case "boom" => throw new IllegalStateException("planted")
+        case "flaky" =>
+          flakyRuns += 1
+          if (flakyRuns == 2) throw new ArithmeticException("planted, pass 2 only")
+        case _ => ()
+      }
+    }
+    assert(timed.times.keySet === Set("ok"))
+    assert(timed.failed === Map(
+      "boom" -> "java.lang.IllegalStateException",
+      "flaky" -> "java.lang.ArithmeticException"))
+    val ok = timed.times("ok")
+    val (full, compact) = Bench.report(timed, Map("ok" -> 10.0, "boom" -> 1.0), "sfX")
+    for (line <- Seq(full, compact)) {
+      assert(Bench.parseFailed(line) === timed.failed, line)
+      assert(line.contains(s""""value":$ok,"""), s"total is not the timed sum: $line")
+      assert(line.contains(""""regressions":{"boom":"failed","flaky":"failed"}"""), line)
+    }
+    assert(Bench.parseQueries(full) === Map("ok" -> ok))
+    assert(Bench.parseFailed("""{"queries":{"a":1.0},"failed":{}}""").isEmpty)
+  }
 }

@@ -1,12 +1,145 @@
 package graft
 
 import graft.core.Num
+import graft.functions.Cents
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Numeric-parity helpers: snap-to-grid, exact decimal sums, rounding. */
 class NumSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The decimal form `Num` replaced, kept as the reference the cents
+    * path must reproduce bit for bit.
+    */
+  private val Dec = DecimalType(18, 2)
+  private def refDsum(c: Column): Column = sum(c.cast(Dec)).cast(DoubleType)
+  private def refSum2(c: Column): Column = bround(refDsum(c), 2)
+  private def refAvg2(c: Column): Column =
+    floor(refDsum(c) * lit(100.0) / count(c) + lit(0.5)) / lit(100.0)
+
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** `body(ansi)` with ANSI on and off, each under whole-stage codegen
+    * and under the interpreted evaluator of every operator.
+    */
+  private def inEveryMode(body: String => Unit): Unit =
+    for (ansi <- Seq("true", "false"); (wholeStage, factory) <-
+        Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN"))
+      withConfs("spark.sql.ansi.enabled" -> ansi,
+        "spark.sql.codegen.wholeStage" -> wholeStage,
+        "spark.sql.codegen.factoryMode" -> factory)(body(ansi))
+
+  /** Half-cent midpoints of both signs: the cast's HALF_UP ties. */
+  private val midpoints = Seq(1.005, -1.005, 0.125, -0.125, 2.675, -2.675,
+    0.005, -0.005, 1234567.895, -1234567.895)
+  /** Around the fast path's |x·100| < 1e13 bound. */
+  private val edge = Seq(1e11, -1e11, 99999999999.99, -99999999999.99,
+    100000000000.01, 99999999999.995, 1e11 - 0.005, 1e11 + 0.004)
+  private val genValue: Gen[Double] = Gen.frequency(
+    4 -> Gen.chooseNum(-100000000000L, 100000000000L).map(_ / 100.0), // on-grid
+    2 -> Gen.chooseNum(-1e7, 1e7),                                     // off-grid
+    1 -> Gen.chooseNum(-1e9, 1e9).map(v => math.rint(v) / 1000.0),      // 3-dp
+    1 -> Gen.chooseNum(-999999999L, 999999999L).map(k => (k * 10 + 5) / 1000.0),
+    1 -> Gen.oneOf(midpoints ++ edge ++ Seq(0.0, -0.0, 0.01, -0.01)),
+    1 -> Gen.chooseNum(-9e14, 9e14))                                   // past 1e13 cents
+  private def sample[T](g: Gen[T], n: Int): Seq[T] =
+    Iterator.continually(g.sample).flatten.take(n).toSeq
+
+  /** (group, value) rows: random groups, plus groups whose unscaled
+    * total crosses 2^52 — one on fast-path values (~1e13 cents each),
+    * one on values past the fast-path bound.
+    */
+  private lazy val parityRows: Seq[(Int, Option[Double])] = {
+    val rnd = sample(Gen.zip(Gen.choose(0, 40), genValue), 3000)
+      .map { case (g, v) => (g, Some(v)) }
+    val nulls = Seq((0, None), (41, None), (41, None)) // 41: all-null group
+    val fastBig = sample(Gen.chooseNum(90000000000L, 99999999999L), 500)
+      .map(v => (42, Some(v + 0.37)))
+    val slowBig = sample(Gen.chooseNum(1e14, 9e14), 60).map(v => (43, Some(v)))
+    val negBig = fastBig.map { case (_, v) => (44, v.map(-_)) }
+    // 2^53 + 1 cents: S.toDouble / 100 rounds twice and misses by an ulp
+    val past53 = Seq((45, Some(9e13)), (45, Some(71992547409.93)))
+    rnd ++ nulls ++ fastBig ++ slowBig ++ negBig ++ past53
+  }
+
+  private def bits(d: Any): Any = d match {
+    case null      => null
+    case x: Double => java.lang.Double.doubleToRawLongBits(x)
+  }
+
+  /** Every (dsum, sum2, avg2) next to its decimal-form reference, per group. */
+  private def assertParity(df: DataFrame): Unit = {
+    val x = col("x")
+    val got = df.groupBy("g").agg(
+      Num.dsum(x), refDsum(x), Num.sum2(x), refSum2(x), Num.avg2(x), refAvg2(x))
+      .collect()
+    assert(got.nonEmpty)
+    got.foreach { r =>
+      for (i <- Seq(1, 3, 5))
+        assert(bits(r.get(i)) == bits(r.get(i + 1)),
+          s"group ${r.get(0)} col $i: cents ${r.get(i)} vs decimal ${r.get(i + 1)}")
+    }
+  }
+
+  test("dsum/sum2/avg2 are bit-identical to the decimal form (scalacheck doubles)") {
+    // the totals of groups 42-45 really are past 2^52 cents
+    val big = parityRows.filter(_._1 >= 42).groupBy(_._1).map { case (_, rs) =>
+      rs.flatMap(_._2).map(v => BigDecimal(v) * 100).sum.abs }
+    assert(big.forall(_ > BigDecimal(1L << 52)))
+    val df = parityRows.toDF("g", "x")
+    inEveryMode(_ => assertParity(df))
+  }
+
+  test("Cents per row equals the unscaled DECIMAL(18,2) cast, codegen and interpreted") {
+    val vals = sample(genValue, 2000) ++ midpoints ++ edge ++ Seq(0.0, -0.0)
+    val df = vals.map(Option(_)).:+(None).toDF("x")
+    inEveryMode { _ =>
+      val cents = Bridge.column(Cents(Bridge.expression(col("x"))))
+      val want = (col("x").cast(Dec) * lit(100)).cast(LongType)
+      df.select(col("x"), cents, want).collect().foreach { r =>
+        assert(r.get(1) == r.get(2), s"x=${r.get(0)}: ${r.get(1)} vs ${r.get(2)}")
+      }
+    }
+  }
+
+  test("NaN/±Inf: the cents path fails or nulls exactly like the decimal cast") {
+    val df = Seq((0, Some(1.25)), (0, Some(Double.NaN)), (1, Some(Double.PositiveInfinity)),
+      (1, Some(2.5)), (2, Some(Double.NegativeInfinity)), (2, None)).toDF("g", "x")
+    inEveryMode { ansi =>
+      val ref = scala.util.Try(df.groupBy("g").agg(refDsum(col("x"))).collect())
+      val got = scala.util.Try(df.groupBy("g").agg(Num.dsum(col("x"))).collect())
+      assert(ref.isSuccess === got.isSuccess, s"ansi=$ansi: $ref vs $got")
+      if (got.isSuccess) {
+        val norm = (t: scala.util.Try[Array[org.apache.spark.sql.Row]]) =>
+          t.get.map(r => r.getInt(0) -> bits(r.get(1))).toMap
+        assert(norm(got) === norm(ref))
+      }
+    }
+  }
+
+  test("a group whose cents total overflows a long raises, ANSI on and off") {
+    // 10 × 9.9e15 = 9.9e16 > Long.MaxValue / 100: the long sum must raise
+    // in every session, never wrap
+    val df = Seq.fill(10)(9.9e15).toDF("x")
+    inEveryMode { ansi =>
+      val e = intercept[Exception](df.agg(Num.dsum(col("x"))).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).toLowerCase.contains("overflow")),
+        s"ansi=$ansi: not an overflow error: $e")
+    }
+  }
 
   private def snapOne(x: Double, g: Double): Double =
     Seq(x).toDF("x").select(Num.snap(col("x"), g).as("s")).head().getDouble(0)

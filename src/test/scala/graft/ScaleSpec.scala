@@ -438,14 +438,15 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("plan construction is lazy: no data jobs before any action") {
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
     // Deliberately eager at construction: the X1 driver bounds round-trip,
     // the two sink round-trips (they write files, then read them back),
     // and dup_clusters (iterate-to-convergence is driver-coordinated).
     val eager = Set("box_range_filter", "split_partitioned_write",
       "csv_corrupt_quarantine",
       "json_sink_roundtrip", "orc_sink_roundtrip", "dup_clusters",
+      // the partitioned parquet sink round-trip writes at construction
+      // too; its write job used to pass as a "parquet at" footer read
+      "parquet_partitioned_roundtrip",
       // cross_modal_check embeds the same driver-coordinated CC fixpoint
       "cross_modal_check",
       "cluster_canonical", "semantic_dedup", "compact_small_files",
@@ -483,37 +484,46 @@ class ScaleSpec extends SparkSpec {
       // plan embedded every previous half-round and the last authority
       // frame twice.
       "hits_scores")
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val p = Option(j.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == "lazy_build"))
-          seen.add((j.jobId, j.stageInfos.map(_.name).mkString("; ")))
-      }
+    val lazyDefs = SparkEntry.defs.filterNot(q => eager(q.name))
+    val built = jobsDuring(lazyDefs.foreach(q => q.fn(spark, sfDir)))
+    // Parquet footer/schema reads at construction are Spark's standard
+    // metadata path (spark.read.parquet without explicit schema) — tiny
+    // and bounded, and since graft.core.Tables infers every fixture
+    // schema, they run there and nowhere else. Anything else
+    // (count/collect/write/...) is an eager action.
+    val dataJobs = built.filterNot(_.startsWith("parquet at Tables.scala:"))
+    assert(dataJobs.isEmpty,
+      s"data jobs ran during DataFrame construction: $dataJobs")
+    // ... and even those run once per table: graft.core.Tables caches the
+    // inferred schema, so a second construction pass launches no job at
+    // all, footer jobs included.
+    val rebuilt = jobsDuring(lazyDefs.foreach(q => q.fn(spark, sfDir)))
+    assert(rebuilt.isEmpty,
+      s"jobs ran during a second construction pass: $rebuilt")
+  }
+
+  test("climate aggregates sum cents in longs: no decimal buffer wider than 18 digits") {
+    // graft.core.Num's exact sums run on a long cents buffer; the
+    // decimal form they replace kept a DECIMAL(28,2) BigDecimal buffer
+    // per sum. Walks the executed (AQE final) plan of both ETL outputs.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.types.DecimalType
+    object walk extends AdaptiveSparkPlanHelper
+    for (q <- Seq(pipeline.Climate.monthly, pipeline.Climate.annual)) {
+      val df = q.fn(spark, sfDir)
+      df.collect()
+      val buffers = walk.collect(df.queryExecution.executedPlan) {
+        case a: BaseAggregateExec =>
+          a.aggregateExpressions.flatMap(_.aggregateFunction.aggBufferAttributes)
+      }.flatten
+      assert(buffers.nonEmpty, s"${q.name}: no aggregate found")
+      val wide = buffers.filter(_.dataType match {
+        case d: DecimalType => d.precision > 18
+        case _ => false
+      })
+      assert(wide.isEmpty, s"${q.name}: wide decimal aggregate buffers $wide")
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("lazy_build", "constructing all query plans")
-      SparkEntry.defs.filterNot(q => eager(q.name))
-        .foreach(q => q.fn(spark, sfDir))
-      // Sentinel job in a separate group: listener events are processed in
-      // order, so once the sentinel is visible, any build-time job is too.
-      sc.setJobGroup("lazy_sentinel", "flush marker")
-      spark.range(1).count()
-      sc.clearJobGroup()
-      val deadline = System.currentTimeMillis + 30000
-      while (sc.statusTracker.getJobIdsForGroup("lazy_sentinel").isEmpty &&
-        System.currentTimeMillis < deadline) Thread.sleep(50)
-      assert(sc.statusTracker.getJobIdsForGroup("lazy_sentinel").nonEmpty,
-        "sentinel job never appeared in the status tracker")
-      // Parquet footer/schema reads at construction are Spark's standard
-      // metadata path (spark.read.parquet without explicit schema) — tiny
-      // and bounded. Anything else (count/collect/...) is an eager action.
-      val dataJobs = seen.asScala.filterNot(_._2.startsWith("parquet at"))
-      assert(dataJobs.isEmpty,
-        s"data jobs ran during DataFrame construction: $dataJobs")
-    } finally sc.removeSparkListener(listener)
   }
 
   test("NOT IN plans the null-aware broadcast anti join, never the NLJ fallback") {
