@@ -4,7 +4,8 @@
 Runs after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
 for each query output parquet in <outDir>, runs the matching oracle SQL
 from oracle_sql.json in DuckDB (tables bound to the fixture parquets),
-sorts columns by name, and compares row count / schema / values.
+sorts columns by name, and compares row count / schema / values. An
+oracle query with no output directory is reported MISSING and fails.
 
 Usage: python3 scripts/check.py <sfDir> <outDir> [query ...]
 """
@@ -38,6 +39,13 @@ def main():
     n_pass = n_fail = n_noora = 0
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
+    # a query Verify could not write (it threw, or never ran) has an
+    # oracle but no output directory: that is a failure, not a skip
+    for name in sorted(set(oracle) - set(names)):
+        if only and name not in only:
+            continue
+        print(f"  X {name}: MISSING")
+        n_fail += 1
     for name in names:
         if only and name not in only:
             continue

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query steady-state seconds.
   *
@@ -98,16 +97,7 @@ object Bench {
 
   private def timeQueries(names: Seq[String]): Timed = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // default 100-entry codegen cache evicts constantly across a
-      // whole-registry pass -> Janino recompiles every stage every pass
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     // Two passes; report per-query MIN. Pass 1 doubles as JIT warmup
     // (codegen/HOF paths JIT per query: 2-5x on first execution); the min
     // also shields a single run from sporadic environment pauses.

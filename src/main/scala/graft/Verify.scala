@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,18 +15,16 @@ object Verify {
     val unknown = only -- SparkEntry.queries.keySet
     if (unknown.nonEmpty)
       sys.error(s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     new java.io.File(outDir).mkdirs()
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // an earlier run's output must not stand in for a query that
+      // fails now: check.py reports a query with no output as MISSING
+      fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/$name"), true)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

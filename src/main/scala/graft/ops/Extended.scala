@@ -759,7 +759,6 @@ object Extended {
   // init: a forward val reference silently reads 0 and generates empty
   // bit CTEs (caught by check.py the day the adaptive ladder landed)
   val SimWideBits = 64
-  private val SimBandBits = SimBits / SimBands
 
   /** (doc_id, simhash): per-bit ±1 vote sums as a codegen'd grouped
     * aggregate over exploded word hashes. The explode shape beats the
@@ -2463,18 +2462,8 @@ object Extended {
       val corpus = all.filter(col("vec_id") % 10 < 8)
       val batch = all.filter(col("vec_id") % 10 >= 8)
       // layout collected once for the build (round 18, embLayoutCollect)
-      val (lf, _, _) = embLayoutCollect(s, corpus)
-      embBandCodesPinned(corpus, lf)
-        .select(col("vec_id"), col("code").cast("long").as("code"), col("band"))
-        .write.mode("overwrite").partitionBy("band").parquet(dir)
-      // layout version persisted WITH the index (underscore path: hidden
-      // from the store read; written AFTER the store overwrite, which
-      // truncates the directory) — the append codes the batch off this
-      // one-row frame, touching nothing corpus-sized
-      lf.write.mode("overwrite").parquet(s"$dir/_layout")
-      embBandCodesPinned(batch, s.read.parquet(s"$dir/_layout"))
-        .select(col("vec_id"), col("code").cast("long").as("code"), col("band"))
-        .write.mode("append").partitionBy("band").parquet(dir)
+      annBandStoreBuild(corpus, embLayoutCollect(s, corpus)._1, dir)
+      annBandStoreAppend(s, batch, dir)
       s.read.parquet(dir)
         .select(col("band").cast("int").as("band"), col("code"),
           col("vec_id"))
@@ -2491,6 +2480,33 @@ object Extended {
       ORDER BY band, code, vec_id
     """),
     doc = "persisted ANN band-code index: incremental batch append == full rebuild (independent oracle)")
+
+  /** Write the band-coded index store of `corpus` at the one-row
+    * (nb, nbands) `layout`: (vec_id, code) rows partitioned by band, and
+    * the layout version persisted WITH the index under `_layout`
+    * (underscore path: hidden from the store read; written AFTER the
+    * store overwrite, which truncates the directory). The one place that
+    * knows this layout; ann_state_append, ann_stream_search's base store
+    * and the ann-lifecycle probe all build through it.
+    */
+  private[graft] def annBandStoreBuild(corpus: DataFrame, layout: DataFrame,
+      dir: String): Unit = {
+    annBandStoreCodes(corpus, layout)
+      .write.mode("overwrite").partitionBy("band").parquet(dir)
+    layout.write.mode("overwrite").parquet(s"$dir/_layout")
+  }
+
+  /** Append `batch` to the store at `dir`, coded at the store's pinned
+    * `_layout` — batch-proportional work, touching nothing corpus-sized.
+    */
+  private[graft] def annBandStoreAppend(s: SparkSession, batch: DataFrame,
+      dir: String): Unit =
+    annBandStoreCodes(batch, s.read.parquet(s"$dir/_layout"))
+      .write.mode("append").partitionBy("band").parquet(dir)
+
+  private def annBandStoreCodes(vs: DataFrame, layout: DataFrame): DataFrame =
+    embBandCodesPinned(vs, layout)
+      .select(col("vec_id"), col("code").cast("long").as("code"), col("band"))
 
   /** Hash tables the store-backed search probes (of the store's nbands):
     * the production latency/memory knob — a search client reads a SUBSET
@@ -3108,11 +3124,7 @@ object Extended {
       val lf = s.range(1).select(lit(pre.getInt(1)).as("nb"),
         lit(pre.getInt(2)).as("nbands"))
       val resId = pre.getLong(3)
-      embBandCodesPinned(corpus, lf)
-        .select(col("vec_id"), col("code").cast("long").as("code"),
-          col("band"))
-        .write.mode("overwrite").partitionBy("band").parquet(s"$dir/base")
-      lf.write.mode("overwrite").parquet(s"$dir/base/_layout")
+      annBandStoreBuild(corpus, lf, s"$dir/base")
       val nullV = lit(null).cast("array<double>")
       def evs(src: DataFrame, op: String, newV: Column,
           oldV: Column): DataFrame =
@@ -5864,7 +5876,6 @@ object Extended {
     "heavy_hitters",
     (s, d) => {
       val K = 29
-      import s.implicits._
       val toks = docWords(s, d).select(explode(col("w")).as("term"))
       val mg = udaf(new graft.functions.MisraGries(K), Encoders.STRING)
       val cands = toks.agg(mg(col("term")).as("cand"))
@@ -7251,7 +7262,6 @@ object Extended {
   }
 
   val dupSpanRuns: QueryDef = {
-    val K = SpanK
     QueryDef(
       "dup_span_runs",
       (s, d) => {

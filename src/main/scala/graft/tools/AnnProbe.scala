@@ -31,27 +31,14 @@ import org.apache.spark.sql.functions._
   */
 object AnnProbe {
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-annprobe")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    args.head match {
-      case "gen" =>
-        val Array(_, src, out, factorS, plantS) = args.take(5)
-        gen(spark, src, out, factorS.toInt, plantS.toInt)
-      case "eval" => eval(spark, args(1))
-      case "evalstrict" => evalStrict(spark, args(1))
-      case "recall" => recall(spark, args(1))
-      case other  => sys.error(
-        s"AnnProbe: unknown mode $other (gen|eval|evalstrict|recall)")
-    }
-    spark.stop()
+  def run(spark: SparkSession, args: Seq[String]): Unit = args match {
+    case Seq("gen", src, out, factor, plant) =>
+      gen(spark, src, out, factor.toInt, plant.toInt)
+    case Seq("eval", out)       => eval(spark, out)
+    case Seq("evalstrict", out) => evalStrict(spark, out)
+    case Seq("recall", out)     => recall(spark, out)
+    case _ => sys.error("usage: ann <gen src out factor nPlant|eval out|" +
+      s"evalstrict out|recall out>; got ${args.mkString(" ")}")
   }
 
   private def gen(spark: SparkSession, src: String, out: String,

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.tools.Run.time
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -15,23 +16,15 @@ import org.apache.spark.sql.functions._
   * gone — amortized into the 1/XmFoldEvery fold); the remaining
   * state-sided terms are the columnar member/bucket view SCANS.
   *
-  * Usage: runMain graft.tools.CrossModalProbe <sfDir>
+  * Usage: Run crossmodal <sfDir>
   * Unrecognized extra args fail loudly (round-14 harness rule).
   */
 object CrossModalProbe {
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
     require(args.length == 1,
-      s"usage: CrossModalProbe <sfDir>; got ${args.mkString(" ")}")
+      s"usage: crossmodal <sfDir>; got ${args.mkString(" ")}")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-crossmodal-probe")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val docs = graft.core.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("n_chars"))
@@ -43,11 +36,6 @@ object CrossModalProbe {
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(state), true)
 
-    def time(tag: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      println(f"[crossmodal-probe] $tag%-34s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
     println(s"[crossmodal-probe] dir=$dir docs=${docs.count()} preload=${
       docs.filter(col("doc_id") <= cut1).count()}")
     time("batch 0: preload state") {
@@ -62,6 +50,5 @@ object CrossModalProbe {
       graft.streaming.EventStream.mergeCrossModalSnapshot(
         docs.filter(col("doc_id") > cut2), state, 2L)
     }
-    spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.tools.Run.time
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -17,51 +18,34 @@ import org.apache.spark.sql.functions._
   * (linear in candidates; ~104 s standalone at sf10) and is the
   * audit's dominant term by design, not an SNM property.
   *
-  * Usage: runMain graft.tools.ErProbe <sfDir>
+  * Usage: Run er <sfDir>
   * Unrecognized extra args fail loudly (round-14 harness rule).
   */
 object ErProbe {
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
     require(args.length == 1,
-      s"usage: ErProbe <sfDir>; got ${args.mkString(" ")}")
+      s"usage: er <sfDir>; got ${args.mkString(" ")}")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-er-probe")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def time(tag: String)(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[er-probe] $tag%-38s $s%8.2f s rows=$n")
-      (s, n)
-    }
-
     val nDocs = graft.core.Tables.documents(spark, dir).count()
     println(s"[er-probe] dir=$dir docs=$nDocs")
     val cand = graft.ops.Extended.snmCandidateFrame(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // stage 1: the blocking — normalize, per-block sort, window leads,
     // row-local unfold (the count materializes the persisted frame)
-    val (tB, nCand) = time("stage blocking (sort+window+unfold)") {
+    val (nCand, tB) = time("stage blocking (sort+window+unfold)") {
       cand.count()
     }
     // stage 2: the banded-Levenshtein verify over the persisted
     // candidates (sorted_neighborhood_er's verify; fellegi's dominant
     // comparator) — row-local, no shuffle
-    val (tV, nVer) = time("stage lev verify (banded <=40)") {
+    val (nVer, tV) = time("stage lev verify (banded <=40)") {
       cand.select(levenshtein(col("t120"), col("nb.bt"), 40).as("lev"))
         .filter(col("lev").between(0, 40)).count()
     }
     // stage 3: the cross-band pair distinct the emit pays (keyed shuffle
     // over the surviving pairs only)
-    val (tD, nPairs) = time("stage pair distinct") {
+    val (nPairs, _) = time("stage pair distinct") {
       cand.select(least(col("a"), col("nb.bid")).as("d1"),
           greatest(col("a"), col("nb.bid")).as("d2"),
           levenshtein(col("t120"), col("nb.bt"), 40).as("lev"))
@@ -69,8 +53,7 @@ object ErProbe {
         .distinct().count()
     }
     println(f"[er-probe] per-candidate blocking ${tB * 1e9 / nCand}%.0f ns, " +
-      f"verify ${tV * 1e9 / nCand}%.0f ns (survivors=$nVer, pairs=$nPairs)")
+      f"verify ${tV * 1e9 / nCand}%.0f ns (candidates=$nCand, survivors=$nVer, pairs=$nPairs)")
     cand.unpersist()
-    spark.stop()
   }
 }

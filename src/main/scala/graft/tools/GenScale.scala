@@ -57,7 +57,7 @@ import org.apache.spark.sql.functions._
   *    100 TB).
   *  - dims (region/nation/customer/supplier/part): copied as-is.
   *
-  * Usage: runMain graft.tools.GenScale <srcDir> <outDir> <factor>
+  * Usage: Run genscale <srcDir> <outDir> <factor> [tables]
   */
 object GenScale {
 
@@ -141,8 +141,8 @@ object GenScale {
           zip_with(rotated, flip, (x, sg) => x * sg))
     }
 
-  def main(args: Array[String]): Unit = {
-    val Array(src, out, factorS) = args.take(3)
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val Seq(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
     require(factor >= 1)
     // optional 4th arg: comma-separated table subset (fail loudly on
@@ -158,15 +158,6 @@ object GenScale {
     require(unknownT.isEmpty,
       s"unknown GenScale tables: ${unknownT.mkString(", ")} " +
         s"(known: ${knownTables.mkString(", ")})")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-genscale")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     def write(df: DataFrame, name: String, parts: Int): Unit = {
       df.repartition(parts)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
@@ -229,7 +220,6 @@ object GenScale {
       "embeddings", 8)
     }
 
-    spark.stop()
     println(s"[genscale] done: $out (factor $factor)")
   }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.ops.Extended
+import graft.tools.Run.time
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    admits (only computed when the uncapped expand is feasible), i.e.
   *    the concrete true-pair loss the cap causes at that scale.
   *
-  * Usage: runMain graft.tools.SimhashProbe <sfDir> [uncapped] [uncapped64] [phash] [idf]
+  * Usage: Run simhash <sfDir> [uncapped] [uncapped64] [phash] [idf] [bits128]
   * Unrecognized extra args fail loudly (the round-14 subset-harness rule:
   * a silently ignored flag makes the probe's capped-only output look like
   * a completed pair-loss measurement).
@@ -98,21 +99,13 @@ object SimhashProbe {
       f" buckets=${occ.getLong(3)} overCap=${occ.getLong(4)}")
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val sfDir = args.head
     val known = Set("uncapped", "uncapped64", "phash", "idf", "bits128")
     val unknown = args.drop(1).filterNot(known)
     require(unknown.isEmpty,
       s"unknown SimhashProbe flags: ${unknown.mkString(", ")} (known: ${known.mkString(", ")})")
     val uncapped = args.contains("uncapped")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-simhash-probe")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
     val phashMode = args.contains("phash")
@@ -141,9 +134,8 @@ object SimhashProbe {
     // stage attribution: first action materializes the signature/pixel
     // compute into the cache; the later pairCount on the persisted frame
     // times banding + pair-expand + verify alone
-    val tSig0 = System.nanoTime()
-    val nSig = sims64.count()
-    println(f"[simhash-probe] stage sig-compute ${(System.nanoTime() - tSig0) / 1e9}%.2f s rows=$nSig")
+    val (nSig, _) = time("stage sig-compute")(sims64.count())
+    println(s"[simhash-probe] signatures=$nSig")
     val sims32 = sims64.select(col("doc_id"),
       expr("simhash & 4294967295").as("simhash"))
     occupancy(sims32, 32, 1000)
@@ -155,9 +147,7 @@ object SimhashProbe {
       val un32 = pairCount(sims32, 32, Int.MaxValue)
       println(s"[simhash-probe] pairs32 UNCAPPED=$un32 lost=${un32 - capped32}")
     }
-    val tP0 = System.nanoTime()
-    val capped64 = pairCount(sims64, 64, 1000)
-    println(f"[simhash-probe] stage band+pairs64 ${(System.nanoTime() - tP0) / 1e9}%.2f s")
+    val (capped64, _) = time("stage band+pairs64")(pairCount(sims64, 64, 1000))
     println(s"[simhash-probe] pairs64 capped=$capped64")
     if (args.contains("uncapped64")) {
       val un64 = pairCount(sims64, 64, Int.MaxValue)
@@ -194,6 +184,5 @@ object SimhashProbe {
       sims128.unpersist()
     }
     sims64.unpersist()
-    spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Extended
-import org.apache.spark.sql.functions._
 
 /** Property check for the multi-round greedy BPE core: on planted and
   * random corpora, the round-unrolled Spark plan must match an in-JVM

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Extended
-import org.apache.spark.sql.functions._
 
 /** Property check for the shared connected-components routine behind the
   * whole dedup-clustering family (`dup_clusters`, `cluster_canonical`,

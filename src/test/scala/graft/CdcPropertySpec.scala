@@ -2,7 +2,6 @@ package graft
 
 import graft.core.Text
 import graft.ops.Extended
-import org.apache.spark.sql.functions._
 
 /** Property check for content-defined chunking: the in-plan fold must
   * match a JVM reference chunker (Text.jvmH32 is bit-identical to the

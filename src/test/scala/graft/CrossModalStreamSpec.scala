@@ -100,7 +100,6 @@ class CrossModalStreamSpec extends SparkSpec {
     val docC = (3L, s"$base beta gamma delta epsilon zeta", // longest
       (base.length + 31).toLong)
     val stateDir = tmp("graft_xm_reelect")
-    import org.apache.spark.sql.functions.{col => c}
     EventStream.mergeCrossModalSnapshot(
       Seq(docA, docB).toDF("doc_id", "text", "n_chars"), stateDir, 0L)
     val after1 = EventStream.crossModalVerdictsAt(spark, stateDir, 1L)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.Multimodal
-import graft.ops.Multimodal.{MediaRow, MediaFeatures}
+import graft.ops.Multimodal.MediaRow
 import org.apache.spark.sql.functions._
 
 /** Binary-column plumbing: schema, batch shape, deterministic features. */

@@ -177,12 +177,15 @@ class NumSpec extends SparkSpec {
   }
 
   test("avg2: deterministic on true 2-dp midpoints (the bround trap)") {
-    // 649452.45 / 10 = 64945.245 exactly — bround and DuckDB round_even
-    // disagree here; the floor-form must give the half-up answer.
-    val vals = Seq.fill(10)(64945.245).map(_ => 64945.245)
+    // 649452.45 / 10 is the double 64945.244999999995, whose shortest
+    // string rounds DOWN to 64945.24 in the per-row CAST(x AS
+    // DECIMAL(18,2)) here. DuckDB's Num.sqlAvg2 rounds the binary product
+    // x*100 = 6494524.5 instead and gives 64945.25: the two engines
+    // disagree on these rows (a known defect, ROADMAP item 5). Pin the
+    // engine's exact value so a change to either side shows.
     val df = Seq.tabulate(10)(_ => 649452.45 / 10 * 1.0).toDF("x")
     val got = df.agg(Num.avg2(col("x")).as("a")).head().getDouble(0)
-    assert(math.abs(got - 64945.25) < 1e-9 || math.abs(got - 64945.24) < 1e-9)
+    assert(got === 64945.24)
     // and it is STABLE: same value every run
     val got2 = df.agg(Num.avg2(col("x")).as("a")).head().getDouble(0)
     assert(got === got2)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Joins
-import org.apache.spark.sql.functions._
 
 /** Property check for the point-in-polygon core (`Joins.pipContain`) —
   * the round-9 exact-machinery discipline: the cell-pruned even-odd

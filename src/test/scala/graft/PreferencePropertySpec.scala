@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Learn
-import org.apache.spark.sql.functions._
 
 /** Property checks for the round-14 preference/evaluation family — the
   * exact candidate machinery rule (round 9): matchup canonicalization

@@ -571,6 +571,25 @@ class ScaleSpec extends SparkSpec {
       s"bare persist() outside graft.core.Pin:\n${offenders.mkString("\n")}")
   }
 
+  test("one session builder: SparkSession.builder only in graft.core.Session") {
+    // Every engine session comes from core.Session.local, so Bench,
+    // Verify, the tools and the tests plan under the same confs and the
+    // same installed extensions; a second builder is where they drift.
+    val factory = java.nio.file.Paths.get("src/main/scala/graft/core/Session.scala")
+    val offenders = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != factory)
+      .flatMap { p =>
+        Files.readString(p).linesIterator.zipWithIndex.collect {
+          case (l, i) if l.contains("SparkSession.builder") => s"$p:${i + 1}: ${l.trim}"
+        }
+      }
+      .toSeq
+    assert(Files.readString(factory).contains("SparkSession.builder"))
+    assert(offenders.isEmpty,
+      s"SparkSession.builder outside graft.core.Session:\n${offenders.mkString("\n")}")
+  }
+
   test("pinning queries leave no cache entries after Pin.releaseAll") {
     // Functional half of the discipline: run the heaviest pinning
     // queries end-to-end, then release — the session CacheManager must

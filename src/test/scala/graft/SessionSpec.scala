@@ -1,0 +1,35 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** core.Session.local, the one session builder: its confs, and the
+  * engine's functions resolving through the installed extensions alone.
+  */
+class SessionSpec extends AnyFunSuite {
+  test("Session.local: UTC, partitions = cores, codegen cache, graft_dot without register") {
+    // build the shared test context first, so the fresh session below
+    // joins it instead of creating one with other cores
+    val prior = Some(SparkTestSession.spark)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      // a fresh session: its function registry is the builtins plus
+      // the extensions, never the shared session's register() calls
+      val s = core.Session.local(3)
+      assert(!prior.contains(s))
+      assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
+      assert(s.conf.get("spark.sql.shuffle.partitions") === "3")
+      assert(s.conf.get("spark.sql.codegen.cache.maxEntries") === "5000")
+      val d = s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
+        .head().getDouble(0)
+      assert(d === 11.0)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prior.foreach(SparkSession.setDefaultSession)
+      // the factory set WARN on the shared context; keep the suite quiet
+      SparkTestSession.spark.sparkContext.setLogLevel("ERROR")
+    }
+  }
+}

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Extended
-import org.apache.spark.sql.functions._
 
 /** Property check for the SimHash banding join: on random signatures
   * with ADVERSARIALLY planted mutations, the banded candidate +

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Extended
-import org.apache.spark.sql.functions._
 
 /** Property check for the maximal-span merge: on planted hit-position
   * shapes and random hit sets, [[Extended.maxSpansOf]]'s lag-based

@@ -6,17 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM, one context). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Static conf, read from the SparkContext: must be set by whichever
-      // builder creates the one test context, or ExtensionsSpec's fresh
-      // session would (dis)inject based on suite ordering.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    // the engine's own factory, so tests run under the same confs and
+    // extensions as Bench and Verify
+    val s = core.Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
