@@ -3,34 +3,39 @@ package graft
 import graft.functions.{DotProduct, NfcNormalize}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SparkSessionExtensions entry point: makes the engine's native
   * expressions available to ANY session via
   * `--conf spark.sql.extensions=graft.GraftExtensions` — the standard
-  * deployment path on a shared cluster (no per-session registration call
-  * needed). `VectorFunctions.register` remains for programmatic use.
+  * deployment path on a shared cluster, and the only way the engine
+  * installs its functions (`graft.core.Session.local` sets it; no
+  * per-session registration call exists).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(
-        classOf[DotProduct].getName, null, "graft_dot",
-        "graft_dot(a, b) - dot product of two array<double> columns " +
-          "(codegen'd single fused loop).",
-        "", "", "", "", "", "", "built-in"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(
-        classOf[NfcNormalize].getName, null, "graft_nfc",
-        "graft_nfc(s) - Unicode NFC normalization (UAX#15), codegen'd " +
-          "with a zero-copy already-normalized fast path.",
-        "", "", "", "", "", "", "built-in"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        NfcNormalize(exprs(0))))
+    def function(name: String, cls: Class[_], usage: String)(
+        build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, null, name, usage,
+          "", "", "", "", "", "", "built-in"),
+        build))
+    function("graft_dot", classOf[DotProduct],
+      "graft_dot(a, b) - dot product of two array<double> columns " +
+        "(codegen'd single fused loop).")(e => DotProduct(e(0), e(1)))
+    function("graft_nfc", classOf[NfcNormalize],
+      "graft_nfc(s) - Unicode NFC normalization (UAX#15), codegen'd " +
+        "with a zero-copy already-normalized fast path.")(e => NfcNormalize(e(0)))
+    // Spark's own Bloom-filter expressions (built for AQE's runtime-filter
+    // injection, absent from the public registry) under graft_ names, so
+    // bloom_pruned_join can make semi-join reduction structural
+    function("graft_bloom_agg", classOf[BloomFilterAggregate],
+      "graft_bloom_agg(x, expectedItems, numBits) - Bloom sketch of x.")(
+      e => new BloomFilterAggregate(e(0), e(1), e(2)))
+    function("graft_might_contain", classOf[BloomFilterMightContain],
+      "graft_might_contain(bloom, x) - false only if x is not in the sketch.")(
+      e => BloomFilterMightContain(e(0), e(1)))
     // auto-rewrite pure interval-containment joins (else planned as a
     // BroadcastNestedLoopJoin) into bucketed equi-joins — see the rule's
     // scaladoc for the shape and the binSize conf

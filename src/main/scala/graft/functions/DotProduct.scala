@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -84,16 +83,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session-scoped registration so `expr("graft_dot(a, b)")` and
-  * `expr("graft_nfc(s)")` resolve.
-  */
-object VectorFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs(0)), "built-in")
-  }
 }

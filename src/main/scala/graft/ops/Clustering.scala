@@ -26,7 +26,6 @@ object Clustering {
     * BEFORE any arithmetic so both engines operate on identical values.
     */
   private def base(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))

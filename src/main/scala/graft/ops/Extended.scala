@@ -1434,7 +1434,6 @@ object Extended {
     * (same left-to-right summation as DuckDB's list_dot_product).
     */
   private[graft] def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -2276,7 +2275,6 @@ object Extended {
     */
   private[graft] def annIvfTopK(s: SparkSession, d: String,
       k: Int): DataFrame = {
-      graft.functions.VectorFunctions.register(s)
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -2547,21 +2545,22 @@ object Extended {
     (nbands, n)
   }
 
-  /** The search leg of [[annStoreSearch]], against an already-written
-    * store at `dir` (factored out so AnnStateProbe can time search alone,
-    * store build excluded). EAGER: collects the probe list (bounded by
-    * the fixed query batch — see the query scaladoc). With
-    * `flipBits = n > 0` each query probes, per band, its own bucket
-    * plus every bucket one base-sign-bit away (1 + n probes — the
-    * multi-probe recall knob, [[annMultiprobeTopK]]'s exact
-    * perturbation set applied to the STORE path; probe-list size stays
-    * query-batch-bounded, ≤ (1+n)× the exact list).
+  /** The search leg every store-backed ANN search shares (batch, live,
+    * multi-probe and stream stores): answer the fixed query batch — the
+    * ids of `vs` with vec_id % 100 = 0 and ≤ 20000, coded at the store's
+    * pinned `layout` — from a store `view` of (band, code, vec_id) rows,
+    * scoring candidates against `vs` (vec_id, v, nrm). EAGER: collects
+    * the probe list (bounded by the fixed query batch — see
+    * [[annStoreSearch]]). With `flipBits = n > 0` each query probes, per
+    * band, its own bucket plus every bucket one base-sign-bit away
+    * (1 + n probes — the multi-probe recall knob, [[annMultiprobeTopK]]'s
+    * exact perturbation set applied to the STORE path; probe-list size
+    * stays query-batch-bounded, ≤ (1+n)× the exact list).
     */
-  private[graft] def annStoreSearchFrom(s: SparkSession, all: DataFrame,
-      dir: String, flipBits: Int = 0): DataFrame = {
-    val layout = s.read.parquet(s"$dir/_layout")
+  private[graft] def annStoreSearchFrom(view: DataFrame, layout: DataFrame,
+      vs: DataFrame, flipBits: Int = 0): DataFrame = {
     val qraw = embBandCodesPinned(
-        all.filter(col("vec_id") % 100 === 0 && col("vec_id") <= 20000),
+        vs.filter(col("vec_id") % 100 === 0 && col("vec_id") <= 20000),
         layout)
       .filter(col("band") < AnnProbeTables)
       .select(col("vec_id").as("q_id"), col("band"),
@@ -2575,29 +2574,15 @@ object Extended {
           explode(expr(s"transform(array($flips), f -> code ^ f)"))
             .as("code"))
       }
-    // the probe list: bounded by the fixed query batch (see scaladoc)
+    // the probe list: bounded by the fixed query batch (see scaladoc);
+    // its literals reach the view's scan (band-partition pruning, code
+    // row-group skipping) through any tombstone mask on the view
     val probe = qcodes.select(col("band"), col("code")).distinct()
       .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val probedBands = probe.map(_._1).distinct.toSeq
-    val probedCodes = probe.map(_._2).distinct.toSeq
-    val hits = s.read.parquet(dir)
-      .where(col("band").isin(probedBands: _*) &&
-        col("code").isin(probedCodes: _*))
+    val cands = view
+      .where(col("band").isin(probe.map(_._1).distinct.toSeq: _*) &&
+        col("code").isin(probe.map(_._2).distinct.toSeq: _*))
       .join(broadcast(qcodes), Seq("band", "code"))
-    // a GC-maintained store may carry uncompacted tombstones — the
-    // search masks them exactly as annStoreView does (keyed anti-join
-    // over the probed rows only — the between-compactions read path;
-    // the key includes `code` so an upsert's fresh row outlives its
-    // tombstoned predecessor — see [[annStoreUpsert]])
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    val live = if (fs.exists(
-        new org.apache.hadoop.fs.Path(s"$dir/_tombstones")))
-      hits.join(s.read.parquet(s"$dir/_tombstones")
-        .select(col("band"), col("vec_id"), col("code")),
-        Seq("band", "vec_id", "code"), "left_anti")
-    else hits
-    val cands = live
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id")).distinct()
     // scoring joins BROADCAST the candidate side (round 17, guide §3.1):
@@ -2610,10 +2595,10 @@ object Extended {
     // corpus without shuffling any vector — the §8 rule: move decisions
     // on small rows, never re-shuffle the payload.
     val scored = broadcast(cands)
-      .join(all.select(col("vec_id").as("q_id"), col("v").as("qv"),
+      .join(vs.select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn")), Seq("q_id"))
       .transform(df => broadcast(df))
-      .join(all, Seq("vec_id"))
+      .join(vs, Seq("vec_id"))
       .withColumn("cos6",
         Text.hround(expr(sqlSparkDot("qv", "v")) / (col("qn") * col("nrm")), 6))
     val w = Window.partitionBy(col("q_id"))
@@ -2623,6 +2608,14 @@ object Extended {
       .select(col("q_id"), col("vec_id").as("nn_id"), col("cos6"), col("rn"))
       .orderBy(col("q_id"), col("rn"))
   }
+
+  /** [[annStoreSearchFrom]] over the batch store at `dir`: its live
+    * (tombstone-masked) [[annStoreView]] at its pinned `_layout`.
+    */
+  private[graft] def annStoreSearchDir(s: SparkSession, all: DataFrame,
+      dir: String, flipBits: Int = 0): DataFrame =
+    annStoreSearchFrom(annStoreView(s, dir), s.read.parquet(s"$dir/_layout"),
+      all, flipBits)
 
   /** Store-backed ANN search (r16 verdict task 1 — the consumer the
     * persisted index was missing): every other ANN query re-codes the
@@ -2671,7 +2664,7 @@ object Extended {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_search_store")
       val all = vecs(s, d)
       annSearchStoreWrite(s, all, dir)
-      annStoreSearchFrom(s, all, dir)
+      annStoreSearchDir(s, all, dir)
     },
     Some(s"""
       WITH vsrc AS ($sqlVecs),
@@ -2899,7 +2892,7 @@ object Extended {
       val all = vecs(s, d)
       annGcStoreInit(s, all, dir)
       annStoreDelete(s, all.filter(col("vec_id") % 10 === 3), dir)
-      annStoreSearchFrom(s, all, dir)
+      annStoreSearchDir(s, all, dir)
     },
     Some(s"""
       WITH vsrc AS ($sqlVecs),
@@ -3052,7 +3045,7 @@ object Extended {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_mp_store")
       val all = vecs(s, d)
       annSearchStoreWrite(s, all, dir)
-      annStoreSearchFrom(s, all, dir, flipBits = EmbBits)
+      annStoreSearchDir(s, all, dir, flipBits = EmbBits)
     },
     Some(s"""
       WITH vsrc AS ($sqlVecs),
@@ -3146,39 +3139,8 @@ object Extended {
         .withColumn("v", when(col("vec_id") % 100 === 11,
           reverse(col("v"))).otherwise(col("v")))
         .withColumn("nrm", sqrt(expr(sqlSparkDot("v", "v"))))
-      val layout = s.read.parquet(s"$dir/base/_layout")
-      val qcodes = embBandCodesPinned(
-          finalVecs.filter(col("vec_id") % 100 === 0 &&
-            col("vec_id") <= 20000), layout)
-        .filter(col("band") < AnnProbeTables)
-        .select(col("vec_id").as("q_id"), col("band"),
-          col("code").cast("long").as("code"))
-      val probe = qcodes.select(col("band"), col("code")).distinct()
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-      val hits = graft.streaming.EventStream.annStoreStreamView(s, dir)
-        .where(col("band").isin(probe.map(_._1).distinct.toSeq: _*) &&
-          col("code").isin(probe.map(_._2).distinct.toSeq: _*))
-        .join(broadcast(qcodes), Seq("band", "code"))
-      val cands = hits.filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id")).distinct()
-      // broadcast the query-batch-bounded candidate side — the
-      // annStoreSearchFrom scoring shape (see its comment): vectors
-      // stream, never shuffle.
-      val scored = broadcast(cands)
-        .join(finalVecs.select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn")), Seq("q_id"))
-        .transform(df => broadcast(df))
-        .join(finalVecs, Seq("vec_id"))
-        .withColumn("cos6",
-          Text.hround(expr(sqlSparkDot("qv", "v")) / (col("qn") * col("nrm")),
-            6))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos6").desc, col("vec_id").asc)
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id").as("nn_id"), col("cos6"),
-          col("rn"))
-        .orderBy(col("q_id"), col("rn"))
+      annStoreSearchFrom(graft.streaming.EventStream.annStoreStreamView(s, dir),
+        s.read.parquet(s"$dir/base/_layout"), finalVecs)
     },
     Some(s"""
       WITH vraw AS ($sqlVecs),
@@ -3558,7 +3520,6 @@ object Extended {
   val textNormalize: QueryDef = QueryDef(
     "text_normalize",
     (s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val dec = concat(col("text"), lit(" cafe\u0301"))
       val norm = trim(regexp_replace(lower(expr("graft_nfc(dec)")), "\\s+", " "))
       Tables.documents(s, d)
@@ -3996,7 +3957,6 @@ object Extended {
     */
   private def curationStages(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-      graft.functions.VectorFunctions.register(s)
       // 1+2: quality gate then exact dedup
       val scored0 = docWords(s, d)
         .withColumn("n_tok", size(col("w")))

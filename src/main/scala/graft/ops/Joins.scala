@@ -493,22 +493,27 @@ object Joins {
     doc = "native as-of join exec (custom plan+strategy), payload carried through")
 
   /** Bloom-pruned semi-join reduction — the 100 TB fact-dim join
-    * optimization made structural (functions/Bloom.scala has the full
-    * scale story). The dim side (high-value orders, ~4% selectivity at
-    * every fixture SF) aggregates its join keys into one KB-scale Bloom
-    * sketch, delivered to the fact scan as a scalar subquery; fact rows
-    * failing `might_contain` never reach the join shuffle. False
-    * positives survive the prune but are removed by the exact equi-join
-    * that follows, so the result is EXACTLY the unpruned join — which is
-    * what the oracle checks (DuckDB runs the plain join; any bloom
-    * false-NEGATIVE would show up as a missing row / hash mismatch).
+    * optimization made structural. Catalyst ships `BloomFilterAggregate`
+    * / `BloomFilterMightContain` for AQE's runtime-filter injection but
+    * keeps them out of the public registry; GraftExtensions installs them
+    * as `graft_bloom_agg` / `graft_might_contain`, so the query builds the
+    * filter instead of hoping the optimizer injects it. The dim side
+    * (high-value orders, ~4% selectivity at every fixture SF) aggregates
+    * its join keys into one KB-scale Bloom sketch (a mergeable aggregate:
+    * one pass, partial blooms OR-merge), delivered to the fact scan as a
+    * scalar subquery; fact rows failing `might_contain` never reach the
+    * join shuffle, which carries ~selectivity × fact instead of the whole
+    * fact table. False positives survive the prune but are removed by
+    * the exact equi-join that follows, so the result is EXACTLY the
+    * unpruned join — which is what the oracle checks (DuckDB runs the
+    * plain join; any bloom false-NEGATIVE would show up as a missing row
+    * / hash mismatch).
     * The temp-view name is session-unique per sfDir so concurrent
     * sessions never cross-wire sketches.
     */
   val bloomPrunedJoin: QueryDef = QueryDef(
     "bloom_pruned_join",
     (s, d) => {
-      graft.functions.BloomFunctions.register(s)
       val view = ("graft_bf_" + d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
         ProcessHandle.current().pid()).toLowerCase
       val dim = Tables.orders(s, d)

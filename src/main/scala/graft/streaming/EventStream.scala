@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{Num, QueryDef, Tables}
+import graft.core.{BidLog, Num, QueryDef, Tables}
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -429,21 +429,13 @@ object EventStream {
 
   /** foreachBatch sink with idempotent-by-batchId writes — the
     * exactly-once recipe for sinks with no transactional commit: each
-    * micro-batch OVERWRITES its own `bid=<batchId>` partition, so a batch
-    * replayed after a crash-before-commit (offset log written, commit log
-    * not) rewrites the same directory instead of appending duplicates.
-    * Batch ids are stable across restarts of the same checkpoint, which
-    * is what makes the overwrite idempotent.
+    * micro-batch commits its own bid of the [[graft.core.BidLog]], so a
+    * batch replayed after a crash-before-commit rewrites the same bid
+    * instead of appending duplicates.
     */
   def idempotentParquetSink(df: DataFrame, outDir: String, ckDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", ckDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/bid=$id")
-      }
-      .start()
+    BidLog.stream(df, ckDir)((batch, id) => BidLog.commit(batch, outDir, id))
 
   // ---- incremental aggregate maintenance, streaming twin -----------------
 
@@ -451,56 +443,32 @@ object EventStream {
     * (ops/Aggregates.scala): each micro-batch's per-user partial
     * aggregate is MERGED into a parquet state store instead of
     * recomputing history — the materialized-view refresh loop run
-    * continuously. Replay safety composes [[idempotentParquetSink]]'s
-    * batch-id discipline with SNAPSHOT state: batch `id` reads the
-    * newest snapshot with bid < id, merges its own partial (the shared
+    * continuously. Every snapshot is a full fold of the
+    * [[graft.core.BidLog]]: batch `id` reads the newest snapshot below
+    * it, merges its own partial (the shared
     * [[graft.ops.Aggregates.userAggPartial]]/`userAggMerge` monoid —
-    * exact-integer cents, so merge ≡ rebuild), and OVERWRITES
-    * `bid=<id>`. A batch replayed after a crash-before-commit re-reads
-    * the SAME predecessor snapshot (its own partial output is ignored
-    * by the `< id` cut, whole or torn) and rewrites the same directory
-    * — idempotent by construction; EventStreamSpec proves it with a
-    * commit-wipe replay. Snapshots strictly older than the predecessor
-    * are GC'd after a successful write (the predecessor itself must
-    * survive until batch id COMMITS, or a replay would see an empty
-    * store), so steady-state disk is two snapshots. At 100 TB each
-    * refresh costs one batch-sized aggregate plus one state-keyed
-    * shuffle — never a history scan.
+    * exact-integer cents, so merge ≡ rebuild) and commits its own bid, so
+    * a replay re-reads the same predecessor; EventStreamSpec proves it
+    * with a commit-wipe replay. Steady-state disk is two snapshots. At
+    * 100 TB each refresh costs one batch-sized aggregate plus one
+    * state-keyed shuffle — never a history scan.
     */
   def incrementalAggMaintainStream(events: DataFrame, stateDir: String,
       ckDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", ckDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        mergeAggSnapshot(batch, stateDir, id)
-      }
-      .start()
+    BidLog.stream(events, ckDir)(mergeAggSnapshot(_, stateDir, _))
 
   /** One micro-batch of the snapshot merge (factored out so the spec can
     * also drive it directly). See [[incrementalAggMaintainStream]].
     */
   private[graft] def mergeAggSnapshot(batch: Dataset[org.apache.spark.sql.Row],
       stateDir: String, id: Long): Unit = {
-    val s = batch.sparkSession
     val partial = graft.ops.Aggregates.userAggPartial(batch)
-    val prev = latestSnapshotId(s, stateDir, id)
-    val merged = prev match {
-      case Some(p) => graft.ops.Aggregates.userAggMerge(
-        s.read.parquet(s"$stateDir/bid=$p").unionByName(partial))
-      case None => partial
-    }
-    merged.write.mode("overwrite").parquet(s"$stateDir/bid=$id")
-    // GC snapshots strictly older than the predecessor just consumed —
-    // a replay of THIS batch only ever re-reads `prev`, never anything
-    // older, and earlier batches are already committed.
-    prev.foreach { p =>
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      snapshotIds(s, stateDir).filter(_ < p).foreach { old =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/bid=$old"), true)
-      }
-    }
+    val merged = BidLog.readLive(batch.sparkSession, stateDir, id)
+      .map(prev => graft.ops.Aggregates.userAggMerge(
+        prev.drop("bid").unionByName(partial)))
+      .getOrElse(partial)
+    BidLog.commit(merged, stateDir, id, fold = true)
+    BidLog.gc(batch.sparkSession, stateDir, id)
   }
 
   // ---- cross-modal curation gate, streaming twin (round 15) --------------
@@ -510,8 +478,7 @@ object EventStream {
     * curation family (r14 verdict task 7): as documents ARRIVE, maintain
     * the text near-dup clusters incrementally and re-emit the
     * text-dup-but-media-distinct verdicts for the corpus seen so far.
-    * State (parquet snapshots, [[idempotentParquetSink]]'s batch-id
-    * discipline): `members` (doc_id, root, n_chars, ph — everything the
+    * State (parquet bids of the [[graft.core.BidLog]]): `members` (doc_id, root, n_chars, ph — everything the
     * canonical election and the phash verdict need) and `buckets`
     * (band, bkey, root — the LSH connectivity frontier, every bucket
     * pointing at its component's ROOT so a future arrival unions in one
@@ -524,12 +491,12 @@ object EventStream {
     * (Extended.ccOverEdges — components over the contracted node space
     * {batch docs} ∪ {touched roots} relabel exactly like the batch CC
     * over the full graph, because stored roots ARE min-reachable ids),
-    * remap merged roots through the old→new map, and OVERWRITE the
-    * bid=<id> snapshot (members + buckets + the verdict output derived
-    * from members by the batch query's election: canonical = longest
-    * text, tie lowest id; media_match = aHash Hamming ≤ 1; NULL phash →
-    * false). Replay safety is [[mergeAggSnapshot]]'s: a replayed batch
-    * re-reads the newest snapshot with bid < id and rewrites its own.
+    * remap merged roots through the old→new map, and commit the batch's
+    * own bid (members + buckets + the verdict output derived from
+    * members by the batch query's election: canonical = longest text,
+    * tie lowest id; media_match = aHash Hamming ≤ 1; NULL phash →
+    * false). Replay safety is the bid log's: a replayed batch re-reads
+    * the bids below its own and rewrites its own.
     *
     * Honest divergence note: the batch star contraction drops buckets
     * outside [2, 1000] members RETROACTIVELY; an online twin cannot
@@ -540,47 +507,7 @@ object EventStream {
     */
   def crossModalStream(docs: DataFrame, stateDir: String, ckDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", ckDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        mergeCrossModalSnapshot(batch, stateDir, id)
-      }
-      .start()
-
-  /** Delta-dir budget for the cross-modal state: when a batch would be
-    * the XmFoldEvery-th live delta, it FOLDS the whole resolved state
-    * into its own bid instead — the full rewrite the pre-r17 layout
-    * paid EVERY batch now amortizes to 1/XmFoldEvery of batches, and
-    * the per-batch read fan-in (live delta dirs) stays bounded.
-    */
-  private[graft] val XmFoldEvery = 64
-
-  /** Live delta bids of a state subdir for a read strictly below
-    * `bound`: everything from the newest FOLDED snapshot (inclusive —
-    * a fold supersedes all earlier bids) up to bound−1.
-    */
-  private def xmLiveBids(s: org.apache.spark.sql.SparkSession, sub: String,
-      bound: Long): Seq[Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    val ids = snapshotIds(s, sub).filter(_ < bound).sorted
-    val folds = ids.filter(i => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$sub/bid=$i/_folded")))
-    if (folds.isEmpty) ids else ids.filter(_ >= folds.max)
-  }
-
-  /** Union of a subdir's live deltas below `bound`, with the `bid`
-    * partition column retained (basePath read — the verdict upsert
-    * needs it); None when the state is empty.
-    */
-  private def xmRead(s: org.apache.spark.sql.SparkSession, sub: String,
-      bound: Long): Option[org.apache.spark.sql.DataFrame] = {
-    val ids = xmLiveBids(s, sub, bound)
-    if (ids.isEmpty) None
-    else Some(s.read.option("basePath", sub)
-      .parquet(ids.map(i => s"$sub/bid=$i"): _*))
-  }
+    BidLog.stream(docs, ckDir)(mergeCrossModalSnapshot(_, stateDir, _))
 
   /** The canonical election + media verdict over a resolved members
     * frame — the batch query's exact row semantics (cross_modal_check).
@@ -617,7 +544,7 @@ object EventStream {
       s: org.apache.spark.sql.SparkSession, stateDir: String,
       bound: Long): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    xmRead(s, s"$stateDir/verdicts", bound) match {
+    BidLog.readLive(s, s"$stateDir/verdicts", bound) match {
       case None => Seq.empty[(Long, Long, Long, Option[Int], Boolean)]
         .toDF("doc_id", "cluster_id", "canon_id", "hamming", "media_match")
       case Some(v) =>
@@ -642,43 +569,33 @@ object EventStream {
     * is APPEND-ONLY deltas plus a compact remap table, so a batch
     * WRITES only batch-proportional data:
     *
-    *  - `members/bid=<id>`: this batch's docs, stored with their
+    *  - `members`: this batch's docs, stored with their
     *    ARRIVAL root — member rows are immutable forever;
-    *  - `buckets/bid=<id>`: only bucket keys NOT already in the store,
+    *  - `buckets`: only bucket keys NOT already in the store,
     *    with their arrival root — bucket rows are immutable too;
-    *  - `remap/bid=<id>`: the (old_root → current_root) table, fully
-    *    rewritten each batch but MERGE-sized, not state-sized (one row
-    *    per root ever merged away; composition keeps it path-compressed
-    *    so reads resolve in ONE join);
-    *  - `verdicts/bid=<id>`: verdict rows ONLY for clusters this batch
+    *  - `remap`: the (old_root → current_root) table, fully rewritten
+    *    each batch (every remap bid is a fold) but MERGE-sized, not
+    *    state-sized (one row per root ever merged away; composition
+    *    keeps it path-compressed so reads resolve in ONE join);
+    *  - `verdicts`: verdict rows ONLY for clusters this batch
     *    touched (upserts — [[crossModalVerdictsAt]] is the view).
     *
     * State-sided work left per batch: columnar SCANS of the member
     * and bucket views (the bucket (band,bkey) probe and the remap
-    * joins) — no state-sized WRITE. Every XmFoldEvery-th batch FOLDS
-    * the resolved state into its own bid (markers: `_folded`), which
-    * amortizes the old full rewrite to 1/64 of batches and bounds the
-    * delta fan-in. Replay safety is unchanged: batch `id` reads only
-    * bids < id (a crashed attempt's own torn dirs are invisible) and
-    * overwrites its own bid dirs; GC deletes only dirs superseded by a
-    * fold at or below the COMMITTED predecessor, so a replay always
-    * finds its full read chain.
+    * joins) — no state-sized WRITE. Every `foldEvery`-th batch FOLDS
+    * the resolved state into its own bid, which amortizes the old full
+    * rewrite to 1/64 of batches and bounds the delta fan-in. Reads,
+    * commits and GC are the [[graft.core.BidLog]] protocol, per subdir.
     */
   private[graft] def mergeCrossModalSnapshot(
       batch: Dataset[org.apache.spark.sql.Row], stateDir: String,
-      id: Long, foldEvery: Int = XmFoldEvery): Unit = {
+      id: Long, foldEvery: Int = BidLog.FoldEvery): Unit = {
     val s = batch.sparkSession
     import s.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
     val mSub = s"$stateDir/members"; val bSub = s"$stateDir/buckets"
     val vSub = s"$stateDir/verdicts"; val rSub = s"$stateDir/remap"
-    // remap is written every batch, so it is the commit chain marker
-    val prev = latestSnapshotId(s, rSub, id)
-    val remapOld = prev match {
-      case Some(p) => s.read.parquet(s"$rSub/bid=$p")
-      case None => Seq.empty[(Long, Long)].toDF("old_root", "new_root")
-    }
+    val remapOld = BidLog.readLive(s, rSub, id).map(_.drop("bid"))
+      .getOrElse(Seq.empty[(Long, Long)].toDF("old_root", "new_root"))
     def resolve(df: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = {
       val others = df.columns.filter(_ != "root").toSeq
@@ -687,11 +604,11 @@ object EventStream {
         .select(others.map(c => col(s"x.$c")) :+
           coalesce(col("r.new_root"), col("x.root")).as("root"): _*)
     }
-    val membersOldRaw = xmRead(s, mSub, id)
+    val membersOldRaw = BidLog.readLive(s, mSub, id)
       .map(_.select(col("doc_id"), col("root"), col("n_chars"), col("ph")))
       .getOrElse(Seq.empty[(Long, Long, Long, Option[Long])]
         .toDF("doc_id", "root", "n_chars", "ph"))
-    val bucketsOldRaw = xmRead(s, bSub, id)
+    val bucketsOldRaw = BidLog.readLive(s, bSub, id)
       .map(_.select(col("band"), col("bkey"), col("root")))
       .getOrElse(Seq.empty[(Int, String, Long)].toDF("band", "bkey", "root"))
     val bucketsOld = resolve(bucketsOldRaw)
@@ -761,87 +678,44 @@ object EventStream {
       .select(col("band"), col("bkey"),
         coalesce(col("cluster_id"), col("doc_id")).as("root"))
 
-    val willFold = xmLiveBids(s, mSub, id).size + 1 >= foldEvery
+    val willFold = BidLog.live(s, mSub, id).size + 1 >= foldEvery
     if (!willFold) {
-      newMembers.write.mode("overwrite").parquet(s"$mSub/bid=$id")
-      newBuckets.write.mode("overwrite").parquet(s"$bSub/bid=$id")
+      BidLog.commit(newMembers, mSub, id)
+      BidLog.commit(newBuckets, bSub, id)
       // post-batch members of TOUCHED clusters only (read the written
       // delta back — never recompute the batch phash for the verdicts)
+      val written = BidLog.at(s, mSub, id)
       val membersNow = resolve(membersOldRaw).alias("m")
         .join(rootMap.alias("m3"), col("m.root") === col("m3.old_root"), "left")
         .select(col("m.doc_id"),
           coalesce(col("m3.new_root"), col("m.root")).as("root"),
           col("m.n_chars"), col("m.ph"))
-        .unionByName(s.read.parquet(s"$mSub/bid=$id"))
+        .unionByName(written)
       val touchedRoots = remapDelta.select(col("new_root").as("root"))
-        .unionByName(s.read.parquet(s"$mSub/bid=$id").select(col("root")))
+        .unionByName(written.select(col("root")))
         .distinct()
-      xmElect(membersNow.join(touchedRoots, Seq("root"), "semi"))
-        .write.mode("overwrite").parquet(s"$vSub/bid=$id")
-      remapNew.write.mode("overwrite").parquet(s"$rSub/bid=$id")
+      BidLog.commit(xmElect(membersNow.join(touchedRoots, Seq("root"), "semi")),
+        vSub, id)
+      BidLog.commit(remapNew, rSub, id, fold = true)
     } else {
-      // FOLD: the resolved full state lands in THIS bid (markers make
-      // it supersede every earlier delta); remap resets to empty
-      resolve(membersOldRaw).alias("m")
+      // FOLD: the resolved full state lands in THIS bid, superseding
+      // every earlier delta; remap resets to empty
+      BidLog.commit(resolve(membersOldRaw).alias("m")
         .join(rootMap.alias("m3"), col("m.root") === col("m3.old_root"), "left")
         .select(col("m.doc_id"),
           coalesce(col("m3.new_root"), col("m.root")).as("root"),
           col("m.n_chars"), col("m.ph"))
-        .unionByName(newMembers)
-        .write.mode("overwrite").parquet(s"$mSub/bid=$id")
-      bucketsOld.alias("b")
+        .unionByName(newMembers), mSub, id, fold = true)
+      BidLog.commit(bucketsOld.alias("b")
         .join(rootMap.alias("m4"), col("b.root") === col("m4.old_root"), "left")
         .select(col("b.band"), col("b.bkey"),
           coalesce(col("m4.new_root"), col("b.root")).as("root"))
-        .unionByName(newBuckets)
-        .write.mode("overwrite").parquet(s"$bSub/bid=$id")
-      xmElect(s.read.parquet(s"$mSub/bid=$id"))
-        .write.mode("overwrite").parquet(s"$vSub/bid=$id")
-      Seq.empty[(Long, Long)].toDF("old_root", "new_root")
-        .write.mode("overwrite").parquet(s"$rSub/bid=$id")
-      Seq(mSub, bSub, vSub).foreach { sub =>
-        fs.create(new org.apache.hadoop.fs.Path(s"$sub/bid=$id/_folded"),
-          true).close()
-      }
+        .unionByName(newBuckets), bSub, id, fold = true)
+      BidLog.commit(xmElect(BidLog.at(s, mSub, id)), vSub, id, fold = true)
+      BidLog.commit(Seq.empty[(Long, Long)].toDF("old_root", "new_root"),
+        rSub, id, fold = true)
     }
-    // GC: a replay of THIS batch re-reads bids < id, whose chain starts
-    // at the newest fold ≤ prev — anything below that fold is
-    // superseded and safe to drop; remap needs only the predecessor.
-    prev.foreach { p =>
-      Seq(mSub, bSub, vSub).foreach { sub =>
-        val folds = snapshotIds(s, sub).filter(i => i <= p && fs.exists(
-          new org.apache.hadoop.fs.Path(s"$sub/bid=$i/_folded")))
-        folds.maxOption.foreach { f =>
-          snapshotIds(s, sub).filter(_ < f).foreach { old =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$sub/bid=$old"), true)
-          }
-        }
-      }
-      snapshotIds(s, rSub).filter(_ < p).foreach { old =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$rSub/bid=$old"), true)
-      }
-    }
-  }
-
-  /** All snapshot batch-ids currently in the store. */
-  private def snapshotIds(s: org.apache.spark.sql.SparkSession,
-      stateDir: String): Seq[Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("bid="))
-      .map(_.stripPrefix("bid=")).flatMap(n => n.toLongOption)
-  }
-
-  /** Newest snapshot id STRICTLY below `beforeId` — the `< id` cut is
-    * what makes a replayed batch ignore its own crashed partial write.
-    */
-  private[graft] def latestSnapshotId(s: org.apache.spark.sql.SparkSession,
-      stateDir: String, beforeId: Long): Option[Long] = {
-    val ids = snapshotIds(s, stateDir).filter(_ < beforeId)
-    if (ids.isEmpty) None else Some(ids.max)
+    Seq(mSub, bSub, vSub, rSub).foreach(BidLog.gc(s, _, id))
   }
 
   // ---- persisted ANN store maintenance, streaming twin (round 17) --------
@@ -860,10 +734,10 @@ object EventStream {
     * discipline (identical-code re-embeds write nothing).
     *
     * The batch store's append path is NOT replay-safe (a replayed
-    * append doubles its rows), so the stream uses the
-    * [[idempotentParquetSink]] discipline instead: each batch
-    * OVERWRITES its own `adds/bid=<id>` and `tombs/bid=<id>` delta
-    * dirs. The read view ([[annStoreStreamView]]) unions base +
+    * append doubles its rows), so the stream keeps its deltas in the
+    * [[graft.core.BidLog]] instead: each batch commits its own bid of
+    * `adds` and of `tombs` (whose live range follows the `adds` folds).
+    * The read view ([[annStoreStreamView]]) unions base +
     * add-deltas and masks tombstones TEMPORALLY — a tombstone kills
     * only (band, vec_id, code) rows with bid ≤ its own — which the
     * batch store's plain code-keyed mask cannot express: a delete
@@ -875,21 +749,7 @@ object EventStream {
     */
   def annStoreMaintainStream(events: DataFrame, stateDir: String,
       ckDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", ckDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        mergeAnnStoreBatch(batch, stateDir, id)
-      }
-      .start()
-
-  /** Delta-dir budget for the ANN stream store: when a batch would be
-    * the AnnFoldEvery-th live add-delta, it FOLDS the resolved view
-    * into its own bid instead (the [[XmFoldEvery]] discipline) — the
-    * per-batch read fan-in stays bounded, and the state-sized rewrite
-    * amortizes to 1/AnnFoldEvery of batches.
-    */
-  private[graft] val AnnFoldEvery = 64
+    BidLog.stream(events, ckDir)(mergeAnnStoreBatch(_, stateDir, _))
 
   /** One micro-batch of the ANN store maintenance fold (factored out so
     * the spec can drive and REPLAY batches directly). See
@@ -897,17 +757,13 @@ object EventStream {
     * zero-event op still writes a schema-bearing part file, so the
     * view's delta read never hits an unreadable empty dir (deltas are
     * batch-sized; the FOLD write keeps natural partitioning — it is
-    * the state-sized rewrite the budget amortizes). GC runs against
-    * the newest fold at-or-below the PREDECESSOR bid: a replay of this
-    * batch re-reads only bids from that fold on, so everything older
-    * is superseded and safe to drop.
+    * the state-sized rewrite the budget amortizes).
     */
   private[graft] def mergeAnnStoreBatch(
       batch: Dataset[org.apache.spark.sql.Row], stateDir: String,
-      id: Long, foldEvery: Int = AnnFoldEvery): Unit = {
+      id: Long, foldEvery: Int = BidLog.FoldEvery): Unit = {
     val s = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
+    val addSub = s"$stateDir/adds"; val tombSub = s"$stateDir/tombs"
     val layout = s.read.parquet(s"$stateDir/base/_layout")
     def codesOf(vs: DataFrame): DataFrame =
       graft.ops.Extended.embBandCodesPinned(vs, layout)
@@ -924,53 +780,35 @@ object EventStream {
     val changed = upsOld.join(upsNew, Seq("vec_id", "band"))
       .filter(col("code_old") =!= col("code"))
       .localCheckpoint() // both delta sinks read it; batch-sized
-    val willFold =
-      xmLiveBids(s, s"$stateDir/adds", id).size + 1 >= foldEvery
+    val willFold = BidLog.live(s, addSub, id).size + 1 >= foldEvery
     if (!willFold) {
-      adds.unionByName(changed.select(col("vec_id"), col("code"), col("band")))
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$stateDir/adds/bid=$id")
-      dels.unionByName(
-          changed.select(col("vec_id"), col("code_old").as("code"),
-            col("band")))
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$stateDir/tombs/bid=$id")
+      BidLog.commit(
+        adds.unionByName(changed.select(col("vec_id"), col("code"), col("band")))
+          .repartition(1), addSub, id)
+      BidLog.commit(
+        dels.unionByName(changed.select(col("vec_id"),
+            col("code_old").as("code"), col("band")))
+          .repartition(1), tombSub, id)
     } else {
       // FOLD: resolve the pre-batch view (reads only bids < id — a
       // crashed own write is never an input, so replaying the fold
       // recomputes it bit-identically), apply this batch's net effect,
-      // land everything in THIS bid; the marker makes it supersede
-      // base and every earlier delta/tombstone.
+      // land everything in THIS bid, superseding base and every earlier
+      // delta/tombstone.
       val kill = dels.unionByName(
         changed.select(col("vec_id"), col("code_old").as("code"),
           col("band")))
-      annStoreStreamViewAt(s, stateDir, id)
+      BidLog.commit(annStoreStreamViewAt(s, stateDir, id)
         .join(kill.select(col("band"), col("vec_id"), col("code")),
           Seq("band", "vec_id", "code"), "left_anti")
         .select(col("band"), col("code"), col("vec_id"))
         .unionByName(adds.select(col("band"), col("code"), col("vec_id")))
         .unionByName(changed.select(col("band"), col("code"), col("vec_id")))
-        .select(col("vec_id"), col("code"), col("band"))
-        .write.mode("overwrite").parquet(s"$stateDir/adds/bid=$id")
-      dels.limit(0).repartition(1)
-        .write.mode("overwrite").parquet(s"$stateDir/tombs/bid=$id")
-      fs.create(new org.apache.hadoop.fs.Path(
-        s"$stateDir/adds/bid=$id/_folded"), true).close()
+        .select(col("vec_id"), col("code"), col("band")), addSub, id,
+        fold = true)
+      BidLog.commit(dels.limit(0).repartition(1), tombSub, id)
     }
-    // GC, keyed on the committed predecessor's newest fold
-    snapshotIds(s, s"$stateDir/adds").filter(_ < id).maxOption.foreach { p =>
-      val folds = snapshotIds(s, s"$stateDir/adds").filter(i => i <= p &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"$stateDir/adds/bid=$i/_folded")))
-      folds.maxOption.foreach { f =>
-        Seq("adds", "tombs").foreach { sub =>
-          snapshotIds(s, s"$stateDir/$sub").filter(_ < f).foreach { old =>
-            fs.delete(new org.apache.hadoop.fs.Path(
-              s"$stateDir/$sub/bid=$old"), true)
-          }
-        }
-      }
-    }
+    BidLog.gc(s, addSub, id, tombSub)
   }
 
   /** The stream-maintained store's LIVE read view: base rows (bid −1)
@@ -989,30 +827,19 @@ object EventStream {
   private[graft] def annStoreStreamViewAt(
       s: org.apache.spark.sql.SparkSession, stateDir: String,
       bound: Long): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
     val addSub = s"$stateDir/adds"
-    val tombSub = s"$stateDir/tombs"
-    val addIds0 = snapshotIds(s, addSub).filter(_ < bound).sorted
-    val foldOpt = addIds0.filter(i => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$addSub/bid=$i/_folded"))).maxOption
-    val addIds = foldOpt.map(f => addIds0.filter(_ >= f)).getOrElse(addIds0)
-    def rd(sub: String, ids: Seq[Long]): Option[DataFrame] =
-      if (ids.isEmpty) None
-      else Some(s.read.option("basePath", sub)
-        .parquet(ids.map(i => s"$sub/bid=$i"): _*)
-        .select(col("band").cast("int").as("band"), col("code"),
+    val fold = BidLog.newestFold(s, addSub, bound)
+    def rd(sub: String): Option[DataFrame] =
+      BidLog.read(s, sub, BidLog.live(s, sub, bound, fold))
+        .map(_.select(col("band").cast("int").as("band"), col("code"),
           col("vec_id"), col("bid").cast("long").as("bid")))
     val baseOpt =
-      if (foldOpt.isDefined) None
+      if (fold.isDefined) None
       else Some(s.read.parquet(s"$stateDir/base")
         .select(col("band").cast("int").as("band"), col("code"),
           col("vec_id"), lit(-1L).as("bid")))
-    val phys = (baseOpt.toSeq ++ rd(addSub, addIds).toSeq)
-      .reduce(_ unionByName _)
-    val tombIds = snapshotIds(s, tombSub).filter(_ < bound).sorted
-      .filter(i => foldOpt.forall(i >= _))
-    rd(tombSub, tombIds) match {
+    val phys = (baseOpt.toSeq ++ rd(addSub).toSeq).reduce(_ unionByName _)
+    rd(s"$stateDir/tombs") match {
       case None => phys.select(col("band"), col("code"), col("vec_id"))
       case Some(t) =>
         val tmax = t.groupBy(col("band"), col("vec_id"), col("code"))

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.BidLog
 import graft.ops.Extended
 import graft.streaming.EventStream
 import graft.tools.Run.time
@@ -78,7 +79,7 @@ object AnnLifecycle {
       Extended.annSearchStoreWrite(spark, all, search)
     }
     val (_, tSearch) = time("store search (fixed query batch)") {
-      Extended.annStoreSearchFrom(spark, all, search).count()
+      Extended.annStoreSearchDir(spark, all, search).count()
     }
     println(f"[ann-lifecycle] search/build ratio ${tSearch / tBuild}%.2f " +
       "(a fresh-recode search pays ~the build row per query batch)")
@@ -88,10 +89,10 @@ object AnnLifecycle {
     def recallOf(res: DataFrame): Double =
       res.select(col("q_id"), col("nn_id"))
         .join(brute, Seq("q_id", "nn_id"), "semi").count() / nTruth
-    def multiProbe = Extended.annStoreSearchFrom(spark, all, search,
+    def multiProbe = Extended.annStoreSearchDir(spark, all, search,
       flipBits = Extended.EmbBits)
     val (_, tMp) = time("store search, multi-probe (9x list)")(multiProbe.count())
-    val rEx = recallOf(Extended.annStoreSearchFrom(spark, all, search))
+    val rEx = recallOf(Extended.annStoreSearchDir(spark, all, search))
     println(f"[ann-lifecycle] recall@5 exact $rEx%.3f -> multi-probe " +
       f"${recallOf(multiProbe)}%.3f (mp/exact search time ${tMp / tSearch}%.2f)")
   }
@@ -163,8 +164,8 @@ object AnnLifecycle {
       }._2
     }
     val foldK = 7 // the 8th live delta triggers the fold at foldEvery=8
-    require(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$store/adds/bid=$foldK/_folded")), "expected fold did not happen")
+    require(BidLog.isFold(spark, s"$store/adds", foldK),
+      "expected fold did not happen")
     val nonFold = secs.patch(foldK, Nil, 1).sorted
     println(f"[ann-lifecycle] non-fold batch median ${
       nonFold(nonFold.length / 2)}%.2f s, fold batch ${secs(foldK)}%.2f s")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * from the state-proportional work. Since r17 the state layout is
   * append-only deltas + a compact remap table (the full members/buckets/
   * verdicts OVERWRITE this probe measured at ~2.3 s/decade in r16 is
-  * gone — amortized into the 1/XmFoldEvery fold); the remaining
+  * gone — amortized into the 1/BidLog.FoldEvery fold); the remaining
   * state-sided terms are the columnar member/bucket view SCANS.
   *
   * Usage: Run crossmodal <sfDir>

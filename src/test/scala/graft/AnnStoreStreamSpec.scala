@@ -38,11 +38,8 @@ class AnnStoreStreamSpec extends SparkSpec {
 
     val all = ops.Extended.vecs(spark, sfDir).select(col("vec_id"), col("v"))
     val corpus = all.filter(col("vec_id") % 10 < 8)
-    ops.Extended.embBandCodesPinned(corpus, ops.Extended.embLayoutOf(corpus))
-      .select(col("vec_id"), col("code").cast("long").as("code"), col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/base")
-    ops.Extended.embLayoutOf(corpus)
-      .write.mode("overwrite").parquet(s"$dir/base/_layout")
+    ops.Extended.annBandStoreBuild(corpus, ops.Extended.embLayoutOf(corpus),
+      s"$dir/base")
 
     val vmap = all.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
@@ -106,11 +103,8 @@ class AnnStoreStreamSpec extends SparkSpec {
 
     val all = ops.Extended.vecs(spark, sfDir).select(col("vec_id"), col("v"))
     val corpus = all.filter(col("vec_id") % 10 < 8)
-    ops.Extended.embBandCodesPinned(corpus, ops.Extended.embLayoutOf(corpus))
-      .select(col("vec_id"), col("code").cast("long").as("code"), col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/base")
-    ops.Extended.embLayoutOf(corpus)
-      .write.mode("overwrite").parquet(s"$dir/base/_layout")
+    ops.Extended.annBandStoreBuild(corpus, ops.Extended.embLayoutOf(corpus),
+      s"$dir/base")
 
     val vmap = all.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
@@ -173,5 +167,20 @@ class AnnStoreStreamSpec extends SparkSpec {
     fold3(b3, 3L)
     assert(canon(EventStream.annStoreStreamView(spark, dir)) === netAt(true),
       "replaying the post-fold batch changed the view")
+    // crash mid-commit of the next batch, b4 = delete resId again (the
+    // 3rd live delta, so a FOLD): its fold data and marker sit staged but
+    // uncommitted — the view must not see them, and the replay commits
+    val b4 = Seq(ev("del", resId, vmap(resId)))
+    core.BidLog.stage(EventStream.annStoreStreamView(spark, dir)
+      .filter(col("vec_id") =!= resId)
+      .select(col("vec_id"), col("code"), col("band")),
+      s"$dir/adds", 4L, fold = true)
+    assert(canon(EventStream.annStoreStreamView(spark, dir)) === netAt(true),
+      "uncommitted fold data changed the view")
+    fold3(b4, 4L)
+    assert(core.BidLog.isFold(spark, s"$dir/adds", 4L),
+      "replaying the crashed batch did not commit its fold")
+    assert(canon(EventStream.annStoreStreamView(spark, dir)) === netAt(false),
+      "replaying the crashed batch diverged from the net rebuild")
   }
 }

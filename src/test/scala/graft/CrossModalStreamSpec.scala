@@ -120,7 +120,7 @@ class CrossModalStreamSpec extends SparkSpec {
 
   test("FOLD: state folds into one bid; replay around the fold + GC keep parity") {
     // r17 layout: the 3rd live delta triggers the fold (foldEvery=3
-    // here; XmFoldEvery=64 in production). The folding batch must
+    // here; BidLog.FoldEvery=64 in production). The folding batch must
     // supersede every earlier delta, a REPLAY of the folding batch must
     // still find its pre-fold read chain (GC keys on the COMMITTED
     // predecessor, never on the replayed batch's own fold), and the
@@ -176,7 +176,7 @@ class CrossModalStreamSpec extends SparkSpec {
     val after = EventStream.crossModalVerdicts(spark, stateDir)
       .as[(Long, Long, Long, Option[Int], Boolean)].collect().toSet
     assert(after === before, "empty batch changed the verdict view")
-    assert(EventStream.latestSnapshotId(spark, s"$stateDir/remap", 2L)
+    assert(graft.core.BidLog.latest(spark, s"$stateDir/remap", 2L)
       === Some(1L), "empty batch did not advance the remap chain")
     assert(before === batchWant(sfDir))
   }

@@ -1,16 +1,12 @@
 package graft
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
 /** Native codegen DotProduct vs the interpreted HOF formulation. */
 class DotProductSpec extends SparkSpec {
   import spark.implicits._
 
-  private def setup(): Unit = VectorFunctions.register(spark)
-
   test("graft_dot: matches aggregate/zip_with bit-for-bit") {
-    setup()
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (Seq(0.1, -0.2), Seq(0.3, 0.7)),
@@ -27,13 +23,11 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot: null propagation") {
-    setup()
     val df = Seq((Some(Seq(1.0)), None: Option[Seq[Double]])).toDF("a", "b")
     assert(df.select(expr("graft_dot(a, b)")).head().isNullAt(0))
   }
 
   test("graft_dot: ragged lengths and null elements yield null, like the HOF") {
-    setup()
     val df = Seq(
       (Seq(Option(1.0), Option(2.0)), Seq(Option(3.0))),             // ragged
       (Seq(Option(1.0), None), Seq(Option(3.0), Option(4.0))),       // null elem
@@ -50,7 +44,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot: rejects non-double arrays at analysis") {
-    setup()
     val df = Seq((Seq(1, 2), Seq(3, 4))).toDF("a", "b")
     intercept[Exception] {
       df.select(expr("graft_dot(a, b)")).collect()
@@ -58,7 +51,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot: survives whole-stage codegen path on a real scan") {
-    setup()
     val n = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .select(expr("graft_dot(v, v)").as("d"))

@@ -180,7 +180,7 @@ class EventStreamSpec extends SparkSpec {
 
   /** Read the newest state snapshot the maintenance stream produced. */
   private def latestAggSnapshot(stateDir: String) = {
-    val id = EventStream.latestSnapshotId(spark, stateDir, Long.MaxValue)
+    val id = graft.core.BidLog.latest(spark, stateDir, Long.MaxValue)
       .getOrElse(fail(s"no snapshot in $stateDir"))
     spark.read.parquet(s"$stateDir/bid=$id")
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{NfcUtil, VectorFunctions}
+import graft.functions.NfcUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -10,10 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 class NfcSpec extends SparkSpec {
   import spark.implicits._
 
-  private def setup(): Unit = VectorFunctions.register(spark)
-
   test("graft_nfc: composes decomposed sequences; idempotent; ASCII untouched") {
-    setup()
     val df = Seq(
       "café",        // e + combining acute -> é
       "café",         // already composed
@@ -36,7 +33,6 @@ class NfcSpec extends SparkSpec {
   }
 
   test("graft_nfc: null propagates; already-NFC input is returned zero-copy") {
-    setup()
     val df = Seq(Option("x"), None).toDF("s")
     val got = df.select(expr("graft_nfc(s)")).collect()
     assert(got.exists(_.isNullAt(0)))

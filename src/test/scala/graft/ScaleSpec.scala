@@ -590,6 +590,26 @@ class ScaleSpec extends SparkSpec {
       s"SparkSession.builder outside graft.core.Session:\n${offenders.mkString("\n")}")
   }
 
+  test("one bid log: bid dirs and fold markers named only in graft.core.BidLog") {
+    // Every streamed state store reads, folds, commits and GCs through
+    // core.BidLog; a store that spells a bid path or a fold marker
+    // itself has its own copy of the protocol, outside its one commit.
+    val log = java.nio.file.Paths.get("src/main/scala/graft/core/BidLog.scala")
+    val offenders = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != log)
+      .flatMap { p =>
+        Files.readString(p).linesIterator.zipWithIndex.collect {
+          case (l, i) if l.contains("bid=") || l.contains("_folded") =>
+            s"$p:${i + 1}: ${l.trim}"
+        }
+      }
+      .toSeq
+    assert(Files.readString(log).contains("bid="))
+    assert(offenders.isEmpty,
+      s"bid-log names outside graft.core.BidLog:\n${offenders.mkString("\n")}")
+  }
+
   test("pinning queries leave no cache entries after Pin.releaseAll") {
     // Functional half of the discipline: run the heaviest pinning
     // queries end-to-end, then release — the session CacheManager must

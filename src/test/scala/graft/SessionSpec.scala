@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** core.Session.local, the one session builder: its confs, and the
-  * engine's functions resolving through the installed extensions alone.
+  * engine's four `graft_` functions resolving through the installed
+  * extensions alone.
   */
 class SessionSpec extends AnyFunSuite {
   test("Session.local: UTC, partitions = cores, codegen cache, graft_dot without register") {
@@ -24,6 +25,13 @@ class SessionSpec extends AnyFunSuite {
       val d = s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
         .head().getDouble(0)
       assert(d === 11.0)
+      // the other three graft_ functions resolve the same way
+      val decomposed = "cafe\u0301"
+      val r = s.sql(s"""SELECT graft_nfc('$decomposed') AS n,
+        graft_might_contain((SELECT graft_bloom_agg(xxhash64(id), 100L, 800L)
+          FROM range(3)), xxhash64(1L)) AS hit""").head()
+      assert(r.getString(0) === "caf\u00e9")
+      assert(r.getBoolean(1))
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
