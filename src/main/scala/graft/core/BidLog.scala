@@ -4,9 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
-/** The bid log: the one exactly-once protocol under the streamed state
-  * stores (EventStream's incremental aggregate, cross-modal union-find
-  * and ANN band store) and its idempotent parquet sink. A store subdir
+/** The bid log: the one exactly-once protocol under the state stores
+  * (EventStream's incremental aggregate and cross-modal union-find, and
+  * the ANN band store every ANN lifecycle step commits to) and
+  * EventStream's idempotent parquet sink. A store subdir
   * holds one `bid=<id>` dir per micro-batch id; the stores keep their
   * own data semantics and call this module for everything else:
   *
@@ -34,8 +35,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   *    replay of `id` reads from that fold on, and earlier batches are
   *    committed. Steady-state fan-in is bounded by the fold cadence.
   *
-  * One bid is one rename; a batch that writes several subdirs commits
-  * them one rename at a time.
+  * One bid is one rename. Every store but one writes a single subdir
+  * per batch, so a batch is one commit; the cross-modal store writes
+  * four (`members`/`buckets`/`verdicts`/`remap`) and commits them one
+  * rename at a time.
   */
 object BidLog {
 
@@ -89,16 +92,13 @@ object BidLog {
   def newestFold(s: SparkSession, sub: String, bound: Long): Option[Long] =
     ids(s, sub).filter(_ < bound).reverseIterator.find(isFold(s, sub, _))
 
-  /** Bids of `sub` below `bound` from `from` (inclusive) on — the live
-    * range when `from` is the newest fold of the store's fold chain.
+  /** The live range of `sub` below `bound`: its bids from its newest
+    * fold (inclusive) on.
     */
-  def live(s: SparkSession, sub: String, bound: Long,
-      from: Option[Long]): Seq[Long] =
+  def live(s: SparkSession, sub: String, bound: Long): Seq[Long] = {
+    val from = newestFold(s, sub, bound)
     ids(s, sub).filter(i => i < bound && from.forall(i >= _))
-
-  /** The live range of `sub` below `bound`, from its own newest fold. */
-  def live(s: SparkSession, sub: String, bound: Long): Seq[Long] =
-    live(s, sub, bound, newestFold(s, sub, bound))
+  }
 
   /** Union of bids `ids` of `sub` with the `bid` column kept (basePath
     * read); None when `ids` is empty.
@@ -139,17 +139,14 @@ object BidLog {
       throw new java.io.IOException(s"bid commit failed: $staged -> $dst")
   }
 
-  /** GC after batch `id` committed: drop every bid of `chain` and of the
-    * `followers` (subdirs whose live range starts at `chain`'s fold)
-    * below `chain`'s newest fold at or below the committed predecessor.
+  /** GC after batch `id` committed: drop every bid of `sub` below its
+    * newest fold at or below the committed predecessor.
     */
-  def gc(s: SparkSession, chain: String, id: Long, followers: String*): Unit =
-    latest(s, chain, id).flatMap(p => newestFold(s, chain, p + 1)).foreach { f =>
-      (chain +: followers).foreach { sub =>
-        ids(s, sub).filter(_ < f).foreach { old =>
-          val p = dirOf(sub, old)
-          fsOf(s, p).delete(p, true)
-        }
+  def gc(s: SparkSession, sub: String, id: Long): Unit =
+    latest(s, sub, id).flatMap(p => newestFold(s, sub, p + 1)).foreach { f =>
+      ids(s, sub).filter(_ < f).foreach { old =>
+        val p = dirOf(sub, old)
+        fsOf(s, p).delete(p, true)
       }
     }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Pin, QueryDef, Tables, Text}
+import graft.core.{BidLog, Pin, QueryDef, Tables, Text}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1863,36 +1863,32 @@ object Extended {
     * just vec_id (the probe's code-only path).
     */
   /** One-row (nb, nbands) layout frame for a corpus — what a persisted
-    * index stores as its layout version (ann_state_append's `_layout`).
+    * index stores as its layout version (the ANN store's `layout`).
     */
   private[graft] def embLayoutOf(corpus: DataFrame): DataFrame =
     corpus.agg(count(lit(1)).as("nv"))
       .select(expr(nbLadder("nv")).as("nb"),
         expr(nBandsLadder("nv")).as("nbands"))
 
-  /** Layout + corpus count collected in ONE action (round 18, guide
-    * §1.2/§5): a persisted-store BUILD is already a driver-coordinated
-    * sink round-trip, and every init used to run the [[embLayoutOf]]
-    * count subtree twice (once inside the coding crossJoin, once for
-    * the `_layout` write) plus a third full `count()` for the `_stats`
-    * sidecar — three corpus passes for one number. This evaluates the
-    * SAME integer CASE ladders on the count in one `head()` and returns
-    * a LITERAL one-row layout frame (identical schema/values, so the
-    * persisted `_layout` bytes and every code are unchanged) plus
-    * (nbands, n) for the sidecars. The rung choice still comes from the
+  /** The layout collected in ONE action (round 18, guide §1.2/§5): a
+    * persisted-store BUILD is already a driver-coordinated sink
+    * round-trip, and [[embLayoutOf]] in the build's plan would run its
+    * count subtree twice (once inside the coding crossJoin, once for the
+    * layout write). This evaluates the SAME integer CASE ladders on the
+    * count in one `head()` and returns a LITERAL one-row layout frame
+    * (identical schema/values, so the persisted layout bytes and every
+    * code are unchanged). The rung choice still comes from the
     * unmodified in-plan ladder expressions — this is the layout-version
     * pin a production index build performs, not a driver-side plan
     * switch (the store never re-rungs per append by design).
     */
   private[graft] def embLayoutCollect(s: SparkSession,
-      corpus: DataFrame): (DataFrame, Int, Long) = {
+      corpus: DataFrame): DataFrame = {
     val r = corpus.agg(count(lit(1)).as("nv"))
-      .select(col("nv"), expr(nbLadder("nv")).as("nb"),
+      .select(expr(nbLadder("nv")).as("nb"),
         expr(nBandsLadder("nv")).as("nbands"))
       .head()
-    val lf = s.range(1).select(lit(r.getInt(1)).as("nb"),
-      lit(r.getInt(2)).as("nbands"))
-    (lf, r.getInt(2), r.getLong(0))
+    s.range(1).select(lit(r.getInt(0)).as("nb"), lit(r.getInt(1)).as("nbands"))
   }
 
   private def embBanded(vs: DataFrame, payload: Boolean,
@@ -2434,10 +2430,10 @@ object Extended {
     * other ANN query here re-codes the corpus per query. The corpus
     * (vec_id % 10 < 8) is coded once and written as the band-partitioned
     * parquet store (the dedup_state_roundtrip layout: a probe prunes to
-    * its band directories; a refresh replaces bands, not the store);
-    * the new batch (vec_id % 10 >= 8) is then coded and APPENDED into
-    * the band partitions — batch-proportional work, no corpus access
-    * (AnnStateProbe measures it, SCALING.md round 16).
+    * its band directories); the new batch (vec_id % 10 >= 8) is then
+    * coded and committed as one add bid of the store's log
+    * ([[annStoreApply]]) — batch-proportional work, no corpus access
+    * (`Run ann-lifecycle append` measures it, SCALING.md round 16).
     *
     * Layout pinning: the adaptive nb/nBands ladder normally follows the
     * coded frame's count, but a persisted index cannot re-rung per
@@ -2460,12 +2456,9 @@ object Extended {
       val corpus = all.filter(col("vec_id") % 10 < 8)
       val batch = all.filter(col("vec_id") % 10 >= 8)
       // layout collected once for the build (round 18, embLayoutCollect)
-      annBandStoreBuild(corpus, embLayoutCollect(s, corpus)._1, dir)
-      annBandStoreAppend(s, batch, dir)
-      s.read.parquet(dir)
-        .select(col("band").cast("int").as("band"), col("code"),
-          col("vec_id"))
-        .orderBy(col("band"), col("code"), col("vec_id"))
+      annBandStoreBuild(corpus, embLayoutCollect(s, corpus), dir)
+      annStoreApply(annEvents(batch, "add"), dir, annStoreNextBid(s, dir))
+      annStoreView(s, dir).orderBy(col("band"), col("code"), col("vec_id"))
     },
     Some(s"""
       WITH vsrc AS ($sqlVecs),
@@ -2479,32 +2472,195 @@ object Extended {
     """),
     doc = "persisted ANN band-code index: incremental batch append == full rebuild (independent oracle)")
 
+  // ---- the ANN band store: build, lifecycle, view ------------------------
+
   /** Write the band-coded index store of `corpus` at the one-row
-    * (nb, nbands) `layout`: (vec_id, code) rows partitioned by band, and
-    * the layout version persisted WITH the index under `_layout`
-    * (underscore path: hidden from the store read; written AFTER the
-    * store overwrite, which truncates the directory). The one place that
-    * knows this layout; ann_state_append, ann_stream_search's base store
-    * and the ann-lifecycle probe all build through it.
+    * (nb, nbands) `layout` (see [[annStoreWrite]]); ann_state_append,
+    * ann_stream_search and the ann-lifecycle probe build through it.
     */
   private[graft] def annBandStoreBuild(corpus: DataFrame, layout: DataFrame,
+      dir: String): Unit =
+    annStoreWrite(annStoreCodes(corpus, layout), layout, dir)
+
+  /** The ANN band store at `dir` has three subdirs:
+    *
+    *  - `base`: the build's coded (vec_id, code) rows, partitioned by
+    *    band, so a probe's band literals prune to its band dirs;
+    *  - `layout`: the one-row (nb, nbands) layout version. Every later
+    *    coding pins it ([[embBandCodesPinned]]): the store never
+    *    re-rungs, only a rebuild does;
+    *  - `log`: a [[graft.core.BidLog]] of (vec_id, code, band, dead)
+    *    rows. Every lifecycle step — an add/delete/upsert batch
+    *    ([[annStoreApply]]), a compaction ([[annStoreGc]]), a stream
+    *    micro-batch — is one bid and one rename: its live rows
+    *    (dead = false) and tombstones (dead = true) land together, and a
+    *    fold bid holds the whole resolved view.
+    *
+    * The write deletes `dir` first: a query's sink dir outlives the
+    * query in one JVM (graft.Bench runs each query twice), and a stale
+    * `log` bid would leak into the new store's view.
+    */
+  private def annStoreWrite(codes: DataFrame, layout: DataFrame,
       dir: String): Unit = {
-    annBandStoreCodes(corpus, layout)
-      .write.mode("overwrite").partitionBy("band").parquet(dir)
-    layout.write.mode("overwrite").parquet(s"$dir/_layout")
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(codes.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(p, true)
+    codes.write.partitionBy("band").parquet(s"$dir/base")
+    layout.write.parquet(s"$dir/layout")
   }
 
-  /** Append `batch` to the store at `dir`, coded at the store's pinned
-    * `_layout` — batch-proportional work, touching nothing corpus-sized.
-    */
-  private[graft] def annBandStoreAppend(s: SparkSession, batch: DataFrame,
-      dir: String): Unit =
-    annBandStoreCodes(batch, s.read.parquet(s"$dir/_layout"))
-      .write.mode("append").partitionBy("band").parquet(dir)
+  private[graft] def annStoreLayout(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"$dir/layout")
 
-  private def annBandStoreCodes(vs: DataFrame, layout: DataFrame): DataFrame =
+  private def annStoreCodes(vs: DataFrame, layout: DataFrame): DataFrame =
     embBandCodesPinned(vs, layout)
       .select(col("vec_id"), col("code").cast("long").as("code"), col("band"))
+
+  /** The bid after the store's newest one: what a batch caller passes
+    * [[annStoreApply]] (a stream passes its micro-batch id).
+    */
+  private[graft] def annStoreNextBid(s: SparkSession, dir: String): Long =
+    BidLog.latest(s, s"$dir/log", Long.MaxValue).fold(0L)(_ + 1)
+
+  /** `src`'s vectors as lifecycle events (op, vec_id, v, v_old) — see
+    * [[graft.streaming.EventStream.AnnEv]]; `vOld` rides only on ups.
+    */
+  private[graft] def annEvents(src: DataFrame, op: String,
+      v: Column = col("v"),
+      vOld: Column = lit(null).cast("array<double>")): DataFrame =
+    src.select(lit(op).as("op"), col("vec_id"), v.as("v"), vOld.as("v_old"))
+
+  /** Apply one batch of lifecycle events as bid `id` of the store at
+    * `dir`. Only the events are coded, at the store's pinned layout —
+    * never a corpus pass:
+    *
+    *  - add: one live row per band;
+    *  - del: `v` is the STORED vector (delete-time coding; production
+    *    processes takedowns the same way), one tombstone per band;
+    *  - ups: `v_old` → `v`, and only (band, id) slots whose code changed
+    *    are written (a tombstone for the old code, a live row for the
+    *    new), so an identical re-embed writes nothing.
+    *
+    * A batch that would be the `foldEvery`-th live bid folds instead: the
+    * resolved view below `id` with this batch applied, as one fold bid.
+    * Both paths let a batch's tombstone kill its own adds of the same
+    * (band, vec_id, code), as the view's `bid ≤ tbid` mask does, so a
+    * batch's effect never depends on whether it folds. Every read is
+    * below `id`, so a replay of bid `id` (a crash before
+    * the stream's commit) is bit-identical. Non-fold writes
+    * repartition(1): an empty batch still commits a schema-bearing part
+    * file for the view's read.
+    */
+  private[graft] def annStoreApply(events: DataFrame, dir: String,
+      id: Long, foldEvery: Int = BidLog.FoldEvery): Unit = {
+    val s = events.sparkSession
+    val log = s"$dir/log"
+    val layout = annStoreLayout(s, dir)
+    def codesOf(op: String, v: String): DataFrame = annStoreCodes(
+      events.filter(col("op") === op).select(col("vec_id"), col(v).as("v")),
+      layout)
+    val changed = codesOf("ups", "v_old").withColumnRenamed("code", "code_old")
+      .join(codesOf("ups", "v"), Seq("vec_id", "band"))
+      .filter(col("code_old") =!= col("code"))
+      .localCheckpoint() // both row sets read it; batch-sized
+    val adds = codesOf("add", "v")
+      .unionByName(changed.select(col("vec_id"), col("code"), col("band")))
+    val kills = codesOf("del", "v")
+      .unionByName(changed.select(col("vec_id"), col("code_old").as("code"),
+        col("band")))
+    if (BidLog.live(s, log, id).size + 1 < foldEvery)
+      BidLog.commit(adds.withColumn("dead", lit(false))
+        .unionByName(kills.withColumn("dead", lit(true))).repartition(1),
+        log, id)
+    else
+      annStoreFold(annStoreViewAt(s, dir, id).unionByName(adds)
+        .join(kills, Seq("band", "vec_id", "code"), "left_anti"), dir, id)
+    BidLog.gc(s, log, id)
+  }
+
+  /** Commit the resolved (band, code, vec_id) rows `view` as fold bid
+    * `id`: it supersedes base and every earlier bid.
+    */
+  private def annStoreFold(view: DataFrame, dir: String, id: Long): Unit =
+    BidLog.commit(view.select(col("vec_id"), col("code"), col("band"),
+      lit(false).as("dead")), s"$dir/log", id, fold = true)
+
+  /** Compaction trigger: the store folds when its live tombstones reach
+    * 1/[[AnnGcTrigger]] of its live physical rows (integer-exact
+    * comparison `trigger·tombs ≥ rows` — never a float fraction, the
+    * ladder discipline). The LSM amortization argument: every fold
+    * clears ≥ rows/trigger tombstones, so total rewrite IO over the
+    * store's lifetime is ≤ trigger × total deletes — GC cost tracks the
+    * DELETED FRACTION (amortized), never the corpus.
+    */
+  val AnnGcTrigger = 20
+
+  /** GC: at the [[AnnGcTrigger]], commit the resolved view as a fold at
+    * the next bid (BidLog drops the bids below it once a later bid
+    * commits); below it nothing is written and reads keep masking. The
+    * trigger's two counts come back in one driver round-trip.
+    */
+  private[graft] def annStoreGc(s: SparkSession, dir: String): Unit = {
+    val id = annStoreNextBid(s, dir)
+    val (phys, tombs) = annStoreRowsAt(s, dir, id)
+    tombs.foreach { t =>
+      val r = phys.select(lit(0L).as("dead"))
+        .unionByName(t.select(lit(1L).as("dead")))
+        .agg(sum(col("dead")), count(lit(1))).head()
+      val nTombs = r.getLong(0)
+      if (nTombs > 0 && nTombs * AnnGcTrigger >= r.getLong(1) - nTombs) {
+        annStoreFold(annStoreViewAt(s, dir, id), dir, id)
+        BidLog.gc(s, s"$dir/log", id)
+      }
+    }
+  }
+
+  /** The store's LIVE read view of (band, code, vec_id) rows. */
+  private[graft] def annStoreView(s: SparkSession, dir: String): DataFrame =
+    annStoreViewAt(s, dir, Long.MaxValue)
+
+  /** The view below bid `bound`: physical rows minus the TEMPORAL
+    * tombstone mask — a tombstone kills only (band, vec_id, code) rows
+    * of its own bid or earlier. A delete followed by a RE-ADD at the same
+    * embedding (same code) must resurrect the row, and only the bid order
+    * separates those states. The mask ships only keys, never vectors,
+    * and a store without live bids reads base alone.
+    */
+  private[graft] def annStoreViewAt(s: SparkSession, dir: String,
+      bound: Long): DataFrame = {
+    val (phys, tombs) = annStoreRowsAt(s, dir, bound)
+    tombs match {
+      case None => phys.select(col("band"), col("code"), col("vec_id"))
+      case Some(t) =>
+        val tmax = t.groupBy(col("band"), col("vec_id"), col("code"))
+          .agg(max(col("bid")).as("tbid"))
+        phys.join(tmax, Seq("band", "vec_id", "code"), "left")
+          .filter(col("tbid").isNull || col("bid") > col("tbid"))
+          .select(col("band"), col("code"), col("vec_id"))
+    }
+  }
+
+  /** (physical rows, tombstones) below bid `bound`, each
+    * (band, code, vec_id, bid): base (bid −1) unless a fold supersedes
+    * it, plus the live range of the log — None for tombstones when no
+    * bid is live.
+    */
+  private def annStoreRowsAt(s: SparkSession, dir: String,
+      bound: Long): (DataFrame, Option[DataFrame]) = {
+    val log = s"$dir/log"
+    val live = BidLog.live(s, log, bound)
+    val logged = BidLog.read(s, log, live).map(_.select(col("band"),
+      col("code"), col("vec_id"), col("bid").cast("long").as("bid"),
+      col("dead")))
+    val base =
+      if (live.headOption.exists(BidLog.isFold(s, log, _))) None
+      else Some(s.read.parquet(s"$dir/base")
+        .select(col("band").cast("int").as("band"), col("code"),
+          col("vec_id"), lit(-1L).as("bid")))
+    val phys = (base.toSeq ++ logged.map(_.filter(!col("dead")).drop("dead")))
+      .reduce(_ unionByName _)
+    (phys, logged.map(_.filter(col("dead")).drop("dead")))
+  }
 
   /** Hash tables the store-backed search probes (of the store's nbands):
     * the production latency/memory knob — a search client reads a SUBSET
@@ -2515,17 +2671,16 @@ object Extended {
   val AnnProbeTables = 2
 
   /** Write the search-optimized index store for `all` at its pinned
-    * layout: band-partitioned directories, files range-laid and sorted
-    * by code so the probe list's `code IN (...)` skips row groups.
-    * Shared by the registered query and AnnStateProbe's search rows.
+    * layout ([[annStoreWrite]]): band-partitioned directories, files
+    * range-laid and sorted by code so the probe list's `code IN (...)`
+    * skips row groups. Shared by the registered queries and the
+    * ann-lifecycle probe's search rows.
     */
   private[graft] def annSearchStoreWrite(s: SparkSession, all: DataFrame,
-      dir: String): (Int, Long) = {
-    // one layout/count action for the whole build ([[embLayoutCollect]]);
-    // returns (nbands, n) so a `_stats`-keeping init never re-counts
-    val (lf, nbands, n) = embLayoutCollect(s, all)
-    embBandCodesPinned(all, lf)
-      .select(col("vec_id"), col("code").cast("long").as("code"), col("band"))
+      dir: String): Unit = {
+    // one layout/count action for the whole build ([[embLayoutCollect]])
+    val lf = embLayoutCollect(s, all)
+    annStoreWrite(annStoreCodes(all, lf)
       // code the corpus ONCE (round 18): repartitionByRange runs a
       // RangePartitioner sampling job that re-executes its child — the
       // full scan + md5 band coding — before the real shuffle, i.e. two
@@ -2539,16 +2694,13 @@ object Extended {
       // rows, the oracle recomputes from base tables.
       .localCheckpoint()
       .repartitionByRange(col("band"), col("code"))
-      .sortWithinPartitions(col("band"), col("code"))
-      .write.mode("overwrite").partitionBy("band").parquet(dir)
-    lf.write.mode("overwrite").parquet(s"$dir/_layout")
-    (nbands, n)
+      .sortWithinPartitions(col("band"), col("code")), lf, dir)
   }
 
   /** The search leg every store-backed ANN search shares (batch, live,
-    * multi-probe and stream stores): answer the fixed query batch — the
-    * ids of `vs` with vec_id % 100 = 0 and ≤ 20000, coded at the store's
-    * pinned `layout` — from a store `view` of (band, code, vec_id) rows,
+    * multi-probe and stream): answer the fixed query batch — the ids of
+    * `vs` with vec_id % 100 = 0 and ≤ 20000, coded at the store's pinned
+    * layout — from the live [[annStoreView]] of the store at `dir`,
     * scoring candidates against `vs` (vec_id, v, nrm). EAGER: collects
     * the probe list (bounded by the fixed query batch — see
     * [[annStoreSearch]]). With `flipBits = n > 0` each query probes, per
@@ -2557,11 +2709,11 @@ object Extended {
     * exact perturbation set applied to the STORE path; probe-list size
     * stays query-batch-bounded, ≤ (1+n)× the exact list).
     */
-  private[graft] def annStoreSearchFrom(view: DataFrame, layout: DataFrame,
-      vs: DataFrame, flipBits: Int = 0): DataFrame = {
+  private[graft] def annStoreSearchDir(s: SparkSession, vs: DataFrame,
+      dir: String, flipBits: Int = 0): DataFrame = {
     val qraw = embBandCodesPinned(
         vs.filter(col("vec_id") % 100 === 0 && col("vec_id") <= 20000),
-        layout)
+        annStoreLayout(s, dir))
       .filter(col("band") < AnnProbeTables)
       .select(col("vec_id").as("q_id"), col("band"),
         col("code").cast("long").as("code"))
@@ -2579,7 +2731,7 @@ object Extended {
     // row-group skipping) through any tombstone mask on the view
     val probe = qcodes.select(col("band"), col("code")).distinct()
       .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val cands = view
+    val cands = annStoreView(s, dir)
       .where(col("band").isin(probe.map(_._1).distinct.toSeq: _*) &&
         col("code").isin(probe.map(_._2).distinct.toSeq: _*))
       .join(broadcast(qcodes), Seq("band", "code"))
@@ -2609,19 +2761,11 @@ object Extended {
       .orderBy(col("q_id"), col("rn"))
   }
 
-  /** [[annStoreSearchFrom]] over the batch store at `dir`: its live
-    * (tombstone-masked) [[annStoreView]] at its pinned `_layout`.
-    */
-  private[graft] def annStoreSearchDir(s: SparkSession, all: DataFrame,
-      dir: String, flipBits: Int = 0): DataFrame =
-    annStoreSearchFrom(annStoreView(s, dir), s.read.parquet(s"$dir/_layout"),
-      all, flipBits)
-
   /** Store-backed ANN search (r16 verdict task 1 — the consumer the
     * persisted index was missing): every other ANN query re-codes the
     * corpus per query, which at 100 TB is a full re-index per search;
     * this one searches the parquet store `ann_state_append` maintains.
-    * The corpus is coded ONCE at its pinned `_layout` version and
+    * The corpus is coded ONCE at its pinned layout version and
     * written band-partitioned with files RANGE-LAID and sorted by code
     * (tight parquet row-group min/max on `code`), then the fixed ANN
     * query batch is answered from the store alone:
@@ -2651,8 +2795,8 @@ object Extended {
     * corpus vectors without shuffling them; the top-5 rank is
     * `embed_ann_lsh`'s window. Search cost thus tracks PROBE size
     * (probed partitions + matched row groups + candidate buckets), not
-    * corpus size — AnnStateProbe's search rows measure it (SCALING.md
-    * round 17). The ORACLE recomputes the whole search from base tables
+    * corpus size — `Run ann-lifecycle append`'s search rows measure it
+    * (SCALING.md round 17). The ORACLE recomputes the whole search from base tables
     * in DuckDB (no store), so the hash match proves store-backed ≡
     * fresh search. Fixture non-vacuity simulated in DuckDB before
     * wiring (round-4 rule): candidates 15/24/300, top-5 rows 14/20/100
@@ -2690,143 +2834,26 @@ object Extended {
     """),
     doc = "ANN search answered FROM the persisted band store: partition-pruned probes, code row-group skipping (independent fresh-search oracle)")
 
-  // ---- persisted ANN store: deletions + GC (r16 verdict task 3) ----------
-
-  /** Compaction trigger: a band directory is rewritten when its
-    * accumulated tombstones reach 1/[[AnnGcTrigger]] of its physical
-    * rows (integer-exact comparison `trigger·tc ≥ nrows` — never a
-    * float fraction, the ladder discipline). The LSM amortization
-    * argument: every band rewrite clears ≥ nrows/trigger tombstones, so
-    * total rewrite IO over the store's lifetime is ≤ trigger × total
-    * deletes — GC cost tracks the DELETED FRACTION (amortized), never
-    * the corpus. Declared above the query whose oracle interpolates the
-    * stage predicates (round-15 object-init rule).
-    */
-  val AnnGcTrigger = 20
-
-  /** Append a delete batch to the store as TOMBSTONES — one row per
-    * (vec_id, band, code), coded at the store's pinned `_layout` AT
-    * DELETE TIME (while the vector is still retrievable; production
-    * processes takedowns the same way) — strictly batch-proportional:
-    * no store scan, no corpus access. `_tombstones` is an
-    * underscore-prefixed sidecar, invisible to the store's own scans
-    * (the `_layout` discipline).
-    */
-  private[graft] def annStoreDelete(s: SparkSession, deleted: DataFrame,
-      dir: String): Unit = {
-    val layout = s.read.parquet(s"$dir/_layout")
-    embBandCodesPinned(deleted, layout)
-      .select(col("vec_id"), col("code").cast("long").as("code"),
-        col("band").cast("int").as("band"))
-      .write.mode("append").parquet(s"$dir/_tombstones")
-  }
-
-  /** Threshold compaction over the tombstoned store: rewrite ONLY band
-    * partitions whose tombstone count crossed the [[AnnGcTrigger]]
-    * fraction of their physical rows (per-band `_stats` sidecar — no
-    * store scan to count), via staging-write → partition-dir delete →
-    * append; bands under the trigger are NOT touched (their tombstones
-    * stay, masked at read by [[annStoreView]]). The driver round-trips
-    * only band-level aggregates (≤ nbands rows — directory-listing
-    * scale). Sidecar rewrites are materialized BEFORE overwriting their
-    * own paths (the lazy-read-under-overwrite trap).
-    */
-  private[graft] def annStoreGc(s: SparkSession, dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_tombstones"))) return
-    val tomb = s.read.parquet(s"$dir/_tombstones")
-    val stats = s.read.parquet(s"$dir/_stats")
-    val triggered = tomb.groupBy(col("band")).agg(count(lit(1)).as("tc"))
-      .join(stats, Seq("band"))
-      .filter(col("tc") * AnnGcTrigger >= col("nrows"))
-      .select(col("band"), col("tc")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toMap
-    if (triggered.nonEmpty) {
-      val bands = triggered.keys.toSeq
-      val survivors = s.read.parquet(dir)
-        .where(col("band").isin(bands: _*))
-        .join(tomb.filter(col("band").isin(bands: _*))
-          .select(col("band"), col("vec_id"), col("code")),
-          Seq("band", "vec_id", "code"), "left_anti")
-        .select(col("vec_id"), col("code"), col("band"))
-      val staging = s"$dir/_staging"
-      survivors.write.mode("overwrite").partitionBy("band").parquet(staging)
-      bands.foreach(b => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$dir/band=$b"), true))
-      s.read.parquet(staging)
-        .select(col("vec_id"), col("code"), col("band"))
-        .write.mode("append").partitionBy("band").parquet(dir)
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      // sidecars last (round-16 overwrite-order lesson): stats drop the
-      // cleared rows; compacted bands' tombstones are removed
-      import s.implicits._
-      val statRows = stats.collect().map(r => (r.getInt(0), r.getLong(1)))
-      statRows.map { case (b, n) => (b, n - triggered.getOrElse(b, 0L)) }
-        .toSeq.toDF("band", "nrows")
-        .write.mode("overwrite").parquet(s"$dir/_stats")
-      val remaining = tomb.filter(!col("band").isin(bands: _*))
-        .localCheckpoint()
-      remaining.write.mode("overwrite").parquet(s"$dir/_tombstones")
-    }
-  }
-
-  /** The store's LIVE read view: physical rows minus uncompacted
-    * tombstones (a (band, vec_id, code) anti-join against the sidecar —
-    * the masking a tombstoned index serves reads with between
-    * compactions). The key carries `code` so an upsert's fresh row —
-    * same (band, vec_id), new code — outlives its tombstoned
-    * predecessor; for pure deletes the extra key column is inert
-    * (coding is deterministic at the pinned layout, so a delete
-    * tombstone's code always equals the stored row's).
-    */
-  private[graft] def annStoreView(s: SparkSession, dir: String): DataFrame = {
-    val data = s.read.parquet(dir)
-      .select(col("band").cast("int").as("band"), col("code"), col("vec_id"))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_tombstones")))
-      data.join(s.read.parquet(s"$dir/_tombstones")
-        .select(col("band"), col("vec_id"), col("code")),
-        Seq("band", "vec_id", "code"), "left_anti")
-        // the using-join reorders columns to key order — restore the
-        // store's (band, code, vec_id) so both mask branches agree
-        .select(col("band"), col("code"), col("vec_id"))
-    else data
-  }
-
-  /** Build the GC-maintained store: the search-store layout plus the
-    * per-band `_stats` sidecar the compaction trigger reads.
-    */
-  private[graft] def annGcStoreInit(s: SparkSession, all: DataFrame,
-      dir: String): Unit = {
-    // (nbands, n) ride back from the store write (round 18): the old
-    // init re-read `_layout` and re-counted the corpus — two more
-    // actions for numbers the build already had in hand
-    val (nbands, n) = annSearchStoreWrite(s, all, dir)
-    import s.implicits._
-    (0 until nbands).map(b => (b, n)).toDF("band", "nrows")
-      .write.mode("overwrite").parquet(s"$dir/_stats")
-  }
-
   /** ANN store deletions + GC (r16 verdict task 3 — completing the
     * index-maintenance contract append started): takedowns arrive as
     * delete batches; the store must serve correct reads immediately and
     * reclaim space without corpus-proportional per-delete cost. The
     * design is the LSM tombstone pattern:
     *
-    *  - DELETE appends (vec_id, band, code) tombstones coded at the
-    *    store's pinned layout — batch-proportional, no store access;
-    *  - READS mask tombstones with a keyed anti-join ([[annStoreView]]);
-    *  - GC rewrites ONLY band partitions whose tombstone fraction
-    *    crossed the integer trigger (amortized IO ≤ trigger × deletes —
-    *    the "GC cost tracks the deleted fraction" contract, measured by
-    *    AnnStateProbe's gc rows at sf1/sf10, SCALING.md round 17).
+    *  - DELETE commits one bid of (vec_id, band, code) tombstones coded
+    *    at the store's pinned layout ([[annStoreApply]]) —
+    *    batch-proportional, no store access;
+    *  - READS mask tombstones temporally ([[annStoreView]]);
+    *  - GC folds the resolved view into one bid once the tombstone
+    *    fraction crosses the integer trigger ([[annStoreGc]]; amortized
+    *    IO ≤ trigger × deletes — the "GC cost tracks the deleted
+    *    fraction" contract, measured by `Run ann-lifecycle gc` at
+    *    sf1/sf10, SCALING.md round 17).
     *
     * The query runs the full life cycle at both trigger branches: a 1%
     * delete (below trigger: tombstones retained, view masks them — no
-    * data rewrite, asserted physically in AnnGcSpec) then a 10% delete
-    * (cumulative 11% ≥ 5%: every band compacts, tombstones drain). Both
+    * fold, asserted physically in AnnGcSpec) then a 10% delete
+    * (cumulative 11% ≥ 5%: the store folds, no tombstone stays live). Both
     * stage views are emitted; stage 1 is materialized (localCheckpoint)
     * before stage 2 mutates the store. The ORACLE is INDEPENDENT
     * (dedup_state_compact discipline): DuckDB rebuilds each stage's
@@ -2841,12 +2868,14 @@ object Extended {
     (s, d) => {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_gc_store")
       val all = vecs(s, d)
-      annGcStoreInit(s, all, dir)
-      annStoreDelete(s, all.filter(col("vec_id") % 100 === 7), dir)
+      annSearchStoreWrite(s, all, dir)
+      annStoreApply(annEvents(all.filter(col("vec_id") % 100 === 7), "del"),
+        dir, annStoreNextBid(s, dir))
       annStoreGc(s, dir)
       val v1 = annStoreView(s, dir).withColumn("stage", lit(1))
         .localCheckpoint()
-      annStoreDelete(s, all.filter(col("vec_id") % 10 === 3), dir)
+      annStoreApply(annEvents(all.filter(col("vec_id") % 10 === 3), "del"),
+        dir, annStoreNextBid(s, dir))
       annStoreGc(s, dir)
       val v2 = annStoreView(s, dir).withColumn("stage", lit(2))
       v1.unionByName(v2)
@@ -2877,8 +2906,8 @@ object Extended {
     * batch deliberately stays un-GC'd so the masked path, not the
     * compacted one, answers the query), then run the store-backed
     * search: the probed partitions/row groups are pruned exactly as in
-    * [[annStoreSearch]], and the tombstone mask anti-joins ONLY the
-    * probed rows (never a store pass). The ORACLE is an INDEPENDENT
+    * [[annStoreSearch]], and the temporal tombstone mask joins ONLY
+    * the probed rows (never a store pass). The ORACLE is an INDEPENDENT
     * fresh search over the SURVIVING vectors at the ORIGINAL pinned
     * layout — the hash match proves masked-store search ≡ search over
     * a corpus the deletions never touched. (The fixed query batch is
@@ -2890,8 +2919,9 @@ object Extended {
     (s, d) => {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_live_store")
       val all = vecs(s, d)
-      annGcStoreInit(s, all, dir)
-      annStoreDelete(s, all.filter(col("vec_id") % 10 === 3), dir)
+      annSearchStoreWrite(s, all, dir)
+      annStoreApply(annEvents(all.filter(col("vec_id") % 10 === 3), "del"),
+        dir, annStoreNextBid(s, dir))
       annStoreSearchDir(s, all, dir)
     },
     Some(s"""
@@ -2919,64 +2949,18 @@ object Extended {
     """),
     doc = "search the tombstoned store between compactions: masked probe == fresh search over survivors")
 
-  /** Upsert a RE-EMBEDDING batch into the persisted store: the caller
-    * supplies the ids' OLD vectors (what the store indexed) and their
-    * NEW vectors; both are coded at the store's pinned `_layout`, and
-    * only (band, id) slots whose code actually CHANGED are touched —
-    * one tombstone for the old code, one appended row for the new. A
-    * re-embed that lands on the same code (including the common
-    * byte-identical re-embed) writes NOTHING, so upsert IO tracks the
-    * CHANGED-code count — never the batch's full band rows, never the
-    * store. The store never re-rungs (the append path's layout-pinning
-    * seam); `_stats` is bumped by the appended rows per band (collected
-    * first — ≤ nbands rows — before its own overwrite, the
-    * lazy-read-under-overwrite trap). Single-round contract: the caller
-    * owns the OLD vectors (a re-embedding job always does); chaining
-    * upserts of the same id requires feeding the previous round's NEW
-    * vectors back as old — the store itself never needs scanning.
-    */
-  private[graft] def annStoreUpsert(s: SparkSession, oldVecs: DataFrame,
-      newVecs: DataFrame, dir: String): Unit = {
-    val layout = s.read.parquet(s"$dir/_layout")
-    val oldC = embBandCodesPinned(oldVecs, layout)
-      .select(col("vec_id"), col("band").cast("int").as("band"),
-        col("code").cast("long").as("code_old"))
-    val newC = embBandCodesPinned(newVecs, layout)
-      .select(col("vec_id"), col("band").cast("int").as("band"),
-        col("code").cast("long").as("code_new"))
-    val changed = oldC.join(newC, Seq("vec_id", "band"))
-      .filter(col("code_old") =!= col("code_new"))
-      .localCheckpoint() // two sinks + the stats fold read it; batch-sized
-    val appended = changed.groupBy(col("band")).agg(count(lit(1)).as("ap"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    // an all-identical batch writes NOTHING — in particular no empty
-    // `_tombstones` dir, whose existence (schema-less) would break the
-    // view's sidecar read
-    if (appended.isEmpty) return
-    changed.select(col("vec_id"), col("code_old").as("code"), col("band"))
-      .write.mode("append").parquet(s"$dir/_tombstones")
-    changed.select(col("vec_id"), col("code_new").as("code"), col("band"))
-      .write.mode("append").partitionBy("band").parquet(dir)
-    if (appended.nonEmpty) {
-      import s.implicits._
-      val statRows = s.read.parquet(s"$dir/_stats").collect()
-        .map(r => (r.getInt(0), r.getLong(1)))
-      statRows.map { case (b, n) => (b, n + appended.getOrElse(b, 0L)) }
-        .toSeq.toDF("band", "nrows")
-        .write.mode("overwrite").parquet(s"$dir/_stats")
-    }
-  }
-
   /** Persisted ANN store UPSERT — the re-embedding path that closes the
     * store life cycle (append → search → delete/GC → live search →
     * upsert): a production index receives re-embeddings whenever docs
     * are re-processed or the embedding model revs, and must replace the
-    * ids' old postings without re-indexing the corpus. Mechanism in
-    * [[annStoreUpsert]]; the (band, vec_id, code) mask key lets the
-    * fresh row outlive its tombstoned predecessor (a plain
-    * (band, vec_id) key would mask BOTH — the upsert trap the key
-    * carries `code` for; for pure deletes the extra column is inert
-    * because coding is deterministic at the pinned layout). The batch
+    * ids' old postings without re-indexing the corpus. The batch is
+    * one ups bid ([[annStoreApply]]): the caller supplies the ids' OLD
+    * vectors (what the store indexed — a re-embedding job always owns
+    * them) and NEW ones, and only (band, id) slots whose code CHANGED
+    * are written, so upsert IO tracks the changed-code count, never the
+    * batch's full band rows or the store. The (band, vec_id, code) mask
+    * key lets the fresh row outlive its tombstoned predecessor (a plain
+    * (band, vec_id) key would mask BOTH). The batch
     * mixes both real-world branches (fixture non-vacuity simulated in
     * DuckDB BEFORE wiring, round-4 rule — changed/unchanged band rows
     * 52/48, 52/48, 200/200 at the three SFs): ids % 40 == 5 re-embed to
@@ -2995,13 +2979,11 @@ object Extended {
     (s, d) => {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_upsert_store")
       val all = vecs(s, d)
-      annGcStoreInit(s, all, dir)
-      val batchOld = all.filter(col("vec_id") % 20 === 5)
-      val batchNew = batchOld
-        .withColumn("v", when(col("vec_id") % 40 === 5,
-          reverse(col("v"))).otherwise(col("v")))
-        .withColumn("nrm", sqrt(expr(sqlSparkDot("v", "v"))))
-      annStoreUpsert(s, batchOld, batchNew, dir)
+      annSearchStoreWrite(s, all, dir)
+      annStoreApply(annEvents(all.filter(col("vec_id") % 20 === 5), "ups",
+          when(col("vec_id") % 40 === 5, reverse(col("v")))
+            .otherwise(col("v")), col("v")),
+        dir, annStoreNextBid(s, dir))
       annStoreView(s, dir)
         .orderBy(col("band"), col("code"), col("vec_id"))
     },
@@ -3077,8 +3059,9 @@ object Extended {
     * streaming twin was missing (the same gap class r16 flagged for the
     * batch store): build the base index over the corpus rung
     * (vec_id % 10 < 8, pinned layout), drive TWO maintenance
-    * micro-batches through
-    * [[graft.streaming.EventStream.mergeAnnStoreBatch]] — batch 0 adds
+    * micro-batches through [[annStoreApply]] (the fold
+    * [[graft.streaming.EventStream.annStoreMaintainStream]] runs per
+    * micro-batch) — batch 0 adds
     * the % 10 == 8 ids, deletes the corpus's % 10 == 7 ids, and
     * re-embeds % 100 == 11 to reverse(v); batch 1 adds the % 10 == 9
     * ids and RE-ADDS the smallest deleted id verbatim (the
@@ -3101,14 +3084,11 @@ object Extended {
     "ann_stream_search",
     (s, d) => {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_stream_store")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
       val all = vecs(s, d)
       val corpus = all.filter(col("vec_id") % 10 < 8)
       // ONE corpus pass collects layout + resurrection id (round 18):
       // the old path ran the ladder count subtree twice (coding
-      // crossJoin + `_layout` write) plus a separate min() scan
+      // crossJoin + layout write) plus a separate min() scan
       val pre = corpus.agg(count(lit(1)).as("nv"),
           min(when(col("vec_id") % 10 === 7, col("vec_id"))).as("rid"))
         .select(col("nv"), expr(nbLadder("nv")).as("nb"),
@@ -3117,30 +3097,22 @@ object Extended {
       val lf = s.range(1).select(lit(pre.getInt(1)).as("nb"),
         lit(pre.getInt(2)).as("nbands"))
       val resId = pre.getLong(3)
-      annBandStoreBuild(corpus, lf, s"$dir/base")
-      val nullV = lit(null).cast("array<double>")
-      def evs(src: DataFrame, op: String, newV: Column,
-          oldV: Column): DataFrame =
-        src.select(lit(op).as("op"), col("vec_id"), newV.as("v"),
-          oldV.as("v_old"))
-      val b0 = evs(all.filter(col("vec_id") % 10 === 8), "add",
-          col("v"), nullV)
-        .unionByName(evs(corpus.filter(col("vec_id") % 10 === 7), "del",
-          col("v"), nullV))
-        .unionByName(evs(all.filter(col("vec_id") % 100 === 11), "ups",
+      annBandStoreBuild(corpus, lf, dir)
+      val b0 = annEvents(all.filter(col("vec_id") % 10 === 8), "add")
+        .unionByName(annEvents(corpus.filter(col("vec_id") % 10 === 7), "del"))
+        .unionByName(annEvents(all.filter(col("vec_id") % 100 === 11), "ups",
           reverse(col("v")), col("v")))
-      val b1 = evs(all.filter(col("vec_id") % 10 === 9 ||
-        col("vec_id") === resId), "add", col("v"), nullV)
-      graft.streaming.EventStream.mergeAnnStoreBatch(b0, dir, 0L)
-      graft.streaming.EventStream.mergeAnnStoreBatch(b1, dir, 1L)
+      val b1 = annEvents(all.filter(col("vec_id") % 10 === 9 ||
+        col("vec_id") === resId), "add")
+      annStoreApply(b0, dir, 0L)
+      annStoreApply(b1, dir, 1L)
       // the NET vector set — what the maintained store now indexes
       val finalVecs = all
         .filter(col("vec_id") % 10 =!= 7 || col("vec_id") === resId)
         .withColumn("v", when(col("vec_id") % 100 === 11,
           reverse(col("v"))).otherwise(col("v")))
         .withColumn("nrm", sqrt(expr(sqlSparkDot("v", "v"))))
-      annStoreSearchFrom(graft.streaming.EventStream.annStoreStreamView(s, dir),
-        s.read.parquet(s"$dir/base/_layout"), finalVecs)
+      annStoreSearchDir(s, finalVecs, dir)
     },
     Some(s"""
       WITH vraw AS ($sqlVecs),

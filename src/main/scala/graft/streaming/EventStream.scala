@@ -718,137 +718,22 @@ object EventStream {
     Seq(mSub, bSub, vSub, rSub).foreach(BidLog.gc(s, _, id))
   }
 
-  // ---- persisted ANN store maintenance, streaming twin (round 17) --------
+  // ---- persisted ANN store maintenance stream (round 17) -----------------
 
-  /** Streaming twin of the persisted ANN store's maintenance ops
-    * (ops/Extended.scala: ann_state_append / ann_store_gc /
-    * ann_store_upsert): vector lifecycle events — add / delete /
-    * re-embed — arrive on a stream and fold into the index
-    * incrementally, so the store a search client reads is never more
-    * than one micro-batch stale. Events carry the vectors themselves
-    * (op = 'add': v; 'del': v = the STORED vector — the delete-time
-    * coding contract [[graft.ops.Extended.annStoreDelete]] already
-    * uses; 'ups': v_old + v), and every batch codes ONLY its events at
-    * the BASE store's pinned `_layout` — never a corpus pass, never a
-    * store re-rung. Upserts keep the batch path's changed-only
-    * discipline (identical-code re-embeds write nothing).
-    *
-    * The batch store's append path is NOT replay-safe (a replayed
-    * append doubles its rows), so the stream keeps its deltas in the
-    * [[graft.core.BidLog]] instead: each batch commits its own bid of
-    * `adds` and of `tombs` (whose live range follows the `adds` folds).
-    * The read view ([[annStoreStreamView]]) unions base +
-    * add-deltas and masks tombstones TEMPORALLY — a tombstone kills
-    * only (band, vec_id, code) rows with bid ≤ its own — which the
-    * batch store's plain code-keyed mask cannot express: a delete
-    * followed by a RE-ADD at the same embedding (same code) must
-    * resurrect the row, and only the bid order separates those states.
-    * AnnStoreStreamSpec plants exactly that adversary, proves exact
-    * parity with a from-scratch coding of the net final vector set,
-    * and replays a batch to prove idempotence.
+  /** Streaming maintenance of the persisted ANN band store
+    * (ops/Extended.scala): vector lifecycle events — add / delete /
+    * re-embed, see [[AnnEv]] — arrive on a stream, and each micro-batch
+    * is one [[graft.ops.Extended.annStoreApply]] at its batch id, so the
+    * store a search client reads ([[graft.ops.Extended.annStoreView]])
+    * is never more than one micro-batch stale. The batch lifecycle
+    * queries (ann_state_append / ann_store_gc / ann_store_upsert) commit
+    * through the same call; AnnStoreStreamSpec proves net-final rebuild
+    * parity, replay idempotence and the delete→re-add resurrection.
     */
   def annStoreMaintainStream(events: DataFrame, stateDir: String,
       ckDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    BidLog.stream(events, ckDir)(mergeAnnStoreBatch(_, stateDir, _))
-
-  /** One micro-batch of the ANN store maintenance fold (factored out so
-    * the spec can drive and REPLAY batches directly). See
-    * [[annStoreMaintainStream]]. Delta writes repartition(1): a
-    * zero-event op still writes a schema-bearing part file, so the
-    * view's delta read never hits an unreadable empty dir (deltas are
-    * batch-sized; the FOLD write keeps natural partitioning — it is
-    * the state-sized rewrite the budget amortizes).
-    */
-  private[graft] def mergeAnnStoreBatch(
-      batch: Dataset[org.apache.spark.sql.Row], stateDir: String,
-      id: Long, foldEvery: Int = BidLog.FoldEvery): Unit = {
-    val s = batch.sparkSession
-    val addSub = s"$stateDir/adds"; val tombSub = s"$stateDir/tombs"
-    val layout = s.read.parquet(s"$stateDir/base/_layout")
-    def codesOf(vs: DataFrame): DataFrame =
-      graft.ops.Extended.embBandCodesPinned(vs, layout)
-        .select(col("vec_id"), col("code").cast("long").as("code"),
-          col("band").cast("int").as("band"))
-    val adds = codesOf(batch.filter(col("op") === "add")
-      .select(col("vec_id"), col("v")))
-    val dels = codesOf(batch.filter(col("op") === "del")
-      .select(col("vec_id"), col("v")))
-    val ups = batch.filter(col("op") === "ups")
-    val upsOld = codesOf(ups.select(col("vec_id"), col("v_old").as("v")))
-      .withColumnRenamed("code", "code_old")
-    val upsNew = codesOf(ups.select(col("vec_id"), col("v")))
-    val changed = upsOld.join(upsNew, Seq("vec_id", "band"))
-      .filter(col("code_old") =!= col("code"))
-      .localCheckpoint() // both delta sinks read it; batch-sized
-    val willFold = BidLog.live(s, addSub, id).size + 1 >= foldEvery
-    if (!willFold) {
-      BidLog.commit(
-        adds.unionByName(changed.select(col("vec_id"), col("code"), col("band")))
-          .repartition(1), addSub, id)
-      BidLog.commit(
-        dels.unionByName(changed.select(col("vec_id"),
-            col("code_old").as("code"), col("band")))
-          .repartition(1), tombSub, id)
-    } else {
-      // FOLD: resolve the pre-batch view (reads only bids < id — a
-      // crashed own write is never an input, so replaying the fold
-      // recomputes it bit-identically), apply this batch's net effect,
-      // land everything in THIS bid, superseding base and every earlier
-      // delta/tombstone.
-      val kill = dels.unionByName(
-        changed.select(col("vec_id"), col("code_old").as("code"),
-          col("band")))
-      BidLog.commit(annStoreStreamViewAt(s, stateDir, id)
-        .join(kill.select(col("band"), col("vec_id"), col("code")),
-          Seq("band", "vec_id", "code"), "left_anti")
-        .select(col("band"), col("code"), col("vec_id"))
-        .unionByName(adds.select(col("band"), col("code"), col("vec_id")))
-        .unionByName(changed.select(col("band"), col("code"), col("vec_id")))
-        .select(col("vec_id"), col("code"), col("band")), addSub, id,
-        fold = true)
-      BidLog.commit(dels.limit(0).repartition(1), tombSub, id)
-    }
-    BidLog.gc(s, addSub, id, tombSub)
-  }
-
-  /** The stream-maintained store's LIVE read view: base rows (bid −1)
-    * plus add-deltas from the newest FOLD on (a fold subsumes base and
-    * everything before it), with temporal tombstone masking (see
-    * [[annStoreMaintainStream]]). The mask shuffles only
-    * (band, vec_id, code, bid) keys — never vectors.
-    */
-  def annStoreStreamView(s: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    annStoreStreamViewAt(s, stateDir, Long.MaxValue)
-
-  /** The view at a bid bound (exclusive) — the fold computation reads
-    * its own predecessor state through this with bound = its bid.
-    */
-  private[graft] def annStoreStreamViewAt(
-      s: org.apache.spark.sql.SparkSession, stateDir: String,
-      bound: Long): DataFrame = {
-    val addSub = s"$stateDir/adds"
-    val fold = BidLog.newestFold(s, addSub, bound)
-    def rd(sub: String): Option[DataFrame] =
-      BidLog.read(s, sub, BidLog.live(s, sub, bound, fold))
-        .map(_.select(col("band").cast("int").as("band"), col("code"),
-          col("vec_id"), col("bid").cast("long").as("bid")))
-    val baseOpt =
-      if (fold.isDefined) None
-      else Some(s.read.parquet(s"$stateDir/base")
-        .select(col("band").cast("int").as("band"), col("code"),
-          col("vec_id"), lit(-1L).as("bid")))
-    val phys = (baseOpt.toSeq ++ rd(addSub).toSeq).reduce(_ unionByName _)
-    rd(s"$stateDir/tombs") match {
-      case None => phys.select(col("band"), col("code"), col("vec_id"))
-      case Some(t) =>
-        val tmax = t.groupBy(col("band"), col("vec_id"), col("code"))
-          .agg(max(col("bid")).as("tbid"))
-        phys.join(tmax, Seq("band", "vec_id", "code"), "left")
-          .filter(col("tbid").isNull || col("bid") > col("tbid"))
-          .select(col("band"), col("code"), col("vec_id"))
-    }
-  }
+    BidLog.stream(events, ckDir)(
+      graft.ops.Extended.annStoreApply(_, stateDir, _))
 
   /** One ANN-store lifecycle event (see [[annStoreMaintainStream]]):
     * op ∈ add | del | ups; `v` is the (new) vector, `v_old` only rides

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.core.BidLog
 import graft.ops.Extended
-import graft.streaming.EventStream
 import graft.tools.Run.time
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,9 +10,9 @@ import org.apache.spark.sql.functions._
   * dir (GenScale 10×/100× dirs give SCALING.md's decade rows). Stores are
   * written under `target/ann_lifecycle/`.
   *
-  *  - `append`: the `ann_state_append` contract — merging a batch into
-  *    the band-partitioned store is BATCH-proportional (coding at the
-  *    store's pinned layout plus an append write, no corpus access). It
+  *  - `append`: the `ann_state_append` contract — committing an add
+  *    batch to the store's log is BATCH-proportional (coding at the
+  *    store's pinned layout plus one bid write, no corpus access). It
   *    builds the corpus store, appends 2%, 20% and 80% batches (the 80%
   *    one makes the data term visible over the fixed per-job cost), and
   *    rebuilds corpus + 20% for contrast; the append-time ratios should
@@ -24,9 +23,9 @@ import org.apache.spark.sql.functions._
   *  - `gc`: the `ann_store_gc` sequence step by step, twice (read the
   *    second pass; the first carries codegen and JIT): init, a
   *    below-trigger delete whose GC only keeps tombstones, a compacting
-  *    delete + GC, and a 2% upsert (half re-embedded, half identical).
-  *    Delete + GC cost must track the deleted fraction.
-  *  - `stream`: the streaming twin (`EventStream.mergeAnnStoreBatch`):
+  *    delete + GC (the fold), and a 2% upsert (half re-embedded, half
+  *    identical). Delete + GC cost must track the deleted fraction.
+  *  - `stream`: micro-batches of the stream (`Extended.annStoreApply`):
   *    FIXED 500-event batches (300 adds of new rotated ids, 100 deletes,
   *    100 re-embeds) through 12 merges at foldEvery=8 over a base store
   *    of the dir's embeddings. Run at sf1 vs sf10 (20k vs 200k vectors;
@@ -60,14 +59,17 @@ object AnnLifecycle {
     val store = s"$root/append"
     time("build corpus store") {
       Extended.annBandStoreBuild(corpus,
-        Extended.embLayoutCollect(spark, corpus)._1, store)
+        Extended.embLayoutCollect(spark, corpus), store)
     }
     val secs = batches.map { case (tag, b) =>
-      time(s"append $tag batch")(Extended.annBandStoreAppend(spark, b, store))._2
+      time(s"append $tag batch") {
+        Extended.annStoreApply(Extended.annEvents(b, "add"), store,
+          Extended.annStoreNextBid(spark, store))
+      }._2
     }
     time("full rebuild corpus+20%") {
       Extended.annBandStoreBuild(corpus.unionByName(large),
-        spark.read.parquet(s"$store/_layout"), s"$root/rebuild")
+        Extended.annStoreLayout(spark, store), s"$root/rebuild")
     }
     secs.zip(sizes).sliding(2).foreach { case Seq((t0, n0), (t1, n1)) =>
       println(f"[ann-lifecycle] append time ratio ${t1 / t0}%.2f " +
@@ -104,20 +106,20 @@ object AnnLifecycle {
     val big = all.filter(col("vec_id") % 10 === 3)
     // % 50 == 21 survives both deletes; half re-embed to reverse(v)
     // (codes move), half identically (zero writes), like ann_store_upsert
-    val upOld = all.filter(col("vec_id") % 50 === 21)
-    val upNew = upOld.withColumn("v",
-      when(col("vec_id") % 100 === 21, reverse(col("v"))).otherwise(col("v")))
+    val ups = Extended.annEvents(all.filter(col("vec_id") % 50 === 21), "ups",
+      when(col("vec_id") % 100 === 21, reverse(col("v"))).otherwise(col("v")),
+      col("v"))
     val fraction = big.count().toDouble / small.count()
+    def apply(events: DataFrame): Unit = Extended.annStoreApply(events, store,
+      Extended.annStoreNextBid(spark, store))
     (1 to 2).foreach { pass =>
       println(s"[ann-lifecycle] gc pass $pass")
-      time("init store")(Extended.annGcStoreInit(spark, all, store))
-      val (_, d1) = time("delete 0.5%")(Extended.annStoreDelete(spark, small, store))
+      time("init store")(Extended.annSearchStoreWrite(spark, all, store))
+      val (_, d1) = time("delete 0.5%")(apply(Extended.annEvents(small, "del")))
       val (_, g1) = time("gc (tombstones only)")(Extended.annStoreGc(spark, store))
-      val (_, d2) = time("delete 10%")(Extended.annStoreDelete(spark, big, store))
+      val (_, d2) = time("delete 10%")(apply(Extended.annEvents(big, "del")))
       val (_, g2) = time("gc (compacting)")(Extended.annStoreGc(spark, store))
-      time("upsert 2% (half changed)") {
-        Extended.annStoreUpsert(spark, upOld, upNew, store)
-      }
+      time("upsert 2% (half changed)")(apply(ups))
       time("view count")(Extended.annStoreView(spark, store).count())
       println(f"[ann-lifecycle] compacting/tombstone-only delete+gc ratio " +
         f"${(d2 + g2) / (d1 + g1)}%.2f (deleted-fraction ratio $fraction%.1f)")
@@ -125,19 +127,16 @@ object AnnLifecycle {
   }
 
   private def stream(spark: SparkSession, dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     val vecs = Extended.vecs(spark, dir).select(col("vec_id"), col("v"))
     val store = s"$root/stream"
-    fs.delete(new org.apache.hadoop.fs.Path(store), true)
     // fixed-ABSOLUTE batch slices (id-count-independent, so the batch
     // stays 500 events while the state grows a decade across dirs)
     val ids = vecs.select(col("vec_id")).orderBy(col("vec_id"))
       .collect().map(_.getLong(0))
     require(ids.length >= 8000, s"corpus too small for the slices: ${ids.length}")
     time("build base store") {
-      Extended.annBandStoreBuild(vecs, Extended.embLayoutCollect(spark, vecs)._1,
-        s"$store/base")
+      Extended.annBandStoreBuild(vecs, Extended.embLayoutCollect(spark, vecs),
+        store)
     }
     println(s"[ann-lifecycle] dir=$dir base=${ids.length} vecs")
     def slice(off: Int, per: Int, k: Int): Seq[Long] =
@@ -160,17 +159,17 @@ object AnnLifecycle {
     }
     val secs = (0 until 12).map { k =>
       time(f"merge batch $k%2d (500 events)") {
-        EventStream.mergeAnnStoreBatch(batch(k), store, k.toLong, foldEvery = 8)
+        Extended.annStoreApply(batch(k), store, k.toLong, foldEvery = 8)
       }._2
     }
     val foldK = 7 // the 8th live delta triggers the fold at foldEvery=8
-    require(BidLog.isFold(spark, s"$store/adds", foldK),
+    require(BidLog.isFold(spark, s"$store/log", foldK),
       "expected fold did not happen")
     val nonFold = secs.patch(foldK, Nil, 1).sorted
     println(f"[ann-lifecycle] non-fold batch median ${
       nonFold(nonFold.length / 2)}%.2f s, fold batch ${secs(foldK)}%.2f s")
     time("view count (post-fold, 4 live deltas)") {
-      EventStream.annStoreStreamView(spark, store).count()
+      Extended.annStoreView(spark, store).count()
     }
   }
 }

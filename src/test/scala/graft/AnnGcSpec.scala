@@ -1,138 +1,144 @@
 package graft
 
+import graft.core.BidLog
+import graft.streaming.EventStream.AnnEv
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Physical-mechanism coverage for the ANN store tombstone/GC life cycle
   * (r16 verdict task 3). The registered `ann_store_gc` query proves the
   * READ VIEW equals a rebuild over survivors at every compaction state —
   * but the view is deliberately blind to WHICH branch the store took
-  * (masked tombstones and compacted data read identically; that is the
+  * (masked tombstones and folded data read identically; that is the
   * point of tombstone masking). These tests pin the physical branches
-  * the oracle cannot see, plus a PLANTED partial-trigger adversary the
-  * fixtures never produce (uniform vector deletes tombstone every band
-  * equally, so per-band trigger divergence needs a hand-skewed `_stats`
-  * sidecar — the round-9 planted-adversary rule).
+  * the oracle cannot see — `base` plus the live `log` rows — and a
+  * PLANTED upsert skew the fixtures never produce (uniform vector
+  * deletes tombstone every band equally; only an upsert that moves one
+  * band makes per-band and store-wide tombstone fractions differ — the
+  * round-9 planted-adversary rule).
   */
 class AnnGcSpec extends SparkSpec {
 
-  private val fs = org.apache.hadoop.fs.FileSystem.get(
-    spark.sparkContext.hadoopConfiguration)
-
-  private def freshStore(tag: String): (org.apache.spark.sql.DataFrame, String, Long, Int) = {
+  private def freshStore(tag: String,
+      corpus: DataFrame = ops.Extended.vecs(spark, sfDir)): (String, Long, Int) = {
     val dir = new java.io.File(s"target/ann_gc_spec_$tag").getAbsolutePath
-    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    val all = ops.Extended.vecs(spark, sfDir)
-    ops.Extended.annGcStoreInit(spark, all, dir)
-    val n = all.count()
-    val nbands = spark.read.parquet(s"$dir/_layout").collect()(0)
+    ops.Extended.annSearchStoreWrite(spark, corpus, dir)
+    val nbands = spark.read.parquet(s"$dir/layout").collect()(0)
       .getAs[Int]("nbands")
-    (all, dir, n, nbands)
+    (dir, corpus.count(), nbands)
   }
 
-  private def rawRows(dir: String): Long =
-    spark.read.parquet(dir).count()
+  /** One lifecycle batch at the store's next bid. */
+  private def apply(events: DataFrame, dir: String): Unit =
+    ops.Extended.annStoreApply(events, dir,
+      ops.Extended.annStoreNextBid(spark, dir))
 
-  private def tombRows(dir: String): Long =
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_tombstones")))
-      spark.read.parquet(s"$dir/_tombstones").count()
-    else 0L
+  private def baseRows(dir: String): Long =
+    spark.read.parquet(s"$dir/base").count()
+
+  /** Live log rows (the bids from the newest fold on) with `dead`. */
+  private def logRows(dir: String, dead: Boolean): DataFrame =
+    BidLog.readLive(spark, s"$dir/log", Long.MaxValue)
+      .map(_.filter(col("dead") === dead))
+      .getOrElse(spark.emptyDataFrame)
+
+  private def canonView(dir: String) = ops.Extended.annStoreView(spark, dir)
+    .orderBy(col("band"), col("code"), col("vec_id")).collect().toSeq
 
   test("below-trigger delete: tombstones retained, data partitions NOT rewritten") {
-    val (all, dir, n, nbands) = freshStore("below")
-    val before = rawRows(dir)
+    val all = ops.Extended.vecs(spark, sfDir)
+    val (dir, n, nbands) = freshStore("below")
+    val before = baseRows(dir)
     assert(before === n * nbands)
-    ops.Extended.annStoreDelete(spark, all.filter(col("vec_id") % 100 === 7), dir)
+    apply(ops.Extended.annEvents(all.filter(col("vec_id") % 100 === 7), "del"), dir)
     ops.Extended.annStoreGc(spark, dir)
-    // physical rows unchanged: the 1% batch sits under the 1/20 trigger,
-    // so GC must not touch a single band directory
-    assert(rawRows(dir) === before, "below-trigger GC rewrote data")
-    assert(tombRows(dir) > 0, "tombstones were dropped without compaction")
+    // the 1% batch sits under the 1/20 trigger: GC committed no fold,
+    // base is untouched, and the delete bid's dead rows stay live
+    val log = s"$dir/log"
+    assert(BidLog.ids(spark, log) === Seq(0L), "below-trigger GC committed a bid")
+    assert(!BidLog.isFold(spark, log, 0L))
+    assert(baseRows(dir) === before, "below-trigger GC rewrote data")
+    val dead = logRows(dir, dead = true).count()
+    assert(dead > 0, "tombstones were dropped without compaction")
     // ...and the view already masks the deleted ids
     val view = ops.Extended.annStoreView(spark, dir)
     assert(view.filter(col("vec_id") % 100 === 7).count() === 0)
-    assert(view.count() === before - tombRows(dir))
+    assert(view.count() === before - dead)
   }
 
   test("over-trigger delete: every band compacts, tombstones drain") {
-    val (all, dir, n, nbands) = freshStore("over")
-    ops.Extended.annStoreDelete(spark, all.filter(col("vec_id") % 10 === 3), dir)
+    val all = ops.Extended.vecs(spark, sfDir)
+    val (dir, _, nbands) = freshStore("over")
+    apply(ops.Extended.annEvents(all.filter(col("vec_id") % 10 === 3), "del"), dir)
     ops.Extended.annStoreGc(spark, dir)
     val survivors = all.filter(col("vec_id") % 10 =!= 3).count()
-    assert(rawRows(dir) === survivors * nbands,
-      "compaction did not rewrite to exactly the surviving rows")
-    assert(tombRows(dir) === 0, "compaction left tombstones behind")
-    // stats sidecar follows the clearing (the next trigger computes
-    // against post-GC physical rows)
-    val stats = spark.read.parquet(s"$dir/_stats")
-    assert(stats.agg(sum(col("nrows"))).head().getLong(0) === survivors * nbands)
+    val log = s"$dir/log"
+    val fold = BidLog.latest(spark, log, Long.MaxValue)
+    assert(fold === Some(1L) && BidLog.isFold(spark, log, 1L),
+      s"over-trigger GC committed no fold: ${BidLog.ids(spark, log)}")
+    assert(BidLog.at(spark, log, 1L).count() === survivors * nbands,
+      "the fold is not exactly the surviving rows")
+    assert(logRows(dir, dead = true).count() === 0,
+      "compaction left tombstones behind")
+    // the live physical rows — the next trigger's denominator — are the
+    // fold's alone (it supersedes base)
+    assert(logRows(dir, dead = false).count() === survivors * nbands)
   }
 
-  test("PLANTED partial trigger: only the skewed band compacts; others keep masking") {
-    val (all, dir, n, nbands) = freshStore("partial")
-    assert(nbands >= 2)
-    // plant: band 1 claims 19× fewer physical rows than reality, so the
-    // same uniform 1% tombstone batch crosses ITS trigger alone —
-    // the per-band divergence uniform deletes can never produce
+  test("PLANTED upsert skew: the store-wide fold keeps the view bit-identical") {
+    // Deletes tombstone every band equally, so the per-band tombstone
+    // fractions can only diverge through an upsert that moves a subset
+    // of an id's bands: the coord-49 plant (see the per-band test below)
+    // moves band 3 alone. A store-wide fold must resolve that skew
+    // exactly: the view before and after the fold are bit-identical.
     import spark.implicits._
-    (0 until nbands).map(b => (b, if (b == 1) n / 19 else n))
-      .toDF("band", "nrows")
-      .write.mode("overwrite").parquet(s"$dir/_stats")
-    ops.Extended.annStoreDelete(spark, all.filter(col("vec_id") % 100 === 7), dir)
-    val del = all.filter(col("vec_id") % 100 === 7).count()
-    val viewBefore = ops.Extended.annStoreView(spark, dir)
-      .orderBy(col("band"), col("code"), col("vec_id")).collect()
+    val dim = ops.Extended.vecs(spark, sfDir).select(size(col("v")))
+      .head().getInt(0)
+    assert(dim >= 64, s"fixture dim $dim < 64: the coord-49 plant needs 4 full bands")
+    def vec(c49: Double) = (1 to dim).map(i => if (i == 49) c49 else 1.0)
+    val plant = 99999983L
+    val all = ops.Extended.vecs(spark, sfDir).select(col("vec_id"), col("v"))
+    val (dir, _, nbands) = freshStore("skew",
+      all.unionByName(Seq((plant, vec(1.0))).toDF("vec_id", "v")))
+    apply(Seq(AnnEv("ups", plant, vec(-1.0), vec(1.0))).toDF(), dir)
+    val skew = logRows(dir, dead = true).select(col("band")).collect()
+      .map(_.getInt(0)).toSeq
+    assert(skew === Seq(3), s"the planted upsert did not skew band 3 alone: $skew")
+    apply(ops.Extended.annEvents(all.filter(col("vec_id") % 10 === 3), "del"), dir)
+    val viewBefore = canonView(dir)
     ops.Extended.annStoreGc(spark, dir)
-    // band 1 physically compacted; every other band untouched
-    val perBand = spark.read.parquet(dir)
-      .groupBy(col("band").cast("int").as("band")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    assert(perBand(1) === n - del, s"band 1 not compacted: ${perBand(1)}")
-    (0 until nbands).filter(_ != 1).foreach { b =>
-      assert(perBand(b) === n, s"band $b was rewritten below its trigger")
-    }
-    // uncompacted bands still carry their tombstones...
-    val tombBands = spark.read.parquet(s"$dir/_tombstones")
-      .select(col("band")).distinct().collect().map(_.getInt(0)).toSet
-    assert(tombBands === (0 until nbands).filter(_ != 1).toSet)
-    // ...and the READ VIEW is identical across the mixed compaction state
-    val viewAfter = ops.Extended.annStoreView(spark, dir)
-      .orderBy(col("band"), col("code"), col("vec_id")).collect()
-    assert(viewAfter.toSeq === viewBefore.toSeq,
-      "partial compaction changed the read view")
+    assert(BidLog.isFold(spark, s"$dir/log", 2L), "the skewed store did not fold")
+    assert(logRows(dir, dead = true).count() === 0)
+    assert(canonView(dir) === viewBefore, "the store-wide fold changed the read view")
+    val mine = viewBefore.filter(_.getAs[Long]("vec_id") == plant)
+    assert(mine.map(_.getAs[Int]("band")).sorted === (0 until nbands),
+      s"the plant lost a band slot: $mine")
   }
 
   test("upsert writes ONLY changed codes; identical re-embeds leave the store untouched") {
-    val (all, dir, n, nbands) = freshStore("upsert")
-    val before = rawRows(dir)
-    val batchOld = all.filter(col("vec_id") % 20 === 5)
-    val batchNew = batchOld
-      .withColumn("v", when(col("vec_id") % 40 === 5,
-        reverse(col("v"))).otherwise(col("v")))
-    ops.Extended.annStoreUpsert(spark, batchOld, batchNew, dir)
-    val tombs = spark.read.parquet(s"$dir/_tombstones")
-    val changed = tombs.count()
+    val all = ops.Extended.vecs(spark, sfDir)
+    val (dir, _, _) = freshStore("upsert")
+    val before = baseRows(dir)
+    val newV = when(col("vec_id") % 40 === 5, reverse(col("v"))).otherwise(col("v"))
+    apply(ops.Extended.annEvents(all.filter(col("vec_id") % 20 === 5), "ups",
+      newV, col("v")), dir)
+    val bid = BidLog.at(spark, s"$dir/log", 0L)
+    val changed = bid.filter(col("dead")).count()
     assert(changed > 0, "upsert produced no changed codes (vacuous)")
-    // minimality: appended rows == tombstoned rows == changed codes only
-    assert(rawRows(dir) === before + changed,
+    // minimality: live rows == tombstoned rows == changed codes only
+    assert(bid.filter(!col("dead")).count() === changed,
       "upsert appended more than the changed codes")
     // the identical half of the batch (% 40 == 25) wrote NOTHING
-    assert(tombs.filter(col("vec_id") % 40 === 25).count() === 0,
-      "a byte-identical re-embed was tombstoned")
+    assert(bid.filter(col("vec_id") % 40 === 25).count() === 0,
+      "a byte-identical re-embed was written")
+    assert(baseRows(dir) === before, "upsert rewrote base")
     // the read view now equals a re-index over the FINAL vectors
-    val finalVecs = all
-      .withColumn("v", when(col("vec_id") % 40 === 5,
-        reverse(col("v"))).otherwise(col("v")))
-    val layout = spark.read.parquet(s"$dir/_layout")
-    val expect = ops.Extended.embBandCodesPinned(finalVecs, layout)
+    val layout = spark.read.parquet(s"$dir/layout")
+    val expect = ops.Extended.embBandCodesPinned(all.withColumn("v", newV), layout)
       .select(col("band").cast("int").as("band"),
         col("code").cast("long").as("code"), col("vec_id"))
       .orderBy(col("band"), col("code"), col("vec_id")).collect()
-    val got = ops.Extended.annStoreView(spark, dir)
-      .orderBy(col("band"), col("code"), col("vec_id")).collect()
-    assert(got.toSeq === expect.toSeq, "upserted view != re-index over final vectors")
-    // stats followed the physical growth (the GC trigger stays honest)
-    val stats = spark.read.parquet(s"$dir/_stats")
-    assert(stats.agg(sum(col("nrows"))).head().getLong(0) === before + changed)
+    assert(canonView(dir) === expect.toSeq, "upserted view != re-index over final vectors")
   }
 
   test("PLANTED per-band partial change: one band's slot moves, the others' rows are not touched") {
@@ -144,23 +150,18 @@ class AnnGcSpec extends SparkSpec {
     val dim = ops.Extended.vecs(spark, sfDir).select(size(col("v")))
       .head().getInt(0)
     assert(dim >= 64, s"fixture dim $dim < 64: the coord-49 plant needs 4 full bands")
-    val dir = new java.io.File("target/ann_gc_spec_plant").getAbsolutePath
-    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     import spark.implicits._
-    def vec(c49: Double) = (1 to dim).map(i => if (i == 49) c49 else 1.0).toArray
-    val oldV = Seq((99999983L, vec(1.0))).toDF("vec_id", "v")
-    val newV = Seq((99999983L, vec(-1.0))).toDF("vec_id", "v")
+    def vec(c49: Double) = (1 to dim).map(i => if (i == 49) c49 else 1.0)
     val corpus = ops.Extended.vecs(spark, sfDir)
       .select(col("vec_id"), col("v"))
-      .unionByName(oldV)
-    ops.Extended.annGcStoreInit(spark, corpus, dir)
-    val before = rawRows(dir)
-    ops.Extended.annStoreUpsert(spark, oldV, newV, dir)
+      .unionByName(Seq((99999983L, vec(1.0))).toDF("vec_id", "v"))
+    val (dir, _, _) = freshStore("plant", corpus)
+    apply(Seq(AnnEv("ups", 99999983L, vec(-1.0), vec(1.0))).toDF(), dir)
     // exactly ONE slot moved: band 3's
-    val tombs = spark.read.parquet(s"$dir/_tombstones").collect()
+    val tombs = logRows(dir, dead = true).collect()
     assert(tombs.length === 1, s"expected 1 tombstone, got ${tombs.length}")
     assert(tombs(0).getAs[Int]("band") === 3, "the moved slot was not band 3")
-    assert(rawRows(dir) === before + 1)
+    assert(logRows(dir, dead = false).count() === 1)
     // view: the id still lives in all 4 bands, band 3 at the NEW code
     val mine = ops.Extended.annStoreView(spark, dir)
       .filter(col("vec_id") === 99999983L)

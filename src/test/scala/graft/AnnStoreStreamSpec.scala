@@ -5,22 +5,21 @@ import graft.streaming.EventStream.AnnEv
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** The ANN store's streaming maintenance twin
+/** The ANN store's streaming maintenance
   * (EventStream.annStoreMaintainStream): add / delete / re-embed events
-  * folded into bid-stamped delta dirs over a pinned-layout base store.
-  * Three things the batch-store oracles cannot cover are proven here:
+  * folded into the bid log over a pinned-layout base store. Three things
+  * the registered queries' oracles cannot cover are proven here:
   *
   *  - exact parity: after two micro-batches of mixed ops, the stream
   *    view equals a FROM-SCRATCH coding of the net final vector set at
   *    the base layout (the independent-oracle discipline, in-spec);
   *  - replay idempotence: re-running a batch at its own bid (the
   *    crash-before-commit state) leaves the view bit-identical —
-  *    the reason the layout is overwrite-by-bid deltas, not the batch
-  *    path's plain appends;
+  *    the reason the log is overwrite-by-bid, not plain appends;
   *  - PLANTED resurrection adversary: delete an id, then RE-ADD it at
-  *    the SAME embedding (same code) in a later batch. The batch
-  *    store's code-keyed mask would kill both rows; only the stream
-  *    view's TEMPORAL mask (tombstone kills bid ≤ its own) serves it —
+  *    the SAME embedding (same code) in a later batch. A code-keyed
+  *    mask would kill both rows; only the view's TEMPORAL mask
+  *    (tombstone kills bid ≤ its own) serves it —
   *    fixtures never produce this order, so it is planted (round-9
   *    rule).
   */
@@ -39,7 +38,7 @@ class AnnStoreStreamSpec extends SparkSpec {
     val all = ops.Extended.vecs(spark, sfDir).select(col("vec_id"), col("v"))
     val corpus = all.filter(col("vec_id") % 10 < 8)
     ops.Extended.annBandStoreBuild(corpus, ops.Extended.embLayoutOf(corpus),
-      s"$dir/base")
+      dir)
 
     val vmap = all.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
@@ -76,24 +75,24 @@ class AnnStoreStreamSpec extends SparkSpec {
         col("vec_id") === resId)
       .withColumn("v", when(col("vec_id") % 100 === 11,
         reverse(col("v"))).otherwise(col("v")))
-    val layout = spark.read.parquet(s"$dir/base/_layout")
+    val layout = spark.read.parquet(s"$dir/layout")
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select(col("band").cast("int").as("band"),
         col("code").cast("long").as("code"), col("vec_id"))
       .orderBy(col("band"), col("code"), col("vec_id")).collect().toSeq
     val expect = canon(ops.Extended.embBandCodesPinned(finalVecs, layout))
-    val got = canon(EventStream.annStoreStreamView(spark, dir))
+    val got = canon(ops.Extended.annStoreView(spark, dir))
     assert(got === expect, "stream view != net-final rebuild")
 
-    // the resurrection id is SERVED (same code as its deleted row — the
-    // batch store's code-keyed mask would have killed it)
-    assert(EventStream.annStoreStreamView(spark, dir)
+    // the resurrection id is SERVED (same code as its deleted row — a
+    // code-keyed mask would have killed it)
+    assert(ops.Extended.annStoreView(spark, dir)
       .filter(col("vec_id") === resId).count() > 0,
       "re-added id did not resurrect past its tombstone")
 
     // replay batch 1 at its own bid (crash-before-commit): bit-identical
-    EventStream.mergeAnnStoreBatch(batch1.toDF(), dir, 1L)
-    assert(canon(EventStream.annStoreStreamView(spark, dir)) === expect,
+    ops.Extended.annStoreApply(batch1.toDF(), dir, 1L)
+    assert(canon(ops.Extended.annStoreView(spark, dir)) === expect,
       "replaying a batch changed the view")
   }
 
@@ -104,7 +103,7 @@ class AnnStoreStreamSpec extends SparkSpec {
     val all = ops.Extended.vecs(spark, sfDir).select(col("vec_id"), col("v"))
     val corpus = all.filter(col("vec_id") % 10 < 8)
     ops.Extended.annBandStoreBuild(corpus, ops.Extended.embLayoutOf(corpus),
-      s"$dir/base")
+      dir)
 
     val vmap = all.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
@@ -124,12 +123,12 @@ class AnnStoreStreamSpec extends SparkSpec {
     val b3 = Seq(ev("add", resId, vmap(resId)))
 
     def fold3(b: Seq[AnnEv], id: Long) =
-      EventStream.mergeAnnStoreBatch(b.toDF(), dir, id, foldEvery = 3)
+      ops.Extended.annStoreApply(b.toDF(), dir, id, foldEvery = 3)
     fold3(b0, 0L); fold3(b1, 1L); fold3(b2, 2L)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/adds/bid=2/_folded")),
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/log/bid=2/_folded")),
       "3rd live delta did not fold")
 
-    val layout = spark.read.parquet(s"$dir/base/_layout")
+    val layout = spark.read.parquet(s"$dir/layout")
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select(col("band").cast("int").as("band"),
         col("code").cast("long").as("code"), col("vec_id"))
@@ -142,45 +141,68 @@ class AnnStoreStreamSpec extends SparkSpec {
         .withColumn("v", when(col("vec_id") % 100 === 11,
           reverse(col("v"))).otherwise(col("v"))), layout))
     // parity at the fold (pre-resurrection)
-    assert(canon(EventStream.annStoreStreamView(spark, dir)) === netAt(false),
+    assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(false),
       "folded view != net rebuild")
     // replay the FOLD batch itself (crash-before-commit at the fold)
     fold3(b2, 2L)
-    assert(canon(EventStream.annStoreStreamView(spark, dir)) === netAt(false),
+    assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(false),
       "replaying the fold changed the view")
     // pre-fold deltas survive until a LATER batch commits (its replay
     // still needs them), then b3's GC drops them
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/adds/bid=0")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/log/bid=0")))
     fold3(b3, 3L)
-    Seq("adds", "tombs").foreach { sub =>
-      Seq(0, 1).foreach { old =>
-        assert(!fs.exists(
-          new org.apache.hadoop.fs.Path(s"$dir/$sub/bid=$old")),
-          s"$sub/bid=$old not GC'd after the post-fold batch")
-      }
+    Seq(0, 1).foreach { old =>
+      assert(!fs.exists(
+        new org.apache.hadoop.fs.Path(s"$dir/log/bid=$old")),
+        s"log/bid=$old not GC'd after the post-fold batch")
     }
     // resurrection THROUGH the fold: the bid-1 tombstone was resolved
     // into the fold, so the verbatim re-add (same code) is served
-    assert(canon(EventStream.annStoreStreamView(spark, dir)) === netAt(true),
+    assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(true),
       "post-fold view != net rebuild with resurrection")
     // replay the post-fold batch: GC no-ops, view bit-identical
     fold3(b3, 3L)
-    assert(canon(EventStream.annStoreStreamView(spark, dir)) === netAt(true),
+    assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(true),
       "replaying the post-fold batch changed the view")
     // crash mid-commit of the next batch, b4 = delete resId again (the
     // 3rd live delta, so a FOLD): its fold data and marker sit staged but
     // uncommitted — the view must not see them, and the replay commits
     val b4 = Seq(ev("del", resId, vmap(resId)))
-    core.BidLog.stage(EventStream.annStoreStreamView(spark, dir)
+    core.BidLog.stage(ops.Extended.annStoreView(spark, dir)
       .filter(col("vec_id") =!= resId)
-      .select(col("vec_id"), col("code"), col("band")),
-      s"$dir/adds", 4L, fold = true)
-    assert(canon(EventStream.annStoreStreamView(spark, dir)) === netAt(true),
+      .select(col("vec_id"), col("code"), col("band"), lit(false).as("dead")),
+      s"$dir/log", 4L, fold = true)
+    assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(true),
       "uncommitted fold data changed the view")
     fold3(b4, 4L)
-    assert(core.BidLog.isFold(spark, s"$dir/adds", 4L),
+    assert(core.BidLog.isFold(spark, s"$dir/log", 4L),
       "replaying the crashed batch did not commit its fold")
-    assert(canon(EventStream.annStoreStreamView(spark, dir)) === netAt(false),
+    assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(false),
       "replaying the crashed batch diverged from the net rebuild")
+  }
+
+  test("one batch adding and deleting a vector: the fold and non-fold paths agree") {
+    // A tombstone kills the rows of its own bid, so a batch that adds
+    // and deletes the same vector leaves it dead; the fold path must
+    // resolve that batch the same way, or the view would depend on
+    // where the batch falls in the fold cadence.
+    val all = ops.Extended.vecs(spark, sfDir).select(col("vec_id"), col("v"))
+    val corpus = all.filter(col("vec_id") % 10 < 8)
+    val layout = ops.Extended.embLayoutOf(corpus)
+    val v = all.filter(col("vec_id") % 10 === 8).head()
+    val batch = Seq(AnnEv("add", v.getLong(0), v.getSeq[Double](1), null),
+      AnnEv("del", v.getLong(0), v.getSeq[Double](1), null)).toDF()
+    def viewAfter(tag: String, foldEvery: Int) = {
+      val dir = new java.io.File(s"target/ann_stream_same_batch_$tag").getAbsolutePath
+      ops.Extended.annBandStoreBuild(corpus, layout, dir)
+      ops.Extended.annStoreApply(batch, dir, 0L, foldEvery)
+      assert(core.BidLog.isFold(spark, s"$dir/log", 0L) === (foldEvery == 1))
+      ops.Extended.annStoreView(spark, dir)
+        .orderBy(col("band"), col("code"), col("vec_id")).collect().toSeq
+    }
+    val delta = viewAfter("delta", core.BidLog.FoldEvery)
+    assert(!delta.exists(_.getAs[Long]("vec_id") == v.getLong(0)),
+      "the batch's tombstone did not kill its own add")
+    assert(viewAfter("fold", 1) === delta, "fold and non-fold views differ")
   }
 }

@@ -375,17 +375,17 @@ class ScaleSpec extends SparkSpec {
       "embed_near_dup" -> "nbLadder/nBandsLadder 8→20 bits (round 13/14)",
       "embed_near_dup_strict" -> "nbLadder (embCandidates consumer; strict 0.40 emit cut)",
       "ann_state_append" -> "nbLadder pinned at the store's build-time corpus count (layout version)",
-      "ann_store_search" -> ("nbLadder pinned at the store's _layout version; probe side is the " +
+      "ann_store_search" -> ("nbLadder pinned at the store's layout version; probe side is the " +
         "fixed query batch (codes ship as scan literals, partition-pruned)"),
-      "ann_store_gc" -> ("nbLadder pinned at the store's _layout version; tombstone mask is a " +
-        "(band, vec_id) keyed anti-join; GC rewrites only trigger-crossing band partitions"),
-      "ann_store_search_live" -> ("nbLadder pinned at the store's _layout version; probe-side " +
-        "literals prune the scan; tombstone mask anti-joins only the probed rows"),
-      "ann_store_upsert" -> ("nbLadder pinned at the store's _layout version; only CHANGED " +
+      "ann_store_gc" -> ("nbLadder pinned at the store's layout version; temporal tombstone " +
+        "mask keyed on (band, vec_id, code); GC folds the view at the store-wide trigger"),
+      "ann_store_search_live" -> ("nbLadder pinned at the store's layout version; probe-side " +
+        "literals prune the scan; temporal tombstone mask joins only the probed rows"),
+      "ann_store_upsert" -> ("nbLadder pinned at the store's layout version; only CHANGED " +
         "(band, id) codes are written (tombstone old + append new); mask key carries code"),
-      "ann_store_search_mp" -> ("nbLadder pinned at the store's _layout version; probe list " +
+      "ann_store_search_mp" -> ("nbLadder pinned at the store's layout version; probe list " +
         "grows (1+EmbBits)x per query, still query-batch-bounded scan literals"),
-      "ann_stream_search" -> ("nbLadder pinned at the stream store's base _layout; maintenance " +
+      "ann_stream_search" -> ("nbLadder pinned at the store's layout version; maintenance " +
         "batches code only their events; view mask ships keys; probe literals prune the base"),
       "paraphrase_pairs" -> "nbLadder (embCandidates consumer)",
       "semantic_dedup" -> "nbLadder (embCandidates consumer)",
@@ -591,16 +591,21 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("one bid log: bid dirs and fold markers named only in graft.core.BidLog") {
-    // Every streamed state store reads, folds, commits and GCs through
+    // Every state store reads, folds, commits and GCs through
     // core.BidLog; a store that spells a bid path or a fold marker
     // itself has its own copy of the protocol, outside its one commit.
+    // The ANN store's retired sidecar paths (a tombstone file, per-band
+    // stats, a compaction staging dir, an underscore layout) were such
+    // a copy and must not come back.
+    val names = Seq("bid=", "_folded",
+      "/_tombstones", "/_stats", "/_staging", "/_layout")
     val log = java.nio.file.Paths.get("src/main/scala/graft/core/BidLog.scala")
     val offenders = Files.walk(java.nio.file.Paths.get("src/main/scala"))
       .iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && p != log)
       .flatMap { p =>
         Files.readString(p).linesIterator.zipWithIndex.collect {
-          case (l, i) if l.contains("bid=") || l.contains("_folded") =>
+          case (l, i) if names.exists(l.contains) =>
             s"$p:${i + 1}: ${l.trim}"
         }
       }
