@@ -140,13 +140,18 @@ object BidLog {
   }
 
   /** GC after batch `id` committed: drop every bid of `sub` below its
-    * newest fold at or below the committed predecessor.
+    * newest fold at or below the committed predecessor. Returns that
+    * fold: no replay reads below it, so a store may drop its own
+    * pre-log state (the ANN store's `base`) too.
     */
-  def gc(s: SparkSession, sub: String, id: Long): Unit =
-    latest(s, sub, id).flatMap(p => newestFold(s, sub, p + 1)).foreach { f =>
+  def gc(s: SparkSession, sub: String, id: Long): Option[Long] = {
+    val fold = latest(s, sub, id).flatMap(p => newestFold(s, sub, p + 1))
+    fold.foreach { f =>
       ids(s, sub).filter(_ < f).foreach { old =>
         val p = dirOf(sub, old)
         fsOf(s, p).delete(p, true)
       }
     }
+    fold
+  }
 }

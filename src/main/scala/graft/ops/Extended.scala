@@ -2494,7 +2494,9 @@ object Extended {
     *    ([[annStoreApply]]), a compaction ([[annStoreGc]]), a stream
     *    micro-batch — is one bid and one rename: its live rows
     *    (dead = false) and tombstones (dead = true) land together, and a
-    *    fold bid holds the whole resolved view.
+    *    fold bid holds the whole resolved view, range-laid like a search
+    *    store ([[annStoreLaid]]). `base` goes with the bids a fold
+    *    supersedes ([[annStoreReclaim]]).
     *
     * The write deletes `dir` first: a query's sink dir outlives the
     * query in one JVM (graft.Bench runs each query twice), and a stale
@@ -2508,6 +2510,29 @@ object Extended {
     codes.write.partitionBy("band").parquet(s"$dir/base")
     layout.write.parquet(s"$dir/layout")
   }
+
+  /** `codes` in the search layout: range-laid and sorted by
+    * (band, code), so a probe list's `code IN (...)` skips row groups.
+    * The coded keys (~20 B/row, no vectors) are materialized first:
+    * repartitionByRange's sampling job would otherwise re-run the
+    * coding or the view resolution before the real shuffle. Range
+    * boundaries may split files differently run to run (the sampler
+    * seed is RDD-id-derived); the rows and their order are unchanged.
+    */
+  private def annStoreLaid(codes: DataFrame): DataFrame =
+    codes.localCheckpoint()
+      .repartitionByRange(col("band"), col("code"))
+      .sortWithinPartitions(col("band"), col("code"))
+
+  /** After bid `id` of the store at `dir` committed: BidLog's GC, and
+    * `base` too once a fold at or below the committed predecessor
+    * supersedes it (the same rule: no replay reads below that fold).
+    */
+  private def annStoreReclaim(s: SparkSession, dir: String, id: Long): Unit =
+    BidLog.gc(s, s"$dir/log", id).foreach { _ =>
+      val base = new org.apache.hadoop.fs.Path(s"$dir/base")
+      base.getFileSystem(s.sparkContext.hadoopConfiguration).delete(base, true)
+    }
 
   private[graft] def annStoreLayout(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/layout")
@@ -2547,43 +2572,58 @@ object Extended {
     * (band, vec_id, code), as the view's `bid ≤ tbid` mask does, so a
     * batch's effect never depends on whether it folds. Every read is
     * below `id`, so a replay of bid `id` (a crash before
-    * the stream's commit) is bit-identical. Non-fold writes
-    * repartition(1): an empty batch still commits a schema-bearing part
-    * file for the view's read.
+    * the stream's commit) is bit-identical. An empty batch still
+    * commits a schema-bearing part file (Spark's writer keeps one for
+    * partition 0), so the view's read never meets an empty bid.
     */
   private[graft] def annStoreApply(events: DataFrame, dir: String,
       id: Long, foldEvery: Int = BidLog.FoldEvery): Unit = {
     val s = events.sparkSession
     val log = s"$dir/log"
     val layout = annStoreLayout(s, dir)
-    def codesOf(op: String, v: String): DataFrame = annStoreCodes(
-      events.filter(col("op") === op).select(col("vec_id"), col(v).as("v")),
+    // code the batch ONCE: every coding subtree in the plan costs a fixed
+    // analysis time, whatever the batch size (~0.15 s on a 4-core x86
+    // VM, four subtrees before this). The coding carries its `vec_id`
+    // column through untouched, so here it carries (vec_id, kind): the
+    // event's op for `v`, "old" for an ups event's `v_old`.
+    val coded = annStoreCodes(
+      events.select(struct(col("vec_id"), col("op").as("kind")).as("vec_id"),
+          col("v"))
+        .unionByName(events.filter(col("op") === "ups")
+          .select(struct(col("vec_id"), lit("old").as("kind")).as("vec_id"),
+            col("v_old").as("v"))),
       layout)
-    val changed = codesOf("ups", "v_old").withColumnRenamed("code", "code_old")
-      .join(codesOf("ups", "v"), Seq("vec_id", "band"))
-      .filter(col("code_old") =!= col("code"))
-      .localCheckpoint() // both row sets read it; batch-sized
-    val adds = codesOf("add", "v")
-      .unionByName(changed.select(col("vec_id"), col("code"), col("band")))
-    val kills = codesOf("del", "v")
-      .unionByName(changed.select(col("vec_id"), col("code_old").as("code"),
-        col("band")))
-    if (BidLog.live(s, log, id).size + 1 < foldEvery)
-      BidLog.commit(adds.withColumn("dead", lit(false))
-        .unionByName(kills.withColumn("dead", lit(true))).repartition(1),
-        log, id)
+      .select(col("vec_id.vec_id").as("vec_id"), col("vec_id.kind").as("kind"),
+        col("code"), col("band"))
+    val rows = coded.filter(col("kind").isin("add", "del"))
+      .select(col("vec_id"), col("code"), col("band"),
+        (col("kind") === "del").as("dead"))
+      .unionByName(coded.filter(col("kind").isin("ups", "old"))
+        .groupBy(col("vec_id"), col("band"))
+        .agg(max(when(col("kind") === "ups", col("code"))).as("code"),
+          max(when(col("kind") === "old", col("code"))).as("code_old"))
+        .filter(col("code_old") =!= col("code"))
+        .select(col("vec_id"), col("band"), explode(array(
+          struct(col("code"), lit(false).as("dead")),
+          struct(col("code_old").as("code"), lit(true).as("dead")))).as("r"))
+        .select(col("vec_id"), col("r.code").as("code"), col("band"),
+          col("r.dead").as("dead")))
+    if (BidLog.live(s, log, id).size + 1 < foldEvery) BidLog.commit(rows, log, id)
     else
-      annStoreFold(annStoreViewAt(s, dir, id).unionByName(adds)
-        .join(kills, Seq("band", "vec_id", "code"), "left_anti"), dir, id)
-    BidLog.gc(s, log, id)
+      annStoreFold(annStoreViewAt(s, dir, id)
+        .unionByName(rows.filter(!col("dead")).drop("dead"))
+        .join(rows.filter(col("dead")).drop("dead"),
+          Seq("band", "vec_id", "code"), "left_anti"), dir, id)
+    annStoreReclaim(s, dir, id)
   }
 
   /** Commit the resolved (band, code, vec_id) rows `view` as fold bid
-    * `id`: it supersedes base and every earlier bid.
+    * `id`, in the search layout: it supersedes base and every earlier
+    * bid, and a probe of the folded store still skips row groups.
     */
   private def annStoreFold(view: DataFrame, dir: String, id: Long): Unit =
-    BidLog.commit(view.select(col("vec_id"), col("code"), col("band"),
-      lit(false).as("dead")), s"$dir/log", id, fold = true)
+    BidLog.commit(annStoreLaid(view.select(col("vec_id"), col("code"),
+      col("band"), lit(false).as("dead"))), s"$dir/log", id, fold = true)
 
   /** Compaction trigger: the store folds when its live tombstones reach
     * 1/[[AnnGcTrigger]] of its live physical rows (integer-exact
@@ -2596,9 +2636,12 @@ object Extended {
   val AnnGcTrigger = 20
 
   /** GC: at the [[AnnGcTrigger]], commit the resolved view as a fold at
-    * the next bid (BidLog drops the bids below it once a later bid
-    * commits); below it nothing is written and reads keep masking. The
-    * trigger's two counts come back in one driver round-trip.
+    * the next bid and reclaim base and every bid below it at once; below
+    * the trigger nothing is written and reads keep masking. GC is a batch
+    * step that takes its bid from the listing, so no replay reads below
+    * its own fold (a stream store compacts through its fold cadence
+    * instead). The trigger's two counts come back in one driver
+    * round-trip; base contributes only its parquet footers' row counts.
     */
   private[graft] def annStoreGc(s: SparkSession, dir: String): Unit = {
     val id = annStoreNextBid(s, dir)
@@ -2610,7 +2653,7 @@ object Extended {
       val nTombs = r.getLong(0)
       if (nTombs > 0 && nTombs * AnnGcTrigger >= r.getLong(1) - nTombs) {
         annStoreFold(annStoreViewAt(s, dir, id), dir, id)
-        BidLog.gc(s, s"$dir/log", id)
+        annStoreReclaim(s, dir, id + 1)
       }
     }
   }
@@ -2643,23 +2686,26 @@ object Extended {
   /** (physical rows, tombstones) below bid `bound`, each
     * (band, code, vec_id, bid): base (bid −1) unless a fold supersedes
     * it, plus the live range of the log — None for tombstones when no
-    * bid is live.
+    * bid after the fold is live. A fold holds no tombstones, so their
+    * read leaves it out: the mask stays batch-sized and broadcasts
+    * into the view's join instead of shuffling a store-sized side.
     */
   private def annStoreRowsAt(s: SparkSession, dir: String,
       bound: Long): (DataFrame, Option[DataFrame]) = {
     val log = s"$dir/log"
     val live = BidLog.live(s, log, bound)
-    val logged = BidLog.read(s, log, live).map(_.select(col("band"),
-      col("code"), col("vec_id"), col("bid").cast("long").as("bid"),
-      col("dead")))
+    val fold = live.headOption.filter(BidLog.isFold(s, log, _))
+    def rows(ids: Seq[Long], dead: Boolean): Option[DataFrame] =
+      BidLog.read(s, log, ids).map(_.filter(col("dead") === dead)
+        .select(col("band"), col("code"), col("vec_id"),
+          col("bid").cast("long").as("bid")))
     val base =
-      if (live.headOption.exists(BidLog.isFold(s, log, _))) None
+      if (fold.isDefined) None
       else Some(s.read.parquet(s"$dir/base")
         .select(col("band").cast("int").as("band"), col("code"),
           col("vec_id"), lit(-1L).as("bid")))
-    val phys = (base.toSeq ++ logged.map(_.filter(!col("dead")).drop("dead")))
-      .reduce(_ unionByName _)
-    (phys, logged.map(_.filter(col("dead")).drop("dead")))
+    ((base.toSeq ++ rows(live, dead = false)).reduce(_ unionByName _),
+      rows(live.filterNot(fold.contains), dead = true))
   }
 
   /** Hash tables the store-backed search probes (of the store's nbands):
@@ -2672,29 +2718,15 @@ object Extended {
 
   /** Write the search-optimized index store for `all` at its pinned
     * layout ([[annStoreWrite]]): band-partitioned directories, files
-    * range-laid and sorted by code so the probe list's `code IN (...)`
-    * skips row groups. Shared by the registered queries and the
-    * ann-lifecycle probe's search rows.
+    * in the search layout ([[annStoreLaid]]; the corpus is coded once,
+    * at 100 TB half the build's corpus reads). Shared by the registered
+    * queries and the ann-lifecycle probe's search rows.
     */
   private[graft] def annSearchStoreWrite(s: SparkSession, all: DataFrame,
       dir: String): Unit = {
     // one layout/count action for the whole build ([[embLayoutCollect]])
     val lf = embLayoutCollect(s, all)
-    annStoreWrite(annStoreCodes(all, lf)
-      // code the corpus ONCE (round 18): repartitionByRange runs a
-      // RangePartitioner sampling job that re-executes its child — the
-      // full scan + md5 band coding — before the real shuffle, i.e. two
-      // corpus passes per store build. Materializing the coded keys
-      // (~20 B/row, no vectors) lets the sampler and the layout shuffle
-      // both read the checkpointed rows; at 100 TB that halves the
-      // build's corpus reads for a bounded keys-only footprint. Range
-      // boundaries may split band files differently (sampler seed is
-      // RDD-id-derived), but the store contract is the band dirs +
-      // code-sorted row groups, which are unchanged; AnnGcSpec asserts
-      // rows, the oracle recomputes from base tables.
-      .localCheckpoint()
-      .repartitionByRange(col("band"), col("code"))
-      .sortWithinPartitions(col("band"), col("code")), lf, dir)
+    annStoreWrite(annStoreLaid(annStoreCodes(all, lf)), lf, dir)
   }
 
   /** The search leg every store-backed ANN search shares (batch, live,
@@ -2845,7 +2877,8 @@ object Extended {
     *    batch-proportional, no store access;
     *  - READS mask tombstones temporally ([[annStoreView]]);
     *  - GC folds the resolved view into one bid once the tombstone
-    *    fraction crosses the integer trigger ([[annStoreGc]]; amortized
+    *    fraction crosses the integer trigger and drops base and the
+    *    bids the fold supersedes ([[annStoreGc]]; amortized
     *    IO ≤ trigger × deletes — the "GC cost tracks the deleted
     *    fraction" contract, measured by `Run ann-lifecycle gc` at
     *    sf1/sf10, SCALING.md round 17).

@@ -83,6 +83,20 @@ class AnnGcSpec extends SparkSpec {
     // the live physical rows — the next trigger's denominator — are the
     // fold's alone (it supersedes base)
     assert(logRows(dir, dead = false).count() === survivors * nbands)
+    // GC reclaims space: base and the pre-fold delete bid leave the disk
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/base")),
+      "the fold left base on disk")
+    assert(BidLog.ids(spark, log) === Seq(1L),
+      s"the fold left pre-fold bids on disk: ${BidLog.ids(spark, log)}")
+    // ...and stay reclaimed across the next committed bid, whose view
+    // reads the fold alone
+    apply(ops.Extended.annEvents(all.filter(col("vec_id") % 100 === 7), "del"), dir)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/base")))
+    assert(BidLog.ids(spark, log) === Seq(1L, 2L))
+    assert(ops.Extended.annStoreView(spark, dir).count() === nbands *
+      all.filter(col("vec_id") % 10 =!= 3 && col("vec_id") % 100 =!= 7).count())
   }
 
   test("PLANTED upsert skew: the store-wide fold keeps the view bit-identical") {

@@ -147,14 +147,14 @@ class AnnStoreStreamSpec extends SparkSpec {
     fold3(b2, 2L)
     assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(false),
       "replaying the fold changed the view")
-    // pre-fold deltas survive until a LATER batch commits (its replay
-    // still needs them), then b3's GC drops them
+    // pre-fold deltas and base survive until a LATER batch commits (the
+    // fold's replay still needs them), then b3's GC drops them
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/log/bid=0")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/base")))
     fold3(b3, 3L)
-    Seq(0, 1).foreach { old =>
-      assert(!fs.exists(
-        new org.apache.hadoop.fs.Path(s"$dir/log/bid=$old")),
-        s"log/bid=$old not GC'd after the post-fold batch")
+    Seq("log/bid=0", "log/bid=1", "base").foreach { old =>
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$old")),
+        s"$old not GC'd after the post-fold batch")
     }
     // resurrection THROUGH the fold: the bid-1 tombstone was resolved
     // into the fold, so the verbatim re-add (same code) is served

@@ -704,6 +704,43 @@ class ScaleSpec extends SparkSpec {
       s"code probe list not pushed to the parquet scan: ${scan.get}")
   }
 
+  test("a search over a GC-folded ANN store pushes the probe list onto its code-sorted fold") {
+    // After a GC fold the store's rows live in one bid-log fold, not in
+    // the band dirs. The fold keeps the search layout — each file sorted
+    // by (band, code), files holding disjoint key ranges — and the probe
+    // list reaches its scan as pushed filters, so a probe of a folded
+    // store still skips the row groups outside it. The store is built
+    // unsorted (annBandStoreBuild) and takes an add bid, so the view the
+    // fold resolves is in no (band, code) order of its own.
+    val all = ops.Extended.vecs(spark, sfDir)
+    val corpus = all.filter(col("vec_id") % 10 < 8)
+    val dir = new java.io.File("target/scale_spec_ann_fold").getAbsolutePath
+    ops.Extended.annBandStoreBuild(corpus,
+      ops.Extended.embLayoutCollect(spark, corpus), dir)
+    ops.Extended.annStoreApply(ops.Extended.annEvents(
+      all.filter(col("vec_id") % 10 >= 8), "add"), dir, 0L)
+    ops.Extended.annStoreApply(ops.Extended.annEvents(
+      all.filter(col("vec_id") % 10 === 3), "del"), dir, 1L)
+    ops.Extended.annStoreGc(spark, dir)
+    val log = s"$dir/log"
+    assert(core.BidLog.isFold(spark, log, 2L), "the 10% delete did not fold")
+    // a small file is one read split, so its rows come back in file order
+    val ranges = core.BidLog.at(spark, log, 2L).inputFiles.toSeq.flatMap { f =>
+      val keys = spark.read.parquet(f).select(col("band"), col("code"))
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+      assert(keys == keys.sorted, s"fold file not sorted by (band, code): $f")
+      keys.headOption.map(_ -> keys.last)
+    }.sorted
+    assert(ranges.nonEmpty, "the fold holds no rows")
+    ranges.sliding(2).filter(_.size == 2).foreach { case Seq((_, hi), (lo, _)) =>
+      assert(Ordering[(Int, Long)].lt(hi, lo), s"fold files overlap: $ranges")
+    }
+    val plan = planOf(ops.Extended.annStoreSearchDir(spark, all, dir))
+    assert(plan.linesIterator.exists(l => l.contains("bid=2") &&
+        l.contains("In(band") && l.contains("In(code")),
+      s"probe list not pushed to the fold's scan:\n$plan")
+  }
+
   test("AQE splits a skewed join partition at runtime (skew=true)") {
     // The salting in salted_skew_join is the PLANNED answer to skew; this
     // proves the RUNTIME answer also fires: AQE detects the oversized
