@@ -11,6 +11,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * holds one `bid=<id>` dir per micro-batch id; the stores keep their
   * own data semantics and call this module for everything else:
   *
+  *  - PARTS: a bid is one frame or named parts `bid=<id>/<part>`; a part
+  *    read with the subdir as `basePath` keeps the `bid` column (partition
+  *    discovery skips a leaf name without `=`).
   *  - READ: batch `id` reads only bids strictly below its own, so a
   *    replay after a crash-before-commit (offset log written, commit log
   *    not) re-reads the same chain and ignores its own earlier attempt.
@@ -19,26 +22,25 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   *    and holds the store's whole resolved state, so it supersedes every
   *    earlier bid; a read's live range runs from the newest fold below
   *    its bound. A store whose every bid is a full snapshot (the
-  *    aggregate, the cross-modal remap) writes every bid as a fold, and
-  *    the same rules give "read the predecessor, keep two snapshots".
-  *  - COMMIT: a bid is written into a hidden sibling (`.pending-<id>`;
-  *    the fold marker goes inside), a replay's old `bid=<id>` is deleted,
-  *    and the sibling is renamed into place. A crash mid-write leaves
-  *    only the hidden dir, which no listing or read sees, so a reader
-  *    never meets a bid without its part files or a fold without its
-  *    marker. Two Hadoop/Spark rules fix the shape: `rename` into an
-  *    EXISTING dir moves the source inside it (hence the delete), and
-  *    Spark's file listing reads a name like `_x=…` as a partition
-  *    (hidden names start with `.`, or with `_` and hold no `=`).
-  *  - GC: after batch `id` commits its own bids, everything below the
+  *    aggregate) writes every bid as a fold, and the same rules give
+  *    "read the predecessor, keep two snapshots".
+  *  - COMMIT: a bid's parts are written into a hidden sibling
+  *    (`.pending-<id>`; the fold marker goes inside), a replay's old
+  *    `bid=<id>` is deleted, and the sibling is renamed into place. A
+  *    crash mid-write leaves only the hidden dir, which no listing or
+  *    read sees, so a reader never meets a bid missing a part or a part
+  *    file, or a fold without its marker. Two Hadoop/Spark rules fix the
+  *    shape: `rename` into an EXISTING dir moves the source inside it
+  *    (hence the delete), and Spark's file listing reads a name like
+  *    `_x=…` as a partition (hidden names start with `.`, or with `_`
+  *    and hold no `=`).
+  *  - GC: after batch `id` commits its own bid, everything below the
   *    newest fold at or below the committed predecessor is dropped — a
   *    replay of `id` reads from that fold on, and earlier batches are
   *    committed. Steady-state fan-in is bounded by the fold cadence.
   *
-  * One bid is one rename. Every store but one writes a single subdir
-  * per batch, so a batch is one commit; the cross-modal store writes
-  * four (`members`/`buckets`/`verdicts`/`remap`) and commits them one
-  * rename at a time.
+  * Every store writes one subdir and commits one bid per batch, so one
+  * batch is one rename.
   */
 object BidLog {
 
@@ -100,13 +102,14 @@ object BidLog {
     ids(s, sub).filter(i => i < bound && from.forall(i >= _))
   }
 
-  /** Union of bids `ids` of `sub` with the `bid` column kept (basePath
-    * read); None when `ids` is empty.
+  /** Union of part `part` ("" is the whole bid) of bids `ids` of `sub`
+    * with the `bid` column kept (basePath read); None when `ids` is empty.
     */
-  def read(s: SparkSession, sub: String, ids: Seq[Long]): Option[DataFrame] =
+  def read(s: SparkSession, sub: String, ids: Seq[Long],
+      part: String = ""): Option[DataFrame] =
     if (ids.isEmpty) None
     else Some(s.read.option("basePath", sub)
-      .parquet(ids.map(dirOf(sub, _).toString): _*))
+      .parquet(ids.map(i => s"${dirOf(sub, i)}/$part"): _*))
 
   /** The live range of `sub` below `bound`, read with its `bid` column. */
   def readLive(s: SparkSession, sub: String, bound: Long): Option[DataFrame] =
@@ -116,24 +119,29 @@ object BidLog {
   def at(s: SparkSession, sub: String, id: Long): DataFrame =
     s.read.parquet(dirOf(sub, id).toString)
 
-  /** Write `df` (plus the fold marker) into bid `id`'s hidden sibling,
-    * uncommitted; returns the sibling. [[commit]] publishes it.
+  private def pendingOf(sub: String, id: Long): Path = new Path(sub, s".pending-$id")
+
+  /** Write `df` as part `part` ("" is the whole bid) of bid `id`'s hidden
+    * sibling, plus the fold marker, uncommitted. [[commit]] publishes it.
     */
   private[graft] def stage(df: DataFrame, sub: String, id: Long,
-      fold: Boolean): Path = {
-    val p = new Path(sub, s".pending-$id")
-    df.write.mode("overwrite").parquet(p.toString)
+      fold: Boolean, part: String = ""): Unit = {
+    val p = pendingOf(sub, id)
+    df.write.mode("overwrite").parquet(s"$p/$part")
     if (fold) fsOf(df.sparkSession, p).create(new Path(p, FoldMarker), true).close()
-    p
   }
 
-  /** Write `df` as bid `id` of `sub` with one rename (see the COMMIT
-    * rule above); `fold` marks it as superseding every earlier bid.
+  /** Write `parts` (a single-frame store's one part is named "") as bid
+    * `id` of `sub` with one rename (see the COMMIT rule above); `fold`
+    * marks it as superseding every earlier bid.
     */
-  def commit(df: DataFrame, sub: String, id: Long, fold: Boolean = false): Unit = {
-    val staged = stage(df, sub, id, fold)
+  def commit(parts: Seq[(String, DataFrame)], sub: String, id: Long,
+      fold: Boolean = false): Unit = {
+    val staged = pendingOf(sub, id)
     val dst = dirOf(sub, id)
-    val fs = fsOf(df.sparkSession, dst)
+    val fs = fsOf(parts.head._2.sparkSession, dst)
+    fs.delete(staged, true)
+    parts.foreach { case (part, df) => stage(df, sub, id, fold, part) }
     fs.delete(dst, true)
     if (!fs.rename(staged, dst))
       throw new java.io.IOException(s"bid commit failed: $staged -> $dst")

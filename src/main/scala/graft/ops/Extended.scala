@@ -2608,7 +2608,7 @@ object Extended {
           struct(col("code_old").as("code"), lit(true).as("dead")))).as("r"))
         .select(col("vec_id"), col("r.code").as("code"), col("band"),
           col("r.dead").as("dead")))
-    if (BidLog.live(s, log, id).size + 1 < foldEvery) BidLog.commit(rows, log, id)
+    if (BidLog.live(s, log, id).size + 1 < foldEvery) BidLog.commit(Seq("" -> rows), log, id)
     else
       annStoreFold(annStoreViewAt(s, dir, id)
         .unionByName(rows.filter(!col("dead")).drop("dead"))
@@ -2622,8 +2622,8 @@ object Extended {
     * bid, and a probe of the folded store still skips row groups.
     */
   private def annStoreFold(view: DataFrame, dir: String, id: Long): Unit =
-    BidLog.commit(annStoreLaid(view.select(col("vec_id"), col("code"),
-      col("band"), lit(false).as("dead"))), s"$dir/log", id, fold = true)
+    BidLog.commit(Seq("" -> annStoreLaid(view.select(col("vec_id"), col("code"),
+      col("band"), lit(false).as("dead")))), s"$dir/log", id, fold = true)
 
   /** Compaction trigger: the store folds when its live tombstones reach
     * 1/[[AnnGcTrigger]] of its live physical rows (integer-exact
@@ -2665,9 +2665,9 @@ object Extended {
   /** The view below bid `bound`: physical rows minus the TEMPORAL
     * tombstone mask — a tombstone kills only (band, vec_id, code) rows
     * of its own bid or earlier. A delete followed by a RE-ADD at the same
-    * embedding (same code) must resurrect the row, and only the bid order
-    * separates those states. The mask ships only keys, never vectors,
-    * and a store without live bids reads base alone.
+    * embedding (same code) must resurrect the row, so a row dies iff a
+    * tombstone of its key has a bid at or after its own (one anti join,
+    * keys only). A store without live bids reads base alone.
     */
   private[graft] def annStoreViewAt(s: SparkSession, dir: String,
       bound: Long): DataFrame = {
@@ -2675,10 +2675,9 @@ object Extended {
     tombs match {
       case None => phys.select(col("band"), col("code"), col("vec_id"))
       case Some(t) =>
-        val tmax = t.groupBy(col("band"), col("vec_id"), col("code"))
-          .agg(max(col("bid")).as("tbid"))
-        phys.join(tmax, Seq("band", "vec_id", "code"), "left")
-          .filter(col("tbid").isNull || col("bid") > col("tbid"))
+        phys.alias("p").join(t.alias("t"), col("p.band") === col("t.band") &&
+            col("p.vec_id") === col("t.vec_id") && col("p.code") === col("t.code") &&
+            col("p.bid") <= col("t.bid"), "left_anti")
           .select(col("band"), col("code"), col("vec_id"))
     }
   }

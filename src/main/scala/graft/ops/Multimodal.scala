@@ -195,7 +195,7 @@ object Multimodal {
     * round-15 members-schema note): the content-defined pixel semantics
     * change every persisted `ph`/`ph64` VALUE, not just the plan — any
     * externally persisted pre-round-16 phash state (most notably the
-    * crossModalStream snapshot's members store, which carries `ph` per
+    * crossModalStream store's `members` parts, which carry `ph` per
     * doc) silently stops matching hashes computed by the new code. Such
     * state needs a ONE-TIME full rebuild at the new semantics; there is
     * no in-place migration because the old chunked pixels are not

@@ -435,7 +435,7 @@ object EventStream {
     */
   def idempotentParquetSink(df: DataFrame, outDir: String, ckDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    BidLog.stream(df, ckDir)((batch, id) => BidLog.commit(batch, outDir, id))
+    BidLog.stream(df, ckDir)((batch, id) => BidLog.commit(Seq("" -> batch), outDir, id))
 
   // ---- incremental aggregate maintenance, streaming twin -----------------
 
@@ -467,7 +467,7 @@ object EventStream {
       .map(prev => graft.ops.Aggregates.userAggMerge(
         prev.drop("bid").unionByName(partial)))
       .getOrElse(partial)
-    BidLog.commit(merged, stateDir, id, fold = true)
+    BidLog.commit(Seq("" -> merged), stateDir, id, fold = true)
     BidLog.gc(batch.sparkSession, stateDir, id)
   }
 
@@ -478,11 +478,11 @@ object EventStream {
     * curation family (r14 verdict task 7): as documents ARRIVE, maintain
     * the text near-dup clusters incrementally and re-emit the
     * text-dup-but-media-distinct verdicts for the corpus seen so far.
-    * State (parquet bids of the [[graft.core.BidLog]]): `members` (doc_id, root, n_chars, ph — everything the
-    * canonical election and the phash verdict need) and `buckets`
-    * (band, bkey, root — the LSH connectivity frontier, every bucket
-    * pointing at its component's ROOT so a future arrival unions in one
-    * join, the path-compressed union-find shape).
+    * State: one [[graft.core.BidLog]] bid per batch in `<stateDir>/log`
+    * ([[crossModalBid]]): `members` (doc_id, root, n_chars, ph — all the
+    * election and phash verdict need), `buckets` (band, bkey, root — the
+    * LSH frontier, every bucket pointing at its component's ROOT so an
+    * arrival unions in one join), `verdicts` and `remap`.
     *
     * Per micro-batch: band the arriving docs with the SAME LSH helpers
     * the batch query uses (Extended.signaturesOf/bandsOf), build the
@@ -492,11 +492,11 @@ object EventStream {
     * {batch docs} ∪ {touched roots} relabel exactly like the batch CC
     * over the full graph, because stored roots ARE min-reachable ids),
     * remap merged roots through the old→new map, and commit the batch's
-    * own bid (members + buckets + the verdict output derived from
-    * members by the batch query's election: canonical = longest text,
-    * tie lowest id; media_match = aHash Hamming ≤ 1; NULL phash →
-    * false). Replay safety is the bid log's: a replayed batch re-reads
-    * the bids below its own and rewrites its own.
+    * own bid, one rename (members + buckets + remap + the verdicts by
+    * the batch query's election: canonical = longest text, tie lowest
+    * id; media_match = aHash Hamming ≤ 1; NULL phash → false). Replay
+    * safety is the bid log's: a replayed batch re-reads the bids below
+    * its own and rewrites its own.
     *
     * Honest divergence note: the batch star contraction drops buckets
     * outside [2, 1000] members RETROACTIVELY; an online twin cannot
@@ -544,16 +544,20 @@ object EventStream {
       s: org.apache.spark.sql.SparkSession, stateDir: String,
       bound: Long): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    BidLog.readLive(s, s"$stateDir/verdicts", bound) match {
-      case None => Seq.empty[(Long, Long, Long, Option[Int], Boolean)]
-        .toDF("doc_id", "cluster_id", "canon_id", "hamming", "media_match")
-      case Some(v) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc_id")).orderBy(col("bid").desc)
-        v.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("doc_id"), col("cluster_id"), col("canon_id"),
-            col("hamming"), col("media_match"))
-    }
+    val log = s"$stateDir/log"
+    BidLog.read(s, log, BidLog.live(s, log, bound), "verdicts")
+      .map(newestPerKey(_, "doc_id"))
+      .getOrElse(Seq.empty[(Long, Long, Long, Option[Int], Boolean)]
+        .toDF("doc_id", "cluster_id", "canon_id", "hamming", "media_match"))
+  }
+
+  /** The upsert view of a part: each `key`'s row from its newest bid. */
+  private def newestPerKey(rows: org.apache.spark.sql.DataFrame, key: String)
+      : org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(key)).orderBy(col("bid").desc)
+    rows.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .drop("rn", "bid")
   }
 
   /** Current cross-modal verdicts (the stream's queryable output). */
@@ -561,40 +565,43 @@ object EventStream {
       stateDir: String): org.apache.spark.sql.DataFrame =
     crossModalVerdictsAt(s, stateDir, Long.MaxValue)
 
-  /** One micro-batch of the cross-modal union-find merge (factored out
-    * so the spec can drive batches directly). See [[crossModalStream]].
-    *
-    * r17 layout (r16 verdict task 2 — the full-snapshot overwrite was
-    * the one measured state-linear term left, ~2.3 s/decade): the state
-    * is APPEND-ONLY deltas plus a compact remap table, so a batch
-    * WRITES only batch-proportional data:
-    *
-    *  - `members`: this batch's docs, stored with their
-    *    ARRIVAL root — member rows are immutable forever;
-    *  - `buckets`: only bucket keys NOT already in the store,
-    *    with their arrival root — bucket rows are immutable too;
-    *  - `remap`: the (old_root → current_root) table, fully rewritten
-    *    each batch (every remap bid is a fold) but MERGE-sized, not
-    *    state-sized (one row per root ever merged away; composition
-    *    keeps it path-compressed so reads resolve in ONE join);
-    *  - `verdicts`: verdict rows ONLY for clusters this batch
-    *    touched (upserts — [[crossModalVerdictsAt]] is the view).
-    *
-    * State-sided work left per batch: columnar SCANS of the member
-    * and bucket views (the bucket (band,bkey) probe and the remap
-    * joins) — no state-sized WRITE. Every `foldEvery`-th batch FOLDS
-    * the resolved state into its own bid, which amortizes the old full
-    * rewrite to 1/64 of batches and bounds the delta fan-in. Reads,
-    * commits and GC are the [[graft.core.BidLog]] protocol, per subdir.
+  /** One micro-batch of the cross-modal union-find merge: one commit of
+    * [[crossModalBid]] and one GC. See [[crossModalStream]].
     */
   private[graft] def mergeCrossModalSnapshot(
       batch: Dataset[org.apache.spark.sql.Row], stateDir: String,
       id: Long, foldEvery: Int = BidLog.FoldEvery): Unit = {
+    val log = s"$stateDir/log"
+    val (parts, fold) = crossModalBid(batch, log, id, foldEvery)
+    BidLog.commit(parts, log, id, fold)
+    BidLog.gc(batch.sparkSession, log, id)
+  }
+
+  /** Bid `id` of the cross-modal `log` (its named parts) and whether it
+    * folds. The parts are APPEND-ONLY deltas, so a batch WRITES only
+    * batch-proportional data:
+    *
+    *  - `members`: this batch's docs with their ARRIVAL root (immutable);
+    *  - `buckets`: only bucket keys NOT already in the store, with their
+    *    arrival root (immutable);
+    *  - `verdicts`: rows ONLY for clusters this batch touched (upserts —
+    *    [[crossModalVerdictsAt]] is the view);
+    *  - `remap`: (old_root → current_root) rows ONLY for roots this batch
+    *    moved; the view is each old_root's newest row, path-compressed (a
+    *    merged root never un-merges), so reads resolve in ONE join.
+    *
+    * State-sided work per batch: columnar SCANS of the member and bucket
+    * views — no state-sized WRITE. Every `foldEvery`-th batch FOLDS the
+    * resolved members, buckets and verdicts (and an empty remap) into
+    * its own bid, amortizing the full rewrite to 1/64 of batches.
+    */
+  private[graft] def crossModalBid(
+      batch: Dataset[org.apache.spark.sql.Row], log: String,
+      id: Long, foldEvery: Int): (Seq[(String, org.apache.spark.sql.DataFrame)], Boolean) = {
     val s = batch.sparkSession
     import s.implicits._
-    val mSub = s"$stateDir/members"; val bSub = s"$stateDir/buckets"
-    val vSub = s"$stateDir/verdicts"; val rSub = s"$stateDir/remap"
-    val remapOld = BidLog.readLive(s, rSub, id).map(_.drop("bid"))
+    val live = BidLog.live(s, log, id)
+    val remapOld = BidLog.read(s, log, live, "remap").map(newestPerKey(_, "old_root"))
       .getOrElse(Seq.empty[(Long, Long)].toDF("old_root", "new_root"))
     def resolve(df: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = {
@@ -604,15 +611,14 @@ object EventStream {
         .select(others.map(c => col(s"x.$c")) :+
           coalesce(col("r.new_root"), col("x.root")).as("root"): _*)
     }
-    val membersOldRaw = BidLog.readLive(s, mSub, id)
+    val membersOldRaw = BidLog.read(s, log, live, "members")
       .map(_.select(col("doc_id"), col("root"), col("n_chars"), col("ph")))
       .getOrElse(Seq.empty[(Long, Long, Long, Option[Long])]
         .toDF("doc_id", "root", "n_chars", "ph"))
-    val bucketsOldRaw = BidLog.readLive(s, bSub, id)
+    val bucketsOldRaw = BidLog.read(s, log, live, "buckets")
       .map(_.select(col("band"), col("bkey"), col("root")))
       .getOrElse(Seq.empty[(Int, String, Long)].toDF("band", "bkey", "root"))
     val bucketsOld = resolve(bucketsOldRaw)
-
     val bdocs = batch
       .select(col("doc_id"), col("text"), col("n_chars").cast("long").as("n_chars"))
     val words = bdocs.select(col("doc_id"), col("n_chars"),
@@ -649,27 +655,26 @@ object EventStream {
     val rootMap = cc
       .select(col("doc_id").as("old_root"), col("cluster_id").as("new_root"))
 
-    // remap: compose the old table through this batch's rootMap, then
-    // add entries for TOUCHED PRIOR ROOTS that moved (never for batch
-    // docs — their member rows are appended with the post-CC root
-    // directly, so adding them would grow the table corpus-sized)
+    // remap: TOUCHED PRIOR ROOTS that moved (never batch docs — their
+    // member rows carry the post-CC root, so adding them would grow the
+    // table corpus-sized), and the older entries pointing at them
     val touchedPrior = prevEdges.select(col("d2").as("old_root")).distinct()
     val remapDelta = rootMap
       .join(touchedPrior, Seq("old_root"), "semi")
       .filter(col("old_root") =!= col("new_root"))
-    val remapNew = remapOld.alias("o")
-      .join(rootMap.alias("m2"), col("o.new_root") === col("m2.old_root"), "left")
-      .select(col("o.old_root"),
-        coalesce(col("m2.new_root"), col("o.new_root")).as("new_root"))
-      .unionByName(remapDelta)
-      .localCheckpoint(false)
+    val remapMoved = remapOld.alias("o")
+      .join(rootMap.alias("m2"), col("o.new_root") === col("m2.old_root"))
+      .filter(col("m2.new_root") =!= col("o.new_root"))
+      .select(col("o.old_root"), col("m2.new_root"))
 
+    // materialized once: written as a part, read again by the verdicts
     val newMembers = words.select(col("doc_id"), col("n_chars"))
       .join(ph, Seq("doc_id"), "left")
       .join(cc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("root"),
         col("n_chars"), col("ph"))
+      .localCheckpoint(false)
     val newBuckets = bStar
       .select(col("band"), col("bkey"), expr("element_at(ds, 1)").as("doc_id"))
       .join(broadcast(hits.select(col("band"), col("bkey"))),
@@ -677,45 +682,34 @@ object EventStream {
       .join(cc, Seq("doc_id"), "left")
       .select(col("band"), col("bkey"),
         coalesce(col("cluster_id"), col("doc_id")).as("root"))
+    val membersNow = resolve(membersOldRaw).alias("m")
+      .join(rootMap.alias("m3"), col("m.root") === col("m3.old_root"), "left")
+      .select(col("m.doc_id"),
+        coalesce(col("m3.new_root"), col("m.root")).as("root"),
+        col("m.n_chars"), col("m.ph"))
+      .unionByName(newMembers)
 
-    val willFold = BidLog.live(s, mSub, id).size + 1 >= foldEvery
-    if (!willFold) {
-      BidLog.commit(newMembers, mSub, id)
-      BidLog.commit(newBuckets, bSub, id)
-      // post-batch members of TOUCHED clusters only (read the written
-      // delta back — never recompute the batch phash for the verdicts)
-      val written = BidLog.at(s, mSub, id)
-      val membersNow = resolve(membersOldRaw).alias("m")
-        .join(rootMap.alias("m3"), col("m.root") === col("m3.old_root"), "left")
-        .select(col("m.doc_id"),
-          coalesce(col("m3.new_root"), col("m.root")).as("root"),
-          col("m.n_chars"), col("m.ph"))
-        .unionByName(written)
-      val touchedRoots = remapDelta.select(col("new_root").as("root"))
-        .unionByName(written.select(col("root")))
-        .distinct()
-      BidLog.commit(xmElect(membersNow.join(touchedRoots, Seq("root"), "semi")),
-        vSub, id)
-      BidLog.commit(remapNew, rSub, id, fold = true)
+    if (live.size + 1 < foldEvery) {
+      // batch-sized; the checkpoint's estimate would not broadcast it
+      val touchedRoots = broadcast(remapDelta.select(col("new_root").as("root"))
+        .unionByName(newMembers.select(col("root")))
+        .distinct())
+      (Seq("members" -> newMembers, "buckets" -> newBuckets,
+        "verdicts" -> xmElect(membersNow.join(touchedRoots, Seq("root"), "semi")),
+        "remap" -> remapMoved.unionByName(remapDelta)), false)
     } else {
       // FOLD: the resolved full state lands in THIS bid, superseding
       // every earlier delta; remap resets to empty
-      BidLog.commit(resolve(membersOldRaw).alias("m")
-        .join(rootMap.alias("m3"), col("m.root") === col("m3.old_root"), "left")
-        .select(col("m.doc_id"),
-          coalesce(col("m3.new_root"), col("m.root")).as("root"),
-          col("m.n_chars"), col("m.ph"))
-        .unionByName(newMembers), mSub, id, fold = true)
-      BidLog.commit(bucketsOld.alias("b")
-        .join(rootMap.alias("m4"), col("b.root") === col("m4.old_root"), "left")
-        .select(col("b.band"), col("b.bkey"),
-          coalesce(col("m4.new_root"), col("b.root")).as("root"))
-        .unionByName(newBuckets), bSub, id, fold = true)
-      BidLog.commit(xmElect(BidLog.at(s, mSub, id)), vSub, id, fold = true)
-      BidLog.commit(Seq.empty[(Long, Long)].toDF("old_root", "new_root"),
-        rSub, id, fold = true)
+      val folded = membersNow.localCheckpoint(false)
+      (Seq("members" -> folded,
+        "buckets" -> bucketsOld.alias("b")
+          .join(rootMap.alias("m4"), col("b.root") === col("m4.old_root"), "left")
+          .select(col("b.band"), col("b.bkey"),
+            coalesce(col("m4.new_root"), col("b.root")).as("root"))
+          .unionByName(newBuckets),
+        "verdicts" -> xmElect(folded),
+        "remap" -> Seq.empty[(Long, Long)].toDF("old_root", "new_root")), true)
     }
-    Seq(mSub, bSub, vSub, rSub).foreach(BidLog.gc(s, _, id))
   }
 
   // ---- persisted ANN store maintenance stream (round 17) -----------------

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * append-only deltas + a compact remap table (the full members/buckets/
   * verdicts OVERWRITE this probe measured at ~2.3 s/decade in r16 is
   * gone — amortized into the 1/BidLog.FoldEvery fold); the remaining
-  * state-sided terms are the columnar member/bucket view SCANS.
+  * state-sided terms are the columnar member/bucket view SCANS. Each
+  * batch's time is followed by the state dir's bytes on disk.
   *
   * Usage: Run crossmodal <sfDir>
   * Unrecognized extra args fail loudly (round-14 harness rule).
@@ -38,17 +39,14 @@ object CrossModalProbe {
 
     println(s"[crossmodal-probe] dir=$dir docs=${docs.count()} preload=${
       docs.filter(col("doc_id") <= cut1).count()}")
-    time("batch 0: preload state") {
-      graft.streaming.EventStream.mergeCrossModalSnapshot(
-        docs.filter(col("doc_id") <= cut1), state, 0L)
-    }
-    time("batch 1: 5000 docs") {
-      graft.streaming.EventStream.mergeCrossModalSnapshot(
-        docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2), state, 1L)
-    }
-    time("batch 2: 500 docs") {
-      graft.streaming.EventStream.mergeCrossModalSnapshot(
-        docs.filter(col("doc_id") > cut2), state, 2L)
+    val batches = Seq(
+      "batch 0: preload state" -> docs.filter(col("doc_id") <= cut1),
+      "batch 1: 5000 docs" -> docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
+      "batch 2: 500 docs" -> docs.filter(col("doc_id") > cut2))
+    batches.zipWithIndex.foreach { case ((label, b), i) =>
+      time(label)(graft.streaming.EventStream.mergeCrossModalSnapshot(b, state, i.toLong))
+      val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(state)).getLength
+      println(f"[crossmodal-probe] $label: state $bytes%d bytes on disk")
     }
   }
 }

@@ -140,12 +140,12 @@ class CrossModalStreamSpec extends SparkSpec {
         .map(_.getPath.getName).filter(_.startsWith("bid="))
         .map(_.stripPrefix("bid=").toLong).toSet
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$stateDir/members/bid=2/_folded")), "3rd batch did not fold")
+      s"$stateDir/log/bid=2/_folded")), "3rd batch did not fold")
     val got3 = EventStream.crossModalVerdicts(spark, stateDir)
       .as[(Long, Long, Long, Option[Int], Boolean)].collect().toSet
     // replay the FOLDING batch: pre-fold deltas (bids 0,1) must still be
     // readable — GC never ran against the fold at an uncommitted bid
-    assert(bids("members").contains(0L) && bids("members").contains(1L),
+    assert(bids("log").contains(0L) && bids("log").contains(1L),
       "fold GC'd its own read chain before committing")
     EventStream.mergeCrossModalSnapshot(splits(2), stateDir, 2L, foldEvery = 3)
     val got3r = EventStream.crossModalVerdicts(spark, stateDir)
@@ -153,8 +153,8 @@ class CrossModalStreamSpec extends SparkSpec {
     assert(got3r === got3, "replaying the folding batch changed the view")
     // batch 3 commits on top: its GC drops the superseded pre-fold deltas
     EventStream.mergeCrossModalSnapshot(splits(3), stateDir, 3L, foldEvery = 3)
-    assert(bids("members") === Set(2L, 3L),
-      s"superseded deltas not GC'd after the fold committed: ${bids("members")}")
+    assert(bids("log") === Set(2L, 3L),
+      s"superseded deltas not GC'd after the fold committed: ${bids("log")}")
     val gotAll = EventStream.crossModalVerdicts(spark, stateDir)
       .as[(Long, Long, Long, Option[Int], Boolean)].collect().toSet
     assert(gotAll === batchWant(dir),
@@ -164,8 +164,8 @@ class CrossModalStreamSpec extends SparkSpec {
   test("EMPTY micro-batch: merge is a no-op on the view, chain still advances") {
     // Streams fire triggers with zero rows routinely; an empty batch
     // must neither crash the contracted-CC merge (empty edge frame) nor
-    // disturb the view, and must still write its remap chain marker so
-    // replay bookkeeping sees the bid.
+    // disturb the view, and must still commit the log bid so replay
+    // bookkeeping sees it.
     val stateDir = tmp("graft_xm_empty")
     val docs = docsOf(sfDir)
     EventStream.mergeCrossModalSnapshot(docs, stateDir, 0L)
@@ -176,9 +176,46 @@ class CrossModalStreamSpec extends SparkSpec {
     val after = EventStream.crossModalVerdicts(spark, stateDir)
       .as[(Long, Long, Long, Option[Int], Boolean)].collect().toSet
     assert(after === before, "empty batch changed the verdict view")
-    assert(graft.core.BidLog.latest(spark, s"$stateDir/remap", 2L)
-      === Some(1L), "empty batch did not advance the remap chain")
+    assert(graft.core.BidLog.latest(spark, s"$stateDir/log", 2L)
+      === Some(1L), "empty batch did not advance the log")
     assert(before === batchWant(sfDir))
+  }
+
+  test("CRASH before the rename: a staged bid is invisible, the replay commits it") {
+    // A batch's four parts are staged in its bid's hidden sibling and
+    // published with ONE rename, so a crash before the rename leaves the
+    // store exactly at the previous batch: no part visible, no bid
+    // listed. The replay must then commit what a clean run commits.
+    import graft.core.BidLog
+    val docs = docsOf(sfDir)
+    val splits = (0L to 2L).map(b => docs.filter(col("doc_id") % 3 === b))
+    def run(stateDir: String, ids: Seq[Int]): Unit = ids.foreach { i =>
+      EventStream.mergeCrossModalSnapshot(splits(i), stateDir, i.toLong)
+    }
+    def view(stateDir: String) = finalVerdicts(stateDir)
+      .as[(Long, Long, Long, Option[Int], Boolean)].collect().toSet
+    val stateDir = tmp("graft_xm_crash")
+    val log = s"$stateDir/log"
+    run(stateDir, 0 to 1)
+    val after1 = view(stateDir)
+    val (parts, fold) = EventStream.crossModalBid(splits(2), log, 2L,
+      BidLog.FoldEvery)
+    assert(parts.map(_._1) === Seq("members", "buckets", "verdicts", "remap"))
+    parts.foreach { case (part, df) => BidLog.stage(df, log, 2L, fold, part) }
+    assert(view(stateDir) === after1, "staged, uncommitted parts changed the view")
+    assert(BidLog.ids(spark, log) === Seq(0L, 1L), "an uncommitted bid is listed")
+    // a part read with the log as basePath keeps the bid column (the
+    // leaf `members` holds no `=`, so partition discovery skips it)
+    assert(BidLog.read(spark, log, Seq(0L, 1L), "members").get
+      .select(col("bid").cast("long")).distinct().as[Long].collect().toSet
+      === Set(0L, 1L), "part read lost the bid column")
+    run(stateDir, Seq(2))
+    val clean = tmp("graft_xm_crash_clean")
+    run(clean, 0 to 2)
+    val want = view(clean)
+    assert(want !== after1, "batch 2 changes nothing: the crash is vacuous")
+    assert(view(stateDir) === want, "replay after the crash != a clean run")
+    assert(BidLog.ids(spark, log) === Seq(0L, 1L, 2L))
   }
 
   test("end-to-end stream wiring: file-per-trigger micro-batches") {

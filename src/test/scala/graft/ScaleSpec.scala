@@ -595,10 +595,12 @@ class ScaleSpec extends SparkSpec {
     // core.BidLog; a store that spells a bid path or a fold marker
     // itself has its own copy of the protocol, outside its one commit.
     // The ANN store's retired sidecar paths (a tombstone file, per-band
-    // stats, a compaction staging dir, an underscore layout) were such
-    // a copy and must not come back.
+    // stats, a compaction staging dir, an underscore layout) and the
+    // cross-modal store's four subdirs (now parts of one log bid) were
+    // such copies and must not come back.
     val names = Seq("bid=", "_folded",
-      "/_tombstones", "/_stats", "/_staging", "/_layout")
+      "/_tombstones", "/_stats", "/_staging", "/_layout",
+      "/members\"", "/buckets\"", "/verdicts\"", "/remap\"")
     val log = java.nio.file.Paths.get("src/main/scala/graft/core/BidLog.scala")
     val offenders = Files.walk(java.nio.file.Paths.get("src/main/scala"))
       .iterator().asScala
