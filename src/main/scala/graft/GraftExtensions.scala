@@ -1,20 +1,31 @@
 package graft
 
+import graft.core.NoForkLocalFileSystem
 import graft.functions.{DotProduct, NfcNormalize}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.graft.Bridge
 
-/** SparkSessionExtensions entry point: makes the engine's native
-  * expressions available to ANY session via
-  * `--conf spark.sql.extensions=graft.GraftExtensions` — the standard
-  * deployment path on a shared cluster, and the only way the engine
-  * installs its functions (`graft.core.Session.local` sets it; no
-  * per-session registration call exists).
+/** SparkSessionExtensions entry point: makes the engine available to ANY
+  * session via `--conf spark.sql.extensions=graft.GraftExtensions` — the
+  * standard deployment path on a shared cluster, and the only way the
+  * engine installs itself (`graft.core.Session.local` sets it; no
+  * per-session registration call exists). It installs the native
+  * functions, the plan rules and, on the running context, the engine's
+  * `file:` file system [[graft.core.NoForkLocalFileSystem]] as
+  * `fs.file.impl`, unless the context's Hadoop configuration already
+  * names one (a user's `spark.hadoop.fs.file.impl` wins). Spark applies
+  * the extensions after it creates the context and before `SharedState`
+  * fetches its first `file:` FileSystem, so the JVM-wide Hadoop
+  * FileSystem cache holds this class from the start.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    Bridge.activeContext.map(_.hadoopConfiguration)
+      .filter(_.getTrimmed("fs.file.impl", "").isEmpty)
+      .foreach(_.set("fs.file.impl", classOf[NoForkLocalFileSystem].getName))
     def function(name: String, cls: Class[_], usage: String)(
         build: Seq[Expression] => Expression): Unit =
       ext.injectFunction((new FunctionIdentifier(name),

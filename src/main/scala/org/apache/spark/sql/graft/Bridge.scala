@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -17,7 +18,9 @@ import org.apache.spark.sql.execution.SparkStrategy
   * libraries that add whole-plan operators (Spark's own connectors and
   * every planner-extension library ship the same shim). Everything else
   * in the engine uses only public APIs; keep it that way — new code goes
-  * through here only for plan and expression construction, nothing else.
+  * through here only for plan and expression construction, and for the
+  * running context `graft.GraftExtensions` installs the engine's `file:`
+  * file system on (`SparkContext.getActive` is `private[spark]`).
   * A Column built here needs no function registration: it carries the
   * expression itself.
   */
@@ -30,6 +33,11 @@ object Bridge {
   /** Column over a Catalyst expression, and the expression of a Column. */
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The running SparkContext, if any; never creates one
+    * (`SparkContext.getActive` is `private[spark]`).
+    */
+  def activeContext: Option[SparkContext] = SparkContext.getActive
 
   /** The analyzed plan of a DataFrame (resolved attributes, stable ids). */
   def analyzed(df: DataFrame): LogicalPlan =

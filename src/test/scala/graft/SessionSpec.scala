@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** core.Session.local, the one session builder: its confs, and the
-  * engine's four `graft_` functions resolving through the installed
-  * extensions alone.
+/** core.Session.local, the one session builder: its confs, the engine's
+  * four `graft_` functions resolving through the installed extensions
+  * alone, and the `file:` file system the extensions install.
   */
 class SessionSpec extends AnyFunSuite {
   test("Session.local: UTC, partitions = cores, codegen cache, graft_dot without register") {
@@ -32,6 +32,11 @@ class SessionSpec extends AnyFunSuite {
           FROM range(3)), xxhash64(1L)) AS hit""").head()
       assert(r.getString(0) === "caf\u00e9")
       assert(r.getBoolean(1))
+      // writes go through the engine's file: file system, which forks no chmod
+      assert(s.sparkContext.hadoopConfiguration.get("fs.file.impl") ===
+        classOf[core.NoForkLocalFileSystem].getName)
+      assert(ChildJvm.fileSystemClasses(s) ===
+        (classOf[core.NoForkLocalFileSystem].getName, classOf[core.NoForkRawLocalFileSystem].getName))
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
@@ -39,5 +44,18 @@ class SessionSpec extends AnyFunSuite {
       // the factory set WARN on the shared context; keep the suite quiet
       SparkTestSession.spark.sparkContext.setLogLevel("ERROR")
     }
+  }
+
+  test("a session's own spark.hadoop.fs.file.impl wins over the engine's file system") {
+    // a fresh JVM: this one's context and FileSystem cache already hold
+    // the engine's class
+    val dir = java.nio.file.Files.createTempDirectory("graft_userfs")
+    try {
+      val stock = classOf[org.apache.hadoop.fs.LocalFileSystem].getName
+      val r = ChildJvm.run("graft.UserFileSystemMain", Seq(stock), dir, Map.empty)
+      assert(r.exit === 0, s"child JVM failed:\n${ChildJvm.tail(r)}")
+      assert(r.results === Map("impl" -> stock,
+        "raw" -> classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName))
+    } finally ChildJvm.deleteRecursively(dir)
   }
 }
