@@ -3,6 +3,7 @@ package graft.core
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 /** The bid log: the one exactly-once protocol under the state stores
   * (EventStream's incremental aggregate and cross-modal union-find, and
@@ -13,7 +14,12 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   *
   *  - PARTS: a bid is one frame or named parts `bid=<id>/<part>`; a part
   *    read with the subdir as `basePath` keeps the `bid` column (partition
-  *    discovery skips a leaf name without `=`).
+  *    discovery skips a leaf name without `=`). A bid written partitioned
+  *    (`bid=<id>/band=<k>`) must be the one "" part: under a named part
+  *    discovery stops at the part and the `bid` column is lost. Nor can
+  *    one read span a partitioned bid and a flat one (Spark rejects
+  *    leaf dirs with different partition columns), so a store that
+  *    mixes them reads them apart.
   *  - READ: batch `id` reads only bids strictly below its own, so a
   *    replay after a crash-before-commit (offset log written, commit log
   *    not) re-reads the same chain and ignores its own earlier attempt.
@@ -21,9 +27,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   *  - FOLD: a bid written with `fold = true` carries a `_folded` marker
   *    and holds the store's whole resolved state, so it supersedes every
   *    earlier bid; a read's live range runs from the newest fold below
-  *    its bound. A store whose every bid is a full snapshot (the
-  *    aggregate) writes every bid as a fold, and the same rules give
-  *    "read the predecessor, keep two snapshots".
+  *    its bound. Every other bid is a delta, and a batch folds on the
+  *    one cadence of [[folds]].
   *  - COMMIT: a bid's parts are written into a hidden sibling
   *    (`.pending-<id>`; the fold marker goes inside), a replay's old
   *    `bid=<id>` is deleted, and the sibling is renamed into place. A
@@ -44,12 +49,18 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   */
 object BidLog {
 
-  /** Live-delta budget: a batch that would be the FoldEvery-th live
-    * delta of a store folds the resolved state into its own bid instead,
-    * so the read fan-in stays bounded and the state-sized rewrite
-    * amortizes to 1/FoldEvery of batches.
+  /** Live-bid budget: a batch that would be the FoldEvery-th live bid
+    * of a store, counting the fold at the head of its live range, folds
+    * the resolved state into its own bid instead, so the read fan-in
+    * stays bounded and the state-sized rewrite amortizes to
+    * 1/FoldEvery of batches.
     */
   val FoldEvery = 64
+
+  /** Whether a batch whose live range below it is `live` folds: the
+    * one fold cadence of every store (see [[FoldEvery]]).
+    */
+  def folds(live: Seq[Long], foldEvery: Int): Boolean = live.size + 1 >= foldEvery
 
   private val Prefix = "bid="
   private val FoldMarker = "_folded"
@@ -104,16 +115,14 @@ object BidLog {
 
   /** Union of part `part` ("" is the whole bid) of bids `ids` of `sub`
     * with the `bid` column kept (basePath read); None when `ids` is empty.
+    * A partitioned bid with no rows holds no data file to infer a schema
+    * from, so its reader passes the bid's `schema`.
     */
   def read(s: SparkSession, sub: String, ids: Seq[Long],
-      part: String = ""): Option[DataFrame] =
+      part: String = "", schema: Option[StructType] = None): Option[DataFrame] =
     if (ids.isEmpty) None
-    else Some(s.read.option("basePath", sub)
+    else Some(schema.fold(s.read)(s.read.schema).option("basePath", sub)
       .parquet(ids.map(i => s"${dirOf(sub, i)}/$part"): _*))
-
-  /** The live range of `sub` below `bound`, read with its `bid` column. */
-  def readLive(s: SparkSession, sub: String, bound: Long): Option[DataFrame] =
-    read(s, sub, live(s, sub, bound))
 
   /** One committed bid, without the `bid` column. */
   def at(s: SparkSession, sub: String, id: Long): DataFrame =
@@ -122,44 +131,41 @@ object BidLog {
   private def pendingOf(sub: String, id: Long): Path = new Path(sub, s".pending-$id")
 
   /** Write `df` as part `part` ("" is the whole bid) of bid `id`'s hidden
-    * sibling, plus the fold marker, uncommitted. [[commit]] publishes it.
+    * sibling, partitioned by `partitionBy`, plus the fold marker,
+    * uncommitted. [[commit]] publishes it.
     */
   private[graft] def stage(df: DataFrame, sub: String, id: Long,
-      fold: Boolean, part: String = ""): Unit = {
+      fold: Boolean, part: String = "", partitionBy: Seq[String] = Nil): Unit = {
     val p = pendingOf(sub, id)
-    df.write.mode("overwrite").parquet(s"$p/$part")
+    df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(s"$p/$part")
     if (fold) fsOf(df.sparkSession, p).create(new Path(p, FoldMarker), true).close()
   }
 
   /** Write `parts` (a single-frame store's one part is named "") as bid
-    * `id` of `sub` with one rename (see the COMMIT rule above); `fold`
-    * marks it as superseding every earlier bid.
+    * `id` of `sub` with one rename (see the COMMIT rule above), each
+    * partitioned by `partitionBy`; `fold` marks it as superseding every
+    * earlier bid.
     */
   def commit(parts: Seq[(String, DataFrame)], sub: String, id: Long,
-      fold: Boolean = false): Unit = {
+      fold: Boolean = false, partitionBy: Seq[String] = Nil): Unit = {
     val staged = pendingOf(sub, id)
     val dst = dirOf(sub, id)
     val fs = fsOf(parts.head._2.sparkSession, dst)
     fs.delete(staged, true)
-    parts.foreach { case (part, df) => stage(df, sub, id, fold, part) }
+    parts.foreach { case (part, df) => stage(df, sub, id, fold, part, partitionBy) }
     fs.delete(dst, true)
     if (!fs.rename(staged, dst))
       throw new java.io.IOException(s"bid commit failed: $staged -> $dst")
   }
 
   /** GC after batch `id` committed: drop every bid of `sub` below its
-    * newest fold at or below the committed predecessor. Returns that
-    * fold: no replay reads below it, so a store may drop its own
-    * pre-log state (the ANN store's `base`) too.
+    * newest fold at or below the committed predecessor.
     */
-  def gc(s: SparkSession, sub: String, id: Long): Option[Long] = {
-    val fold = latest(s, sub, id).flatMap(p => newestFold(s, sub, p + 1))
-    fold.foreach { f =>
+  def gc(s: SparkSession, sub: String, id: Long): Unit =
+    latest(s, sub, id).flatMap(p => newestFold(s, sub, p + 1)).foreach { f =>
       ids(s, sub).filter(_ < f).foreach { old =>
         val p = dirOf(sub, old)
         fsOf(s, p).delete(p, true)
       }
     }
-    fold
-  }
 }

@@ -4,6 +4,7 @@ import graft.core.{BidLog, Pin, QueryDef, Tables, Text}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** LLM-training-data pipeline operators over `documents` / `embeddings`
   * (builder brief; SURVEY.md §7 step 5 planned this file).
@@ -2428,10 +2429,11 @@ object Extended {
     * — the dedup-state discipline applied to the vector index): a real
     * 100 TB pipeline MAINTAINS its band-code index between runs; every
     * other ANN query here re-codes the corpus per query. The corpus
-    * (vec_id % 10 < 8) is coded once and written as the band-partitioned
-    * parquet store (the dedup_state_roundtrip layout: a probe prunes to
-    * its band directories); the new batch (vec_id % 10 >= 8) is then
-    * coded and committed as one add bid of the store's log
+    * (vec_id % 10 < 8) is coded once and committed as the store's
+    * band-partitioned build fold (the dedup_state_roundtrip layout: a
+    * probe prunes to its band directories); the new batch
+    * (vec_id % 10 >= 8) is then coded and committed as one add bid of
+    * the store's log
     * ([[annStoreApply]]) — batch-proportional work, no corpus access
     * (`Run ann-lifecycle append` measures it, SCALING.md round 16).
     *
@@ -2474,65 +2476,54 @@ object Extended {
 
   // ---- the ANN band store: build, lifecycle, view ------------------------
 
-  /** Write the band-coded index store of `corpus` at the one-row
-    * (nb, nbands) `layout` (see [[annStoreWrite]]); ann_state_append,
-    * ann_stream_search and the ann-lifecycle probe build through it.
+  /** Build the band-coded index store of `corpus` at `dir`, at the
+    * one-row (nb, nbands) `layout`. The store has two subdirs:
+    *
+    *  - `layout`: the layout version. Every later coding pins it
+    *    ([[embBandCodesPinned]]): the store never re-rungs, only a
+    *    rebuild does;
+    *  - `log`: a [[graft.core.BidLog]] of (vec_id, code, band, dead)
+    *    rows. The build is its fold bid −1 (a stream's first
+    *    micro-batch is bid 0). Every lifecycle step — an
+    *    add/delete/upsert batch ([[annStoreApply]]), a compaction
+    *    ([[annStoreGc]]), a stream micro-batch — is one bid and one
+    *    rename: its live rows (dead = false) and tombstones
+    *    (dead = true) land together as a flat delta, or the whole
+    *    resolved view lands as a fold ([[annStoreFold]]).
+    *
+    * The build deletes `dir` first (a query's sink dir outlives the
+    * query in one JVM, and graft.Bench runs each query twice), writes
+    * `layout`, then commits the coded corpus as fold bid −1. A crash
+    * before that commit leaves a store with no live fold, which every
+    * step refuses ([[annStoreLive]]) until the build is re-run.
     */
   private[graft] def annBandStoreBuild(corpus: DataFrame, layout: DataFrame,
-      dir: String): Unit =
-    annStoreWrite(annStoreCodes(corpus, layout), layout, dir)
-
-  /** The ANN band store at `dir` has three subdirs:
-    *
-    *  - `base`: the build's coded (vec_id, code) rows, partitioned by
-    *    band, so a probe's band literals prune to its band dirs;
-    *  - `layout`: the one-row (nb, nbands) layout version. Every later
-    *    coding pins it ([[embBandCodesPinned]]): the store never
-    *    re-rungs, only a rebuild does;
-    *  - `log`: a [[graft.core.BidLog]] of (vec_id, code, band, dead)
-    *    rows. Every lifecycle step — an add/delete/upsert batch
-    *    ([[annStoreApply]]), a compaction ([[annStoreGc]]), a stream
-    *    micro-batch — is one bid and one rename: its live rows
-    *    (dead = false) and tombstones (dead = true) land together, and a
-    *    fold bid holds the whole resolved view, range-laid like a search
-    *    store ([[annStoreLaid]]). `base` goes with the bids a fold
-    *    supersedes ([[annStoreReclaim]]).
-    *
-    * The write deletes `dir` first: a query's sink dir outlives the
-    * query in one JVM (graft.Bench runs each query twice), and a stale
-    * `log` bid would leak into the new store's view.
-    */
-  private def annStoreWrite(codes: DataFrame, layout: DataFrame,
       dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(codes.sparkSession.sparkContext.hadoopConfiguration)
+    p.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
       .delete(p, true)
-    codes.write.partitionBy("band").parquet(s"$dir/base")
     layout.write.parquet(s"$dir/layout")
+    annStoreFold(annStoreCodes(corpus, layout), dir, -1L)
   }
 
-  /** `codes` in the search layout: range-laid and sorted by
-    * (band, code), so a probe list's `code IN (...)` skips row groups.
-    * The coded keys (~20 B/row, no vectors) are materialized first:
-    * repartitionByRange's sampling job would otherwise re-run the
-    * coding or the view resolution before the real shuffle. Range
-    * boundaries may split files differently run to run (the sampler
-    * seed is RDD-id-derived); the rows and their order are unchanged.
+  /** Commit the resolved (band, code, vec_id) rows `view` as fold bid
+    * `id`: it supersedes every earlier bid. The fold is written
+    * partitioned by band, so a probe's band literals prune to its band
+    * dirs, and range-laid and sorted by (band, code), so its
+    * `code IN (...)` skips row groups. The coded keys (~20 B/row, no
+    * vectors) are materialized first: repartitionByRange's sampling
+    * job would otherwise re-run the coding or the view resolution
+    * before the real shuffle. Range boundaries may split files
+    * differently run to run (the sampler seed is RDD-id-derived); the
+    * rows and their order are unchanged.
     */
-  private def annStoreLaid(codes: DataFrame): DataFrame =
-    codes.localCheckpoint()
+  private def annStoreFold(view: DataFrame, dir: String, id: Long): Unit =
+    BidLog.commit(Seq("" -> view.select(col("vec_id"), col("code"), col("band"),
+        lit(false).as("dead"))
+      .localCheckpoint()
       .repartitionByRange(col("band"), col("code"))
-      .sortWithinPartitions(col("band"), col("code"))
-
-  /** After bid `id` of the store at `dir` committed: BidLog's GC, and
-    * `base` too once a fold at or below the committed predecessor
-    * supersedes it (the same rule: no replay reads below that fold).
-    */
-  private def annStoreReclaim(s: SparkSession, dir: String, id: Long): Unit =
-    BidLog.gc(s, s"$dir/log", id).foreach { _ =>
-      val base = new org.apache.hadoop.fs.Path(s"$dir/base")
-      base.getFileSystem(s.sparkContext.hadoopConfiguration).delete(base, true)
-    }
+      .sortWithinPartitions(col("band"), col("code"))),
+      s"$dir/log", id, fold = true, partitionBy = Seq("band"))
 
   private[graft] def annStoreLayout(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/layout")
@@ -2566,8 +2557,9 @@ object Extended {
     *    are written (a tombstone for the old code, a live row for the
     *    new), so an identical re-embed writes nothing.
     *
-    * A batch that would be the `foldEvery`-th live bid folds instead: the
-    * resolved view below `id` with this batch applied, as one fold bid.
+    * A batch folds on the log's cadence ([[graft.core.BidLog.folds]];
+    * the build's fold bid −1 counts as a live bid): the resolved view
+    * below `id` with this batch applied, as one fold bid.
     * Both paths let a batch's tombstone kill its own adds of the same
     * (band, vec_id, code), as the view's `bid ≤ tbid` mask does, so a
     * batch's effect never depends on whether it folds. Every read is
@@ -2608,22 +2600,15 @@ object Extended {
           struct(col("code_old").as("code"), lit(true).as("dead")))).as("r"))
         .select(col("vec_id"), col("r.code").as("code"), col("band"),
           col("r.dead").as("dead")))
-    if (BidLog.live(s, log, id).size + 1 < foldEvery) BidLog.commit(Seq("" -> rows), log, id)
+    if (!BidLog.folds(annStoreLive(s, dir, id), foldEvery))
+      BidLog.commit(Seq("" -> rows), log, id)
     else
       annStoreFold(annStoreViewAt(s, dir, id)
         .unionByName(rows.filter(!col("dead")).drop("dead"))
         .join(rows.filter(col("dead")).drop("dead"),
           Seq("band", "vec_id", "code"), "left_anti"), dir, id)
-    annStoreReclaim(s, dir, id)
+    BidLog.gc(s, log, id)
   }
-
-  /** Commit the resolved (band, code, vec_id) rows `view` as fold bid
-    * `id`, in the search layout: it supersedes base and every earlier
-    * bid, and a probe of the folded store still skips row groups.
-    */
-  private def annStoreFold(view: DataFrame, dir: String, id: Long): Unit =
-    BidLog.commit(Seq("" -> annStoreLaid(view.select(col("vec_id"), col("code"),
-      col("band"), lit(false).as("dead")))), s"$dir/log", id, fold = true)
 
   /** Compaction trigger: the store folds when its live tombstones reach
     * 1/[[AnnGcTrigger]] of its live physical rows (integer-exact
@@ -2636,12 +2621,13 @@ object Extended {
   val AnnGcTrigger = 20
 
   /** GC: at the [[AnnGcTrigger]], commit the resolved view as a fold at
-    * the next bid and reclaim base and every bid below it at once; below
-    * the trigger nothing is written and reads keep masking. GC is a batch
+    * the next bid and reclaim every bid below it at once; below the
+    * trigger nothing is written and reads keep masking. GC is a batch
     * step that takes its bid from the listing, so no replay reads below
     * its own fold (a stream store compacts through its fold cadence
     * instead). The trigger's two counts come back in one driver
-    * round-trip; base contributes only its parquet footers' row counts.
+    * round-trip; the head fold contributes only its parquet footers'
+    * row counts.
     */
   private[graft] def annStoreGc(s: SparkSession, dir: String): Unit = {
     val id = annStoreNextBid(s, dir)
@@ -2653,7 +2639,7 @@ object Extended {
       val nTombs = r.getLong(0)
       if (nTombs > 0 && nTombs * AnnGcTrigger >= r.getLong(1) - nTombs) {
         annStoreFold(annStoreViewAt(s, dir, id), dir, id)
-        annStoreReclaim(s, dir, id + 1)
+        BidLog.gc(s, s"$dir/log", id + 1)
       }
     }
   }
@@ -2667,7 +2653,7 @@ object Extended {
     * of its own bid or earlier. A delete followed by a RE-ADD at the same
     * embedding (same code) must resurrect the row, so a row dies iff a
     * tombstone of its key has a bid at or after its own (one anti join,
-    * keys only). A store without live bids reads base alone.
+    * keys only). A store without live deltas reads its fold alone.
     */
   private[graft] def annStoreViewAt(s: SparkSession, dir: String,
       bound: Long): DataFrame = {
@@ -2682,29 +2668,44 @@ object Extended {
     }
   }
 
+  /** The live bids of the store at `dir` below `bound`. A built store's
+    * live range starts at a fold (the build's bid −1 or a later one).
+    * One that does not has no committed build (a crash between the
+    * build's `layout` write and its commit), and every step refuses it
+    * here: a read would serve an empty store, and a commit would bury
+    * the missing build under a delta.
+    */
+  private def annStoreLive(s: SparkSession, dir: String, bound: Long): Seq[Long] = {
+    val log = s"$dir/log"
+    val live = BidLog.live(s, log, bound)
+    if (!live.headOption.exists(BidLog.isFold(s, log, _)))
+      throw new IllegalStateException(
+        s"ANN store $dir has no committed build below bid $bound: rebuild it")
+    live
+  }
+
   /** (physical rows, tombstones) below bid `bound`, each
-    * (band, code, vec_id, bid): base (bid −1) unless a fold supersedes
-    * it, plus the live range of the log — None for tombstones when no
-    * bid after the fold is live. A fold holds no tombstones, so their
-    * read leaves it out: the mask stays batch-sized and broadcasts
-    * into the view's join instead of shuffling a store-sized side.
+    * (band, code, vec_id, bid): the live range's head fold plus its
+    * deltas — None for tombstones when no delta is live. The fold is
+    * band-partitioned and the deltas are flat, so they are read apart
+    * (one read of both fails on their different partition columns). A
+    * fold holds no tombstones, so their read leaves it out: the mask
+    * stays batch-sized and broadcasts into the view's join instead of
+    * shuffling a store-sized side.
     */
   private def annStoreRowsAt(s: SparkSession, dir: String,
       bound: Long): (DataFrame, Option[DataFrame]) = {
-    val log = s"$dir/log"
-    val live = BidLog.live(s, log, bound)
-    val fold = live.headOption.filter(BidLog.isFold(s, log, _))
-    def rows(ids: Seq[Long], dead: Boolean): Option[DataFrame] =
-      BidLog.read(s, log, ids).map(_.filter(col("dead") === dead)
+    val live = annStoreLive(s, dir, bound)
+    // given, not inferred: an empty fold (every vector deleted) has no
+    // band dir to infer it from
+    val schema = StructType.fromDDL(
+      "vec_id BIGINT, code BIGINT, dead BOOLEAN, bid INT, band INT")
+    def rows(ids: Seq[Long], keep: Column) =
+      BidLog.read(s, s"$dir/log", ids, schema = Some(schema)).map(_.filter(keep)
         .select(col("band"), col("code"), col("vec_id"),
           col("bid").cast("long").as("bid")))
-    val base =
-      if (fold.isDefined) None
-      else Some(s.read.parquet(s"$dir/base")
-        .select(col("band").cast("int").as("band"), col("code"),
-          col("vec_id"), lit(-1L).as("bid")))
-    ((base.toSeq ++ rows(live, dead = false)).reduce(_ unionByName _),
-      rows(live.filterNot(fold.contains), dead = true))
+    ((rows(live.take(1), lit(true)) ++ rows(live.tail, !col("dead")))
+      .reduce(_ unionByName _), rows(live.tail, col("dead")))
   }
 
   /** Hash tables the store-backed search probes (of the store's nbands):
@@ -2714,19 +2715,6 @@ object Extended {
     * oracle string interpolates it at object init (round-15 rule).
     */
   val AnnProbeTables = 2
-
-  /** Write the search-optimized index store for `all` at its pinned
-    * layout ([[annStoreWrite]]): band-partitioned directories, files
-    * in the search layout ([[annStoreLaid]]; the corpus is coded once,
-    * at 100 TB half the build's corpus reads). Shared by the registered
-    * queries and the ann-lifecycle probe's search rows.
-    */
-  private[graft] def annSearchStoreWrite(s: SparkSession, all: DataFrame,
-      dir: String): Unit = {
-    // one layout/count action for the whole build ([[embLayoutCollect]])
-    val lf = embLayoutCollect(s, all)
-    annStoreWrite(annStoreLaid(annStoreCodes(all, lf)), lf, dir)
-  }
 
   /** The search leg every store-backed ANN search shares (batch, live,
     * multi-probe and stream): answer the fixed query batch — the ids of
@@ -2742,6 +2730,8 @@ object Extended {
     */
   private[graft] def annStoreSearchDir(s: SparkSession, vs: DataFrame,
       dir: String, flipBits: Int = 0): DataFrame = {
+    // listed first: a store with no committed build throws before any job
+    val view = annStoreView(s, dir)
     val qraw = embBandCodesPinned(
         vs.filter(col("vec_id") % 100 === 0 && col("vec_id") <= 20000),
         annStoreLayout(s, dir))
@@ -2762,7 +2752,7 @@ object Extended {
     // row-group skipping) through any tombstone mask on the view
     val probe = qcodes.select(col("band"), col("code")).distinct()
       .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val cands = annStoreView(s, dir)
+    val cands = view
       .where(col("band").isin(probe.map(_._1).distinct.toSeq: _*) &&
         col("code").isin(probe.map(_._2).distinct.toSeq: _*))
       .join(broadcast(qcodes), Seq("band", "code"))
@@ -2838,7 +2828,7 @@ object Extended {
     (s, d) => {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_search_store")
       val all = vecs(s, d)
-      annSearchStoreWrite(s, all, dir)
+      annBandStoreBuild(all, embLayoutCollect(s, all), dir)
       annStoreSearchDir(s, all, dir)
     },
     Some(s"""
@@ -2876,8 +2866,8 @@ object Extended {
     *    batch-proportional, no store access;
     *  - READS mask tombstones temporally ([[annStoreView]]);
     *  - GC folds the resolved view into one bid once the tombstone
-    *    fraction crosses the integer trigger and drops base and the
-    *    bids the fold supersedes ([[annStoreGc]]; amortized
+    *    fraction crosses the integer trigger and drops the bids the
+    *    fold supersedes ([[annStoreGc]]; amortized
     *    IO ≤ trigger × deletes — the "GC cost tracks the deleted
     *    fraction" contract, measured by `Run ann-lifecycle gc` at
     *    sf1/sf10, SCALING.md round 17).
@@ -2900,7 +2890,7 @@ object Extended {
     (s, d) => {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_gc_store")
       val all = vecs(s, d)
-      annSearchStoreWrite(s, all, dir)
+      annBandStoreBuild(all, embLayoutCollect(s, all), dir)
       annStoreApply(annEvents(all.filter(col("vec_id") % 100 === 7), "del"),
         dir, annStoreNextBid(s, dir))
       annStoreGc(s, dir)
@@ -2951,7 +2941,7 @@ object Extended {
     (s, d) => {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_live_store")
       val all = vecs(s, d)
-      annSearchStoreWrite(s, all, dir)
+      annBandStoreBuild(all, embLayoutCollect(s, all), dir)
       annStoreApply(annEvents(all.filter(col("vec_id") % 10 === 3), "del"),
         dir, annStoreNextBid(s, dir))
       annStoreSearchDir(s, all, dir)
@@ -3011,7 +3001,7 @@ object Extended {
     (s, d) => {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_upsert_store")
       val all = vecs(s, d)
-      annSearchStoreWrite(s, all, dir)
+      annBandStoreBuild(all, embLayoutCollect(s, all), dir)
       annStoreApply(annEvents(all.filter(col("vec_id") % 20 === 5), "ups",
           when(col("vec_id") % 40 === 5, reverse(col("v")))
             .otherwise(col("v")), col("v")),
@@ -3058,7 +3048,7 @@ object Extended {
     (s, d) => {
       val dir = graft.pipeline.Climate.sinkDir(d, "ann_mp_store")
       val all = vecs(s, d)
-      annSearchStoreWrite(s, all, dir)
+      annBandStoreBuild(all, embLayoutCollect(s, all), dir)
       annStoreSearchDir(s, all, dir, flipBits = EmbBits)
     },
     Some(s"""
@@ -3089,7 +3079,7 @@ object Extended {
 
   /** SEARCH over the STREAM-maintained store — the consumer the
     * streaming twin was missing (the same gap class r16 flagged for the
-    * batch store): build the base index over the corpus rung
+    * batch store): build the index over the corpus rung
     * (vec_id % 10 < 8, pinned layout), drive TWO maintenance
     * micro-batches through [[annStoreApply]] (the fold
     * [[graft.streaming.EventStream.annStoreMaintainStream]] runs per
@@ -3100,7 +3090,7 @@ object Extended {
     * resurrection only the temporal mask serves) — then answer the
     * fixed ANN query batch from the stream view: probe codes collected
     * (query-batch-bounded, the X1 class), the view filtered to the
-    * probed bands/codes (band-partition pruning on the base store; the
+    * probed bands/codes (band-partition pruning on the build's fold; the
     * temporal mask ships only keys), scoring against the NET vector
     * set. Fixture non-vacuity simulated in DuckDB BEFORE wiring
     * (round-4 rule): 7/6/46 of the top-5 rows differ from a

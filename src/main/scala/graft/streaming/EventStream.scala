@@ -443,15 +443,16 @@ object EventStream {
     * (ops/Aggregates.scala): each micro-batch's per-user partial
     * aggregate is MERGED into a parquet state store instead of
     * recomputing history — the materialized-view refresh loop run
-    * continuously. Every snapshot is a full fold of the
-    * [[graft.core.BidLog]]: batch `id` reads the newest snapshot below
-    * it, merges its own partial (the shared
+    * continuously. Batch `id` commits its own partial (the shared
     * [[graft.ops.Aggregates.userAggPartial]]/`userAggMerge` monoid —
-    * exact-integer cents, so merge ≡ rebuild) and commits its own bid, so
-    * a replay re-reads the same predecessor; EventStreamSpec proves it
-    * with a commit-wipe replay. Steady-state disk is two snapshots. At
-    * 100 TB each refresh costs one batch-sized aggregate plus one
-    * state-keyed shuffle — never a history scan.
+    * exact-integer cents, so merge ≡ rebuild) as a delta bid of the
+    * [[graft.core.BidLog]]; on the log's fold cadence it commits the
+    * merge of the live range below it plus its partial as a fold
+    * instead. Every read is below `id`, so a replay re-reads the same
+    * chain; EventStreamSpec proves it with a commit-wipe replay. A
+    * delta batch costs one batch-sized aggregate, whatever the number
+    * of users; the state-sized merge is paid once per fold and by the
+    * reader ([[incrementalAggView]]).
     */
   def incrementalAggMaintainStream(events: DataFrame, stateDir: String,
       ckDir: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -461,15 +462,26 @@ object EventStream {
     * also drive it directly). See [[incrementalAggMaintainStream]].
     */
   private[graft] def mergeAggSnapshot(batch: Dataset[org.apache.spark.sql.Row],
-      stateDir: String, id: Long): Unit = {
+      stateDir: String, id: Long, foldEvery: Int = BidLog.FoldEvery): Unit = {
+    val s = batch.sparkSession
     val partial = graft.ops.Aggregates.userAggPartial(batch)
-    val merged = BidLog.readLive(batch.sparkSession, stateDir, id)
-      .map(prev => graft.ops.Aggregates.userAggMerge(
-        prev.drop("bid").unionByName(partial)))
-      .getOrElse(partial)
-    BidLog.commit(Seq("" -> merged), stateDir, id, fold = true)
-    BidLog.gc(batch.sparkSession, stateDir, id)
+    val live = BidLog.live(s, stateDir, id)
+    val fold = BidLog.folds(live, foldEvery)
+    val rows =
+      if (!fold) partial
+      else BidLog.read(s, stateDir, live).fold(partial)(prev =>
+        graft.ops.Aggregates.userAggMerge(prev.drop("bid").unionByName(partial)))
+    BidLog.commit(Seq("" -> rows), stateDir, id, fold)
+    BidLog.gc(s, stateDir, id)
   }
+
+  /** The aggregate state (user_id, n_events, cents, last_ts): the merge
+    * of the store's live range; None before its first batch commits.
+    */
+  def incrementalAggView(s: org.apache.spark.sql.SparkSession,
+      stateDir: String): Option[DataFrame] =
+    BidLog.read(s, stateDir, BidLog.live(s, stateDir, Long.MaxValue))
+      .map(live => graft.ops.Aggregates.userAggMerge(live.drop("bid")))
 
   // ---- cross-modal curation gate, streaming twin (round 15) --------------
 
@@ -689,7 +701,7 @@ object EventStream {
         col("m.n_chars"), col("m.ph"))
       .unionByName(newMembers)
 
-    if (live.size + 1 < foldEvery) {
+    if (!BidLog.folds(live, foldEvery)) {
       // batch-sized; the checkpoint's estimate would not broadcast it
       val touchedRoots = broadcast(remapDelta.select(col("new_root").as("root"))
         .unionByName(newMembers.select(col("root")))

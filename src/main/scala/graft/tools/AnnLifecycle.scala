@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   *    identical). Delete + GC cost must track the deleted fraction.
   *  - `stream`: micro-batches of the stream (`Extended.annStoreApply`):
   *    FIXED 500-event batches (300 adds of new rotated ids, 100 deletes,
-  *    100 re-embeds) through 12 merges at foldEvery=8 over a base store
-  *    of the dir's embeddings. Run at sf1 vs sf10 (20k vs 200k vectors;
-  *    needs ≥ 8 000 ids), the non-fold rows measure per-batch cost across
+  *    100 re-embeds) through 12 merges at foldEvery=8 over a store
+  *    built from the dir's embeddings. Run at sf1 vs sf10 (20k vs 200k
+  *    vectors; needs ≥ 8 000 ids), the non-fold rows measure per-batch cost across
   *    a 10× state decade at constant batch size, and the fold row
   *    isolates the rewrite amortized to 1/foldEvery of batches.
   *
@@ -77,8 +77,8 @@ object AnnLifecycle {
     }
 
     val search = s"$root/search"
-    val (_, tBuild) = time("build search store (sorted)") {
-      Extended.annSearchStoreWrite(spark, all, search)
+    val (_, tBuild) = time("build search store") {
+      Extended.annBandStoreBuild(all, Extended.embLayoutCollect(spark, all), search)
     }
     val (_, tSearch) = time("store search (fixed query batch)") {
       Extended.annStoreSearchDir(spark, all, search).count()
@@ -114,7 +114,9 @@ object AnnLifecycle {
       Extended.annStoreNextBid(spark, store))
     (1 to 2).foreach { pass =>
       println(s"[ann-lifecycle] gc pass $pass")
-      time("init store")(Extended.annSearchStoreWrite(spark, all, store))
+      time("init store") {
+        Extended.annBandStoreBuild(all, Extended.embLayoutCollect(spark, all), store)
+      }
       val (_, d1) = time("delete 0.5%")(apply(Extended.annEvents(small, "del")))
       val (_, g1) = time("gc (tombstones only)")(Extended.annStoreGc(spark, store))
       val (_, d2) = time("delete 10%")(apply(Extended.annEvents(big, "del")))
@@ -134,11 +136,11 @@ object AnnLifecycle {
     val ids = vecs.select(col("vec_id")).orderBy(col("vec_id"))
       .collect().map(_.getLong(0))
     require(ids.length >= 8000, s"corpus too small for the slices: ${ids.length}")
-    time("build base store") {
+    time("build store") {
       Extended.annBandStoreBuild(vecs, Extended.embLayoutCollect(spark, vecs),
         store)
     }
-    println(s"[ann-lifecycle] dir=$dir base=${ids.length} vecs")
+    println(s"[ann-lifecycle] dir=$dir built=${ids.length} vecs")
     def slice(off: Int, per: Int, k: Int): Seq[Long] =
       ids.slice(off + k * per, off + (k + 1) * per).toSeq
     val dim = vecs.select(size(col("v"))).head().getInt(0)
@@ -162,13 +164,15 @@ object AnnLifecycle {
         Extended.annStoreApply(batch(k), store, k.toLong, foldEvery = 8)
       }._2
     }
-    val foldK = 7 // the 8th live delta triggers the fold at foldEvery=8
+    // the 8th live bid folds at foldEvery=8, and the build's fold bid −1
+    // is the first: batch 6 folds
+    val foldK = 6
     require(BidLog.isFold(spark, s"$store/log", foldK),
       "expected fold did not happen")
     val nonFold = secs.patch(foldK, Nil, 1).sorted
     println(f"[ann-lifecycle] non-fold batch median ${
       nonFold(nonFold.length / 2)}%.2f s, fold batch ${secs(foldK)}%.2f s")
-    time("view count (post-fold, 4 live deltas)") {
+    time("view count (post-fold, 5 live deltas)") {
       Extended.annStoreView(spark, store).count()
     }
   }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * but the view is deliberately blind to WHICH branch the store took
   * (masked tombstones and folded data read identically; that is the
   * point of tombstone masking). These tests pin the physical branches
-  * the oracle cannot see — `base` plus the live `log` rows — and a
+  * the oracle cannot see — the live `log` rows from the head fold on
+  * (the build's bid −1 until a GC folds) — and a
   * PLANTED upsert skew the fixtures never produce (uniform vector
   * deletes tombstone every band equally; only an upsert that moves one
   * band makes per-band and store-wide tombstone fractions differ — the
@@ -22,7 +23,8 @@ class AnnGcSpec extends SparkSpec {
   private def freshStore(tag: String,
       corpus: DataFrame = ops.Extended.vecs(spark, sfDir)): (String, Long, Int) = {
     val dir = new java.io.File(s"target/ann_gc_spec_$tag").getAbsolutePath
-    ops.Extended.annSearchStoreWrite(spark, corpus, dir)
+    ops.Extended.annBandStoreBuild(corpus,
+      ops.Extended.embLayoutCollect(spark, corpus), dir)
     val nbands = spark.read.parquet(s"$dir/layout").collect()(0)
       .getAs[Int]("nbands")
     (dir, corpus.count(), nbands)
@@ -33,14 +35,22 @@ class AnnGcSpec extends SparkSpec {
     ops.Extended.annStoreApply(events, dir,
       ops.Extended.annStoreNextBid(spark, dir))
 
+  /** Rows of the build's fold bid −1. */
   private def baseRows(dir: String): Long =
-    spark.read.parquet(s"$dir/base").count()
+    BidLog.at(spark, s"$dir/log", -1L).count()
 
-  /** Live log rows (the bids from the newest fold on) with `dead`. */
-  private def logRows(dir: String, dead: Boolean): DataFrame =
-    BidLog.readLive(spark, s"$dir/log", Long.MaxValue)
-      .map(_.filter(col("dead") === dead))
-      .getOrElse(spark.emptyDataFrame)
+  /** Live log rows (the bids from the newest fold on) with `dead`. The
+    * band-partitioned fold and the flat deltas are read apart: one read
+    * of both fails on their different partition columns.
+    */
+  private def logRows(dir: String, dead: Boolean): DataFrame = {
+    val log = s"$dir/log"
+    val live = BidLog.live(spark, log, Long.MaxValue)
+    Seq(live.take(1), live.tail).flatMap(BidLog.read(spark, log, _))
+      .map(_.filter(col("dead") === dead)
+        .select(col("vec_id"), col("code"), col("band"), col("dead"), col("bid")))
+      .reduce(_ unionByName _)
+  }
 
   private def canonView(dir: String) = ops.Extended.annStoreView(spark, dir)
     .orderBy(col("band"), col("code"), col("vec_id")).collect().toSeq
@@ -53,9 +63,9 @@ class AnnGcSpec extends SparkSpec {
     apply(ops.Extended.annEvents(all.filter(col("vec_id") % 100 === 7), "del"), dir)
     ops.Extended.annStoreGc(spark, dir)
     // the 1% batch sits under the 1/20 trigger: GC committed no fold,
-    // base is untouched, and the delete bid's dead rows stay live
+    // the build's fold is untouched, and the delete bid's dead rows stay live
     val log = s"$dir/log"
-    assert(BidLog.ids(spark, log) === Seq(0L), "below-trigger GC committed a bid")
+    assert(BidLog.ids(spark, log) === Seq(-1L, 0L), "below-trigger GC committed a bid")
     assert(!BidLog.isFold(spark, log, 0L))
     assert(baseRows(dir) === before, "below-trigger GC rewrote data")
     val dead = logRows(dir, dead = true).count()
@@ -81,22 +91,36 @@ class AnnGcSpec extends SparkSpec {
     assert(logRows(dir, dead = true).count() === 0,
       "compaction left tombstones behind")
     // the live physical rows — the next trigger's denominator — are the
-    // fold's alone (it supersedes base)
+    // fold's alone (it supersedes the build's)
     assert(logRows(dir, dead = false).count() === survivors * nbands)
-    // GC reclaims space: base and the pre-fold delete bid leave the disk
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/base")),
-      "the fold left base on disk")
+    // GC reclaims space: the build's fold and the pre-fold delete bid
+    // leave the disk
+    assert(!BidLog.ids(spark, log).contains(-1L), "the fold left bid -1 on disk")
     assert(BidLog.ids(spark, log) === Seq(1L),
       s"the fold left pre-fold bids on disk: ${BidLog.ids(spark, log)}")
     // ...and stay reclaimed across the next committed bid, whose view
     // reads the fold alone
     apply(ops.Extended.annEvents(all.filter(col("vec_id") % 100 === 7), "del"), dir)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/base")))
+    assert(!BidLog.ids(spark, log).contains(-1L))
     assert(BidLog.ids(spark, log) === Seq(1L, 2L))
     assert(ops.Extended.annStoreView(spark, dir).count() === nbands *
       all.filter(col("vec_id") % 10 =!= 3 && col("vec_id") % 100 =!= 7).count())
+  }
+
+  test("deleting every vector folds to an empty store that still reads and takes adds") {
+    // A band-partitioned fold of no rows writes no band dir, so its read
+    // cannot infer a schema from files; the store must still serve an
+    // empty view and take the next batch.
+    val all = ops.Extended.vecs(spark, sfDir)
+    val (dir, _, nbands) = freshStore("empty")
+    apply(ops.Extended.annEvents(all, "del"), dir)
+    ops.Extended.annStoreGc(spark, dir)
+    assert(BidLog.ids(spark, s"$dir/log") === Seq(1L) &&
+      BidLog.isFold(spark, s"$dir/log", 1L), "deleting every vector did not fold")
+    assert(ops.Extended.annStoreView(spark, dir).count() === 0)
+    val back = all.filter(col("vec_id") % 10 === 3)
+    apply(ops.Extended.annEvents(back, "add"), dir)
+    assert(ops.Extended.annStoreView(spark, dir).count() === back.count() * nbands)
   }
 
   test("PLANTED upsert skew: the store-wide fold keeps the view bit-identical") {
@@ -145,7 +169,7 @@ class AnnGcSpec extends SparkSpec {
     // the identical half of the batch (% 40 == 25) wrote NOTHING
     assert(bid.filter(col("vec_id") % 40 === 25).count() === 0,
       "a byte-identical re-embed was written")
-    assert(baseRows(dir) === before, "upsert rewrote base")
+    assert(baseRows(dir) === before, "upsert rewrote the build's fold")
     // the read view now equals a re-index over the FINAL vectors
     val layout = spark.read.parquet(s"$dir/layout")
     val expect = ops.Extended.embBandCodesPinned(all.withColumn("v", newV), layout)
@@ -175,7 +199,8 @@ class AnnGcSpec extends SparkSpec {
     val tombs = logRows(dir, dead = true).collect()
     assert(tombs.length === 1, s"expected 1 tombstone, got ${tombs.length}")
     assert(tombs(0).getAs[Int]("band") === 3, "the moved slot was not band 3")
-    assert(logRows(dir, dead = false).count() === 1)
+    // ...and the upsert's bid holds ONE live row (the rest are the build's)
+    assert(logRows(dir, dead = false).filter(col("bid") === 0).count() === 1)
     // view: the id still lives in all 4 bands, band 3 at the NEW code
     val mine = ops.Extended.annStoreView(spark, dir)
       .filter(col("vec_id") === 99999983L)

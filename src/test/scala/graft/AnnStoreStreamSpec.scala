@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** The ANN store's streaming maintenance
   * (EventStream.annStoreMaintainStream): add / delete / re-embed events
-  * folded into the bid log over a pinned-layout base store. Three things
-  * the registered queries' oracles cannot cover are proven here:
+  * committed to the bid log of a pinned-layout store, whose build is the
+  * log's fold bid −1. Three things the registered queries' oracles
+  * cannot cover are proven here:
   *
   *  - exact parity: after two micro-batches of mixed ops, the stream
   *    view equals a FROM-SCRATCH coding of the net final vector set at
@@ -112,28 +113,29 @@ class AnnStoreStreamSpec extends SparkSpec {
     val delIds = vmap.keys.filter(i => i % 100 == 7 && i % 10 < 8).toSeq.sorted
     val upsIds = vmap.keys.filter(_ % 100 == 11).toSeq.sorted
     val resId = delIds.min
-    // b0 adds %10==8; b1 dels+ups; b2 adds %10==9 (the 3rd live delta → FOLD);
-    // b3 re-adds resId verbatim (resurrection THROUGH the fold)
-    val b0 = vmap.keys.filter(_ % 10 == 8).toSeq.sorted
+    // the build is live fold bid −1, so the 3rd live bid is bid 1:
+    // b0 adds %10==8 and %10==9 (a delta); b1 dels+ups (the 3rd live bid
+    // → FOLD); b2 re-adds resId verbatim (resurrection THROUGH the fold)
+    val b0 = vmap.keys.filter(_ % 10 >= 8).toSeq.sorted
       .map(i => ev("add", i, vmap(i)))
     val b1 = delIds.map(i => ev("del", i, vmap(i))) ++
       upsIds.map(i => ev("ups", i, vmap(i).reverse, vmap(i)))
-    val b2 = vmap.keys.filter(_ % 10 == 9).toSeq.sorted
-      .map(i => ev("add", i, vmap(i)))
-    val b3 = Seq(ev("add", resId, vmap(resId)))
+    val b2 = Seq(ev("add", resId, vmap(resId)))
 
     def fold3(b: Seq[AnnEv], id: Long) =
       ops.Extended.annStoreApply(b.toDF(), dir, id, foldEvery = 3)
-    fold3(b0, 0L); fold3(b1, 1L); fold3(b2, 2L)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/log/bid=2/_folded")),
-      "3rd live delta did not fold")
+    fold3(b0, 0L)
+    assert(!core.BidLog.isFold(spark, s"$dir/log", 0L), "2nd live bid folded")
+    fold3(b1, 1L)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/log/bid=1/_folded")),
+      "3rd live bid did not fold")
 
     val layout = spark.read.parquet(s"$dir/layout")
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select(col("band").cast("int").as("band"),
         col("code").cast("long").as("code"), col("vec_id"))
       .orderBy(col("band"), col("code"), col("vec_id")).collect().toSeq
-    // net set: corpus + b0/b2 adds = ALL fixture ids, minus
+    // net set: corpus + b0's adds = ALL fixture ids, minus
     // unresurrected deletes, with the upserts' reversal applied
     def netAt(withRes: Boolean) = canon(ops.Extended.embBandCodesPinned(
       all.filter(!(col("vec_id") % 100 === 7 && col("vec_id") % 10 < 8) ||
@@ -144,15 +146,16 @@ class AnnStoreStreamSpec extends SparkSpec {
     assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(false),
       "folded view != net rebuild")
     // replay the FOLD batch itself (crash-before-commit at the fold)
-    fold3(b2, 2L)
+    fold3(b1, 1L)
     assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(false),
       "replaying the fold changed the view")
-    // pre-fold deltas and base survive until a LATER batch commits (the
-    // fold's replay still needs them), then b3's GC drops them
+    // the pre-fold delta and the build's fold survive until a LATER batch
+    // commits (the fold's replay still needs them), then b2's GC drops them
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/log/bid=0")))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/base")))
-    fold3(b3, 3L)
-    Seq("log/bid=0", "log/bid=1", "base").foreach { old =>
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/log/bid=-1")))
+    fold3(b2, 2L)
+    assert(!core.BidLog.isFold(spark, s"$dir/log", 2L), "the post-fold batch folded")
+    Seq("log/bid=-1", "log/bid=0").foreach { old =>
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$old")),
         s"$old not GC'd after the post-fold batch")
     }
@@ -161,21 +164,21 @@ class AnnStoreStreamSpec extends SparkSpec {
     assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(true),
       "post-fold view != net rebuild with resurrection")
     // replay the post-fold batch: GC no-ops, view bit-identical
-    fold3(b3, 3L)
+    fold3(b2, 2L)
     assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(true),
       "replaying the post-fold batch changed the view")
-    // crash mid-commit of the next batch, b4 = delete resId again (the
-    // 3rd live delta, so a FOLD): its fold data and marker sit staged but
+    // crash mid-commit of the next batch, b3 = delete resId again (the
+    // 3rd live bid, so a FOLD): its fold data and marker sit staged but
     // uncommitted — the view must not see them, and the replay commits
-    val b4 = Seq(ev("del", resId, vmap(resId)))
+    val b3 = Seq(ev("del", resId, vmap(resId)))
     core.BidLog.stage(ops.Extended.annStoreView(spark, dir)
       .filter(col("vec_id") =!= resId)
       .select(col("vec_id"), col("code"), col("band"), lit(false).as("dead")),
-      s"$dir/log", 4L, fold = true)
+      s"$dir/log", 3L, fold = true, partitionBy = Seq("band"))
     assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(true),
       "uncommitted fold data changed the view")
-    fold3(b4, 4L)
-    assert(core.BidLog.isFold(spark, s"$dir/log", 4L),
+    fold3(b3, 3L)
+    assert(core.BidLog.isFold(spark, s"$dir/log", 3L),
       "replaying the crashed batch did not commit its fold")
     assert(canon(ops.Extended.annStoreView(spark, dir)) === netAt(false),
       "replaying the crashed batch diverged from the net rebuild")
@@ -204,5 +207,42 @@ class AnnStoreStreamSpec extends SparkSpec {
     assert(!delta.exists(_.getAs[Long]("vec_id") == v.getLong(0)),
       "the batch's tombstone did not kill its own add")
     assert(viewAfter("fold", 1) === delta, "fold and non-fold views differ")
+  }
+
+  test("a build that crashed before its commit is refused by every step; a rebuild serves the full view") {
+    // The build writes `layout`, then commits the coded corpus as fold
+    // bid −1 with one rename. Plant a crash between the staging and the
+    // rename: `layout` is there, bid −1 is not. Reading that store would
+    // serve an empty index, and committing onto it would bury the
+    // missing build under bid 0, so every step must refuse it.
+    val dir = new java.io.File("target/ann_stream_crashed_build").getAbsolutePath
+    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+    val all = ops.Extended.vecs(spark, sfDir)
+    val corpus = all.filter(col("vec_id") % 10 < 8)
+    val layout = ops.Extended.embLayoutCollect(spark, corpus)
+    def coded = ops.Extended.embBandCodesPinned(corpus, layout)
+      .select(col("vec_id"), col("code").cast("long").as("code"), col("band"))
+    layout.write.parquet(s"$dir/layout")
+    core.BidLog.stage(coded.withColumn("dead", lit(false)), s"$dir/log", -1L,
+      fold = true, partitionBy = Seq("band"))
+
+    def refused(step: String)(run: => Any): Unit = {
+      val e = intercept[IllegalStateException](run)
+      assert(e.getMessage.contains(dir), s"$step: the error does not name the store: $e")
+    }
+    refused("view")(ops.Extended.annStoreView(spark, dir))
+    refused("apply")(ops.Extended.annStoreApply(ops.Extended.annEvents(
+      all.filter(col("vec_id") % 10 === 8), "add"), dir, 0L))
+    refused("gc")(ops.Extended.annStoreGc(spark, dir))
+    refused("search")(ops.Extended.annStoreSearchDir(spark, all, dir))
+    assert(core.BidLog.ids(spark, s"$dir/log") === Nil,
+      "a step committed a bid onto the crashed build")
+
+    ops.Extended.annBandStoreBuild(corpus, layout, dir)
+    def canon(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("band").cast("int").as("band"), col("code"), col("vec_id"))
+      .orderBy(col("band"), col("code"), col("vec_id")).collect().toSeq
+    assert(canon(ops.Extended.annStoreView(spark, dir)) === canon(coded),
+      "the rebuilt store's view is not the coded corpus")
   }
 }

@@ -178,12 +178,10 @@ class EventStreamSpec extends SparkSpec {
       s"replayed batch duplicated rows: ${out.collect().toSeq}")
   }
 
-  /** Read the newest state snapshot the maintenance stream produced. */
-  private def latestAggSnapshot(stateDir: String) = {
-    val id = graft.core.BidLog.latest(spark, stateDir, Long.MaxValue)
+  /** The state the maintenance stream produced: the store's view. */
+  private def latestAggSnapshot(stateDir: String) =
+    EventStream.incrementalAggView(spark, stateDir)
       .getOrElse(fail(s"no snapshot in $stateDir"))
-    spark.read.parquet(s"$stateDir/bid=$id")
-  }
 
   private def awaitStreamRelease(): Unit = {
     val deadline = System.nanoTime() + 30e9.toLong
@@ -259,6 +257,51 @@ class EventStreamSpec extends SparkSpec {
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
         s"$sf: streamed state != batch recompute")
     }
+  }
+
+  test("incremental agg store: the 3rd live bid folds; the fold keeps the view; its replay is exact") {
+    // Each batch commits its per-user partial as a delta bid; at
+    // foldEvery = 3 the 3rd live bid folds the live range plus its own
+    // partial into one bid, and the next commit drops the bids below it.
+    import graft.core.BidLog
+    import spark.implicits._
+    val stateDir = java.nio.file.Files.createTempDirectory("graft_mv_fold").toString
+    val batches = (0 until 4).map { b =>
+      (0 until 20).map(i => (((i * 7 + b) % 9).toLong, ts(b * 100L + i),
+        (b * 20 + i) * 0.25 + 0.10)).toDF("user_id", "ts", "value")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("user_id", "n_events", "cents", "last_ts")
+      .orderBy("user_id").collect().toSeq
+    def view = rows(latestAggSnapshot(stateDir))
+    def rebuild(n: Int) =
+      rows(graft.ops.Aggregates.userAggPartial(batches.take(n).reduce(_ unionByName _)))
+    def merge(b: Int) =
+      EventStream.mergeAggSnapshot(batches(b), stateDir, b.toLong, foldEvery = 3)
+    merge(0); merge(1)
+    assert(!BidLog.isFold(spark, stateDir, 0L) && !BidLog.isFold(spark, stateDir, 1L),
+      "a bid before the 3rd live one folded")
+    assert(view === rebuild(2), "the delta view != batch recompute")
+    // the state the fold must carry: the pre-fold view plus batch 2
+    val want = rows(graft.ops.Aggregates.userAggMerge(latestAggSnapshot(stateDir)
+      .unionByName(graft.ops.Aggregates.userAggPartial(batches(2)))))
+    merge(2)
+    assert(BidLog.isFold(spark, stateDir, 2L), "the 3rd live bid did not fold")
+    val fold = rows(BidLog.at(spark, stateDir, 2L))
+    assert(fold === want, "the fold bid is not the pre-fold view plus its batch")
+    assert(view === want && want === rebuild(3), "the fold changed the view")
+    // replay the fold batch (crash before the stream's commit)
+    merge(2)
+    assert(rows(BidLog.at(spark, stateDir, 2L)) === fold, "replaying the fold changed it")
+    assert(view === want, "replaying the fold changed the view")
+    // the pre-fold bids stay for the fold's replay, then the next commit
+    // drops them
+    assert(BidLog.ids(spark, stateDir) === Seq(0L, 1L, 2L))
+    merge(3)
+    assert(!BidLog.isFold(spark, stateDir, 3L), "the post-fold batch folded")
+    assert(BidLog.ids(spark, stateDir) === Seq(2L, 3L),
+      s"pre-fold bids not dropped after the next commit: ${BidLog.ids(spark, stateDir)}")
+    assert(view === rebuild(4), "the post-fold view != batch recompute")
   }
 
   test("foreachBatch incremental MV merge: running store equals full recompute") {

@@ -595,11 +595,12 @@ class ScaleSpec extends SparkSpec {
     // core.BidLog; a store that spells a bid path or a fold marker
     // itself has its own copy of the protocol, outside its one commit.
     // The ANN store's retired sidecar paths (a tombstone file, per-band
-    // stats, a compaction staging dir, an underscore layout) and the
-    // cross-modal store's four subdirs (now parts of one log bid) were
-    // such copies and must not come back.
+    // stats, a compaction staging dir, an underscore layout, the pre-log
+    // build `base`, now the log's fold bid −1) and the cross-modal
+    // store's four subdirs (now parts of one log bid) were such copies
+    // and must not come back.
     val names = Seq("bid=", "_folded",
-      "/_tombstones", "/_stats", "/_staging", "/_layout",
+      "/_tombstones", "/_stats", "/_staging", "/_layout", "/base\"",
       "/members\"", "/buckets\"", "/verdicts\"", "/remap\"")
     val log = java.nio.file.Paths.get("src/main/scala/graft/core/BidLog.scala")
     val offenders = Files.walk(java.nio.file.Paths.get("src/main/scala"))
@@ -707,12 +708,13 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("a search over a GC-folded ANN store pushes the probe list onto its code-sorted fold") {
-    // After a GC fold the store's rows live in one bid-log fold, not in
-    // the band dirs. The fold keeps the search layout — each file sorted
-    // by (band, code), files holding disjoint key ranges — and the probe
-    // list reaches its scan as pushed filters, so a probe of a folded
-    // store still skips the row groups outside it. The store is built
-    // unsorted (annBandStoreBuild) and takes an add bid, so the view the
+    // After a GC fold the store's rows live in one bid-log fold, laid
+    // out like the build's: band-partitioned dirs, each file in a band
+    // dir sorted by code, the files of a dir holding disjoint code
+    // ranges. The probe's band list prunes to its band dirs and its code
+    // list reaches the scan as a pushed filter, so a probe of a folded
+    // store still skips the dirs and row groups outside it. The store
+    // takes an add bid and a delete bid before the fold, so the view the
     // fold resolves is in no (band, code) order of its own.
     val all = ops.Extended.vecs(spark, sfDir)
     val corpus = all.filter(col("vec_id") % 10 < 8)
@@ -727,20 +729,32 @@ class ScaleSpec extends SparkSpec {
     val log = s"$dir/log"
     assert(core.BidLog.isFold(spark, log, 2L), "the 10% delete did not fold")
     // a small file is one read split, so its rows come back in file order
-    val ranges = core.BidLog.at(spark, log, 2L).inputFiles.toSeq.flatMap { f =>
-      val keys = spark.read.parquet(f).select(col("band"), col("code"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      assert(keys == keys.sorted, s"fold file not sorted by (band, code): $f")
-      keys.headOption.map(_ -> keys.last)
-    }.sorted
-    assert(ranges.nonEmpty, "the fold holds no rows")
-    ranges.sliding(2).filter(_.size == 2).foreach { case Seq((_, hi), (lo, _)) =>
-      assert(Ordering[(Int, Long)].lt(hi, lo), s"fold files overlap: $ranges")
+    val byBand = core.BidLog.at(spark, log, 2L).inputFiles.toSeq.groupBy { f =>
+      val band = """/band=(\d+)/""".r.findFirstMatchIn(f)
+      assert(band.isDefined, s"fold file outside a band dir: $f")
+      band.get.group(1).toInt
+    }
+    assert(byBand.size > 1, s"the fold holds fewer than two bands: ${byBand.keys}")
+    byBand.foreach { case (band, files) =>
+      val ranges = files.flatMap { f =>
+        val codes = spark.read.parquet(f).select(col("code"))
+          .collect().map(_.getLong(0)).toSeq
+        assert(codes == codes.sorted, s"fold file not sorted by code: $f")
+        codes.headOption.map(_ -> codes.last)
+      }.sorted
+      assert(ranges.nonEmpty, s"band $band of the fold holds no rows")
+      ranges.sliding(2).filter(_.size == 2).foreach { case Seq((_, hi), (lo, _)) =>
+        assert(hi < lo, s"band $band's fold files overlap: $ranges")
+      }
     }
     val plan = planOf(ops.Extended.annStoreSearchDir(spark, all, dir))
-    assert(plan.linesIterator.exists(l => l.contains("bid=2") &&
-        l.contains("In(band") && l.contains("In(code")),
-      s"probe list not pushed to the fold's scan:\n$plan")
+    val scan = plan.linesIterator.find(l => l.contains("bid=2") && l.contains("PartitionFilters"))
+    assert(scan.isDefined, s"no partitioned scan of the fold:\n$plan")
+    assert("""PartitionFilters: \[[^\]]*band[^\]]* IN""".r
+      .findFirstIn(scan.get).isDefined,
+      s"band probe set is not a partition filter on the fold: ${scan.get}")
+    assert(scan.get.contains("In(code"),
+      s"code probe list not pushed to the fold's scan: ${scan.get}")
   }
 
   test("AQE splits a skewed join partition at runtime (skew=true)") {
